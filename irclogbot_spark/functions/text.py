@@ -26,6 +26,20 @@ LANG_STOPWORDS = {
 }
 
 
+def bm25_term_score(tf, dfreq, n, avgdl, dl, k1: float, b: float) -> Column:
+    """The repo-wide BM25 per-term expression (rational idf — see
+    bm25_rank's determinism note). A term the doc does not contain
+    scores +0.0 without evaluating the length norm: at b=1.0 or k1=0
+    an empty field makes the denominator ``tf + k1 * norm`` zero,
+    which the engine's pinned ANSI mode raises on. For any other
+    parameters the formula itself gives +0.0 at tf=0, so the guard
+    changes no score."""
+    denom_norm = F.lit(1.0) - F.lit(b) + F.lit(b) * dl / avgdl
+    idf = (n - dfreq + F.lit(0.5)) / (dfreq + F.lit(0.5))
+    tfc = (tf * (F.lit(k1) + F.lit(1.0))) / (tf + F.lit(k1) * denom_norm)
+    return F.when(tf > 0, idf * tfc).otherwise(F.lit(0.0))
+
+
 def token_count(text: Column | str, pattern: str = WORD_RE) -> Column:
     c = F.col(text) if isinstance(text, str) else text
     return F.size(F.regexp_extract_all(c, F.lit(pattern), F.lit(0)))
@@ -139,13 +153,12 @@ def bm25_rank(
         ],
     )
     joined = base.join(F.broadcast(stats))
-    denom_norm = F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("dl") / F.col("avgdl")
     score = None
     for i in range(len(terms)):
-        tf, dfc = F.col(f"tf{i}"), F.col(f"df{i}")
-        idf = (F.col("n") - dfc + F.lit(0.5)) / (dfc + F.lit(0.5))
-        tfc = (tf * (F.lit(k1) + F.lit(1.0))) / (tf + F.lit(k1) * denom_norm)
-        term_score = idf * tfc
+        term_score = bm25_term_score(
+            F.col(f"tf{i}"), F.col(f"df{i}"), F.col("n"), F.col("avgdl"),
+            F.col("dl"), k1, b,
+        )
         score = term_score if score is None else score + term_score
     return (
         joined.select(F.col(id_col), score.alias("score"))
@@ -253,14 +266,10 @@ def bm25_scores_indexed(
         .join(doclens, id_col)
         .join(F.broadcast(stats))
     )
-    denom_norm = F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("dl") / F.col("avgdl")
-    idf = (F.col("n") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    tfc = (F.col("tf") * (F.lit(k1) + F.lit(1.0))) / (
-        F.col("tf") + F.lit(k1) * denom_norm
+    term_score = bm25_term_score(
+        F.col("tf"), F.col("df"), F.col("n"), F.col("avgdl"), F.col("dl"), k1, b
     )
-    per_term = hits.select(
-        F.col(id_col), F.col("term"), (idf * tfc).alias("_s")
-    )
+    per_term = hits.select(F.col(id_col), F.col("term"), term_score.alias("_s"))
     # re-add the per-term scores in the scan form's term order: one
     # conditional max per term (a doc matches a term at most once),
     # then the same fixed-order addition chain

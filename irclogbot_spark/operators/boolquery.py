@@ -64,14 +64,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _per_term_score(tf, dfreq, n, avgdl, dl, k1: float, b: float):
-    """The repo-wide BM25 per-term expression (rational idf — see
-    bm25_rank's determinism note)."""
-    denom_norm = F.lit(1.0) - F.lit(b) + F.lit(b) * dl / avgdl
-    idf = (n - dfreq + F.lit(0.5)) / (dfreq + F.lit(0.5))
-    tfc = (tf * (F.lit(k1) + F.lit(1.0))) / (tf + F.lit(k1) * denom_norm)
-    return idf * tfc
+from irclogbot_spark.functions.text import bm25_term_score
 
 
 def parse_minimum_should_match(spec, n_should: int) -> int | None:
@@ -256,7 +249,7 @@ def _bool_project(
     n_ref = n_scoring + len(must_not)
     score = None
     for i in range(n_scoring):
-        s = _per_term_score(
+        s = bm25_term_score(
             F.col(f"tf{i}"), F.col(f"df{i}"), F.col("n"), F.col("avgdl"),
             F.col("dl"), k1, b,
         )
@@ -357,7 +350,7 @@ def _dis_max_project(
     b: float,
 ) -> DataFrame:
     scores: list[Column] = [
-        _per_term_score(
+        bm25_term_score(
             F.col(f"tf{i}"), F.col(f"df{i}"), F.col("n"), F.col("avgdl"),
             F.col("dl"), k1, b,
         )
@@ -437,7 +430,7 @@ def _boosting_project(
     n_pos = len(positive)
     score = None
     for i in range(n_pos):
-        s = _per_term_score(
+        s = bm25_term_score(
             F.col(f"tf{i}"), F.col(f"df{i}"), F.col("n"), F.col("avgdl"),
             F.col("dl"), k1, b,
         )
@@ -609,7 +602,7 @@ def _terms_set_project(
     score = None
     n_matched = None
     for i in range(len(terms)):
-        s = _per_term_score(
+        s = bm25_term_score(
             F.col(f"tf{i}"), F.col(f"df{i}"), F.col("n"), F.col("avgdl"),
             F.col("dl"), k1, b,
         )
@@ -774,7 +767,7 @@ def _function_score_project(
         raise ValueError(f"unknown boost_mode {boost_mode!r}")
     qscore = None
     for i in range(len(terms)):
-        s = _per_term_score(
+        s = bm25_term_score(
             F.col(f"tf{i}"), F.col(f"df{i}"), F.col("n"), F.col("avgdl"),
             F.col("dl"), k1, b,
         )

@@ -110,13 +110,16 @@ def pagerank(
     # iteration, leaving each round's aggregation exchange-free.
     ew = e.localCheckpoint(eager=True)
     try:
-        # defaultParallelism raises under Spark Connect (no
-        # sparkContext); the keyed repartition without an explicit
-        # count still pins the per-round partitioning there.
         n_part = ew.sparkSession.sparkContext.defaultParallelism
-        ew = ew.repartition(n_part, F.col(part_col))
-    except Exception:
+    except AttributeError:
+        # a Spark Connect session has no sparkContext; the keyed
+        # repartition without an explicit count still pins the
+        # per-round partitioning there.
+        n_part = None
+    if n_part is None:
         ew = ew.repartition(F.col(part_col))
+    else:
+        ew = ew.repartition(n_part, F.col(part_col))
     if n_iter == 0:
         # zero rounds: every endpoint keeps the initial rank R0 (the
         # pre-round-13 contract; the contribution loop below would

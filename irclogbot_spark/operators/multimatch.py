@@ -89,11 +89,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from irclogbot_spark.functions.text import WORD_RE
-from irclogbot_spark.operators.boolquery import (
-    _check_no_duplicate_terms,
-    _per_term_score,
-)
+from irclogbot_spark.functions.text import WORD_RE, bm25_term_score
+from irclogbot_spark.operators.boolquery import _check_no_duplicate_terms
 
 
 def _norm_fields(fields) -> list[tuple[str, float]]:
@@ -122,7 +119,7 @@ def _field_score(
     one per field as ``n_<field>``; the scan form one shared ``n``)."""
     s = None
     for i in range(n_terms):
-        t = _per_term_score(
+        t = bm25_term_score(
             F.col(f"tf_{fname}_{i}"),
             F.col(f"df_{fname}_{i}"),
             F.col(n_col),
@@ -159,7 +156,7 @@ def _cross_fields_score(
         df_blend = F.greatest(*dfs) if len(dfs) > 1 else dfs[0]
         per_field = [
             F.lit(boost)
-            * _per_term_score(
+            * bm25_term_score(
                 F.col(f"tf_{fname}_{i}"),
                 df_blend,
                 F.col("n"),

@@ -73,11 +73,14 @@ def streaming_irclog(
     return log
 
 
-#: id-hash bucket count for the keyed parquet table. At 100 TB this
-#: is the merge granularity: a micro-batch rewrites only the buckets
-#: its ids hash into, never the whole table — the per-key PUT cost
-#: model of the reference's ES sink (irclogbot.py:50-51), not
-#: O(table) per batch. Size so one bucket ~= a few GB at target SF.
+#: id-hash bucket count for the keyed parquet table: the merge
+#: granularity. A micro-batch rewrites only the buckets its ids hash
+#: into, so a batch with few distinct ids costs O(touched buckets),
+#: the per-key PUT cost model of the reference's ES sink
+#: (irclogbot.py:50-51). A batch with many more distinct ids than
+#: buckets touches every bucket and rewrites the whole table: its
+#: cost is O(table), and only a larger bucket count bounds it. Size
+#: so one bucket ~= a few GB at target SF.
 N_ID_BUCKETS = 16
 
 
@@ -149,31 +152,46 @@ def keyed_upsert_batch(
     """H3 stand-in for the ES keyed index: MERGE-by-content-id into an
     id-bucket-partitioned parquet table. Duplicate re-deliveries
     across restarts resolve here, exactly like ES PUT by _id
-    (irclogbot.py:50-51). Dedup prefers the earliest posted
-    (deterministic winner).
+    (irclogbot.py:50-51). Per id the earliest ``posted`` row wins
+    (deterministic winner), within the batch and against the table.
 
     Merge shape (the Delta-MERGE pattern on plain parquet):
     * incoming rows get ``id_bucket = pmod(xxhash64(id), n_buckets)``;
-    * only the touched buckets of the existing table are read back —
-      a broadcast left-semi join on the partition column, which
-      dynamic partition pruning turns into a partition-pruned scan
-      (no driver-side collect of data);
-    * the write uses dynamic partitionOverwriteMode: Spark stages new
-      files and commits them per partition, replacing ONLY partitions
-      present in the output — untouched buckets' files are never
-      rewritten (asserted byte-for-byte in tests/test_streaming.py).
+      on an existing table they are materialized once
+      (``localCheckpoint``), so the micro-batch's source, parse and
+      stateful dedup run once per call, not once per consumer;
+    * only the touched buckets of the existing table are read back:
+      the touched bucket ids (at most ``n_buckets`` ints, collected
+      from the materialized rows) become a literal partition filter,
+      so only those directories are listed and scanned. A broadcast
+      semi-join would not prune here — dynamic partition pruning
+      needs a selective filter on the build side, and a checkpoint
+      has none;
+    * the merge is hash-clustered by bucket: a bucket's rows meet in
+      one task, which keeps the earliest row per id and writes the
+      bucket as ONE file (the window's (id_bucket, id) partitioning
+      is satisfied by that exchange, so it adds none);
+    * the write uses dynamic partition overwrite (a per-write option,
+      not a session conf): Spark stages new files and commits them
+      per partition, replacing ONLY partitions present in the output
+      — untouched buckets' files are never rewritten (asserted
+      byte-for-byte in tests/test_streaming.py). Old files are
+      removed only at job commit, after every task has read them, so
+      the merge reads the buckets it replaces in the same job.
 
-    Crash-safety: files stage under _temporary until commit, so an
-    interrupted batch leaves previous bucket generations in place
-    except at most a bucket mid-promotion; checkpoint replay re-runs
-    the batch and the merge is idempotent (same ids, same winners).
-    Production targets Delta MERGE or the es-spark connector with
-    es.mapping.id=id; this sink keeps the same contract offline.
+    Cost: O(rows in touched buckets). A batch with many more
+    distinct ids than ``n_buckets`` touches every bucket, so it
+    rewrites the whole table — see N_ID_BUCKETS.
+
+    Crash-safety: files stage under the table's staging directory
+    until commit, so an interrupted batch leaves previous bucket
+    generations in place except at most a bucket mid-promotion;
+    checkpoint replay re-runs the batch and the merge is idempotent
+    (same ids, same winners). Production targets Delta MERGE or the
+    es-spark connector with es.mapping.id=id; this sink keeps the
+    same contract offline.
     """
     spark = batch.sparkSession
-    incoming = batch.dropDuplicates(["id"]).withColumn(
-        "id_bucket", F.pmod(F.xxhash64("id"), F.lit(n_buckets)).cast("int")
-    )
     layout = table_layout(spark, target_dir)
     if layout in ("flat", "mixed"):
         # a legacy flat table (or a half-migrated one): merging would
@@ -184,33 +202,31 @@ def keyed_upsert_batch(
             f"keyed_upsert_batch: target {target_dir} has a '{layout}' layout; "
             "run migrate_flat_to_bucketed(spark, target_dir) first"
         )
+    rows = batch.withColumn(
+        "id_bucket", F.pmod(F.xxhash64("id"), F.lit(n_buckets)).cast("int")
+    )
     if layout == "bucketed":
-        touched = incoming.select("id_bucket").distinct()
-        existing = spark.read.parquet(target_dir).join(
-            F.broadcast(touched), "id_bucket", "left_semi"
+        rows = rows.localCheckpoint(eager=True)
+        touched = [r[0] for r in rows.select("id_bucket").distinct().collect()]
+        if not touched:
+            return
+        existing = spark.read.parquet(target_dir).filter(
+            F.col("id_bucket").isin(touched)
         )
-        merged = (
-            existing.unionByName(incoming)
-            .withColumn(
-                "_rn", F.row_number().over(Window.partitionBy("id").orderBy("posted"))
-            )
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        # materialize the merged buckets BEFORE the overwrite: severs
-        # the lineage to the very files the write replaces (Spark
-        # refuses a self-overwriting scan) and bounds the staging to
-        # the touched buckets only
-        merged = merged.localCheckpoint(eager=True)
-    else:
-        merged = incoming
-    conf = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(conf, "static")
-    spark.conf.set(conf, "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("id_bucket").parquet(target_dir)
-    finally:
-        spark.conf.set(conf, prev)
+        rows = existing.unionByName(rows)
+    first = Window.partitionBy("id_bucket", "id").orderBy("posted")
+    merged = (
+        rows.repartition("id_bucket")
+        .withColumn("_rn", F.row_number().over(first))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("id_bucket")
+        .parquet(target_dir)
+    )
 
 
 def start_irclog_stream(

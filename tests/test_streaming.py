@@ -146,17 +146,63 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
             F.pmod(F.xxhash64("id"), F.lit(16)).cast("int").alias("b")
         ).collect()
     }
-    keyed_upsert_batch(log2, 1, target)
+    # every row the merge reads from the batch passes this counter
+    reads = spark.sparkContext.accumulator(0)
+
+    def count_read(_):
+        reads.add(1)
+        return True
+
+    counted = log2.filter(F.udf(count_read, "boolean")(F.col("id")))
+    keyed_upsert_batch(counted, 1, target)
+    assert reads.value == 2, f"the batch was evaluated {reads.value / 2:g} times"
 
     after = {d.name: bucket_state(d) for d in Path(target).glob("id_bucket=*")}
     untouched = [n for n in before if int(n.split("=")[1]) not in touched]
     assert untouched, "batch 2 touched every bucket — widen the id space"
     for name in untouched:
         assert after[name] == before[name], f"untouched bucket {name} was rewritten"
+    for b in touched:
+        files = list((Path(target) / f"id_bucket={b}").glob("*.parquet"))
+        assert len(files) == 1, f"touched bucket {b} holds {len(files)} files"
     # and the merge itself upserted: one new row, no duplicate ids
     out = spark.read.parquet(target)
     assert out.count() == 201
     assert out.count() == out.select("id").distinct().count()
+
+
+def test_upsert_keeps_earliest_posted_per_id(spark, tmp_path):
+    """Per id the keyed sink keeps the earliest posted row, also when
+    the same line arrives twice within one batch, latest first — on
+    both the first write (no table yet) and a merge into a table."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from irclogbot_spark.ingest import parse_pipeline
+    from irclogbot_spark.streaming.pipeline import keyed_upsert_batch
+
+    line = ":alice!al@h2 PRIVMSG #zuul :ship it"
+    day1, day2 = dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 2)
+
+    def batch(rows):
+        raw = spark.createDataFrame(rows, "value string, ts timestamp").coalesce(1)
+        return parse_pipeline(raw, ts_col="ts")
+
+    def stored(target):
+        rows = spark.read.parquet(target).filter(F.col("remark") == "ship it").collect()
+        assert len(rows) == 1
+        return rows[0].posted
+
+    absent = str(tmp_path / "absent")
+    keyed_upsert_batch(batch([(line, day2), (line, day1)]), 0, absent)
+    assert stored(absent) == day1
+
+    bucketed = str(tmp_path / "bucketed")
+    keyed_upsert_batch(batch([(":bob!~b@h PRIVMSG #nova :hi", day2)]), 0, bucketed)
+    keyed_upsert_batch(batch([(line, day2), (line, day1)]), 1, bucketed)
+    assert stored(bucketed) == day1
+    assert spark.read.parquet(bucketed).count() == 2
 
 
 def test_table_layout_probe_is_hadoop_fs_not_os_path(spark, tmp_path):

@@ -81,6 +81,35 @@ def test_bm25_ranks_term_density_over_length(spark):
     assert scores[1] > scores[4]                 # length normalization bites
 
 
+@pytest.mark.parametrize("k1,b", [(1.2, 1.0), (0.0, 0.75)])
+def test_bm25_empty_doc_scores_zero_at_degenerate_params(spark, k1, b):
+    """At b=1.0 (or k1=0) an empty doc's BM25 denominator
+    tf + k1 * (1 - b + b * dl / avgdl) is 0 at tf=0; under the
+    engine's pinned ANSI mode that division raised DIVIDE_BY_ZERO and
+    failed the query. A missing term scores 0.0 instead, in the scan
+    and the indexed form alike; so does a doc with NULL text."""
+    from irclogbot_spark.functions.text import (
+        bm25_rank,
+        bm25_rank_indexed,
+        build_text_index,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "data data systems"), (2, ""), (3, "systems only"), (4, "data"), (5, None)],
+        "doc_id long, text string",
+    )
+    scan = [(r.doc_id, r.score) for r in bm25_rank(docs, ["data"], k=5, k1=k1, b=b).collect()]
+    scores = dict(scan)
+    assert scores[2] == 0.0 and scores[3] == 0.0 and scores[5] == 0.0
+    assert scores[1] > 0.0 and scores[4] > 0.0
+    postings, doclens = build_text_index(docs)
+    indexed = [
+        (r.doc_id, r.score)
+        for r in bm25_rank_indexed(postings, doclens, ["data"], k=5, k1=k1, b=b).collect()
+    ]
+    assert indexed == [row for row in scan if row[1] > 0.0]
+
+
 def test_tfidf_topk_ranks_rare_terms_over_common(spark):
     """A term appearing in every doc (idf = N/N = 1) must rank below
     an equally-frequent term unique to one doc (idf = N); ranks are
@@ -1539,6 +1568,50 @@ def test_multi_match_null_field_scores_zero_both_forms(spark, tmp_path):
         ).collect()
     ]
     assert got_at == want and len(got_at) == 4
+
+
+@pytest.mark.parametrize("k1,b", [(1.2, 1.0), (0.0, 0.75)])
+def test_multi_match_absent_field_at_degenerate_params(spark, tmp_path, k1, b):
+    """A doc absent from a field has tf=0 and dl=0 there; at b=1.0 or
+    k1=0 the field's BM25 denominator is 0, which raised
+    DIVIDE_BY_ZERO under ANSI mode in both forms. The field scores
+    0.0 instead, and the at-rest form stays bit-identical to the
+    scan."""
+    from irclogbot_spark.operators.multimatch import (
+        multi_match_best_fields,
+        multi_match_best_fields_atrest,
+    )
+    from irclogbot_spark.operators.textindex import write_text_index
+
+    docs = spark.createDataFrame(
+        [
+            (1, "spark merge intro", "body about spark and merge"),
+            (2, None, "merge strategies for spark tables"),
+            (3, "spark only title", None),
+            (4, "plain", "spark appears once"),
+        ],
+        "doc_id long, title string, body string",
+    )
+    terms = ["spark", "merge"]
+    t1, t2 = str(tmp_path / "title"), str(tmp_path / "body")
+    write_text_index(docs.select("doc_id", "title"), t1, text_col="title", n_buckets=8)
+    write_text_index(docs.select("doc_id", "body"), t2, text_col="body", n_buckets=8)
+    want = [
+        tuple(r)
+        for r in multi_match_best_fields(
+            docs, terms, [("title", 2.0), ("body", 1.0)], tie_breaker=0.3, k=10,
+            k1=k1, b=b,
+        ).collect()
+    ]
+    got = [
+        tuple(r)
+        for r in multi_match_best_fields_atrest(
+            spark, [("title", t1), ("body", t2)], terms,
+            {"title": 2.0, "body": 1.0}, tie_breaker=0.3, k=10, k1=k1, b=b,
+        ).collect()
+    ]
+    assert got == want and len(got) == 4
+    assert all(s > 0.0 for _, s in got)
 
 
 def test_match_phrase_prefix_semantics(spark, tmp_path):
