@@ -1,5 +1,6 @@
 """Interleaved fresh-JVM A/B for any registered query (the
-BENCH_AB.md method, generalized from ab_ingest_parse.py).
+BENCH_AB.md method; ``--query ingest_parse`` is the original
+ingest-parse A/B).
 
 Two checkouts — a git worktree pinned at --ref and the current
 HEAD working tree — run ALTERNATELY, one fresh JVM per (code,

@@ -344,10 +344,11 @@ def multi_match_best_fields_atrest(
     ``boosts`` maps field -> boost; ``indexes`` optionally injects
     pre-loaded (pidx, doclens, n_buckets) frames per field (the
     streamed-index form); ``mm_type`` / ``operator`` as in the scan
-    form (operator="and" rides the per-field frames as one boolean
-    column per field — same exchange count; the hit sets the pivots
-    produce are supersets of the AND gate, which filters map-side
-    after the join).
+    form (operator="and" is a map-side filter over the grouped
+    pivot's tf_<field>_<i> columns — a term matches a field where its
+    tf > 0 — applied after the doclens/stats joins: no extra
+    exchange, and the pivot's union hit set is a superset of the
+    docs the gate keeps).
 
     ONE grouped pivot serves every field and every mm_type (round-14
     optimization, VERDICT r13 next #9; guide §2.4): the per-field

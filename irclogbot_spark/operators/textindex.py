@@ -28,13 +28,13 @@ partition dir, generation compaction, replay idempotence).
 
 from __future__ import annotations
 
-import json
 import os
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from irclogbot_spark.artifacts import write_meta
 from irclogbot_spark.functions.text import build_positional_index
 
 META_NAME = "_text_index_meta.json"
@@ -88,8 +88,9 @@ def write_text_index(
         F.count(F.lit(1)).alias("df"),
         F.sum(F.size("positions")).cast("long").alias("freq"),
     ).write.mode("overwrite").parquet(os.path.join(path, "vocab"))
-    with open(os.path.join(path, META_NAME), "w") as f:
-        json.dump({"n_buckets": n_buckets, "id_col": id_col}, f)
+    write_meta(
+        spark, os.path.join(path, META_NAME), {"n_buckets": n_buckets, "id_col": id_col}
+    )
     # a rewrite of this path must not serve stale memoized scans
     from irclogbot_spark.sources.tables import invalidate_scan
 
@@ -102,17 +103,16 @@ def read_text_index(
     """(positional postings, doclens, n_buckets) from an at-rest
     index. Scans are memoized per (application, path) — every
     at-rest probe re-read the artifact's footers/listing on every
-    call (~0.18 s/artifact; round-13 optimization). write_text_index
-    invalidates the memo when it rewrites a path."""
-    from irclogbot_spark.sources.tables import memo_scan
+    call (~0.18 s/artifact; round-13 optimization), and so is the
+    meta sidecar (a Hadoop-FS read costs milliseconds).
+    write_text_index invalidates the memo when it rewrites a path."""
+    from irclogbot_spark.sources.tables import memo_scan, memo_scan_meta
 
-    with open(os.path.join(path, META_NAME)) as f:
-        meta = json.load(f)
-    return (
-        memo_scan(spark, os.path.join(path, "postings")),
-        memo_scan(spark, os.path.join(path, "doclens")),
-        int(meta["n_buckets"]),
+    postings, meta = memo_scan_meta(
+        spark, os.path.join(path, "postings"), os.path.join(path, META_NAME)
     )
+    doclens = memo_scan(spark, os.path.join(path, "doclens"))
+    return postings, doclens, int(meta["n_buckets"])
 
 
 def probe_postings(

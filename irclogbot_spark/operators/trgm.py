@@ -23,13 +23,13 @@ always does.
 
 from __future__ import annotations
 
-import json
 import os
 import zlib
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from irclogbot_spark.artifacts import write_meta
 from irclogbot_spark.plans.partitioning import ensure_parallelism
 
 
@@ -82,8 +82,11 @@ def write_trgm_index(
         "tri_bkt", F.pmod(F.crc32(F.encode(F.col("tri"), "UTF-8")), F.lit(n_buckets))
     )
     idx.write.partitionBy("tri_bkt").mode("overwrite").parquet(path)
-    with open(os.path.join(path, "_trgm_meta.json"), "w") as f:
-        json.dump({"n_buckets": n_buckets, "id_col": id_col}, f)
+    write_meta(
+        df.sparkSession,
+        os.path.join(path, "_trgm_meta.json"),
+        {"n_buckets": n_buckets, "id_col": id_col},
+    )
     # a rewrite of this path must not serve stale memoized scans
     from irclogbot_spark.sources.tables import invalidate_scan
 
@@ -94,12 +97,12 @@ def read_trgm_index(spark: SparkSession, path: str) -> tuple[DataFrame, int]:
     """Load a persisted index; returns (postings, n_buckets). The
     scan is memoized per (application, path) — probes re-resolved
     the artifact on every call (round-13 optimization);
-    write_trgm_index invalidates on rewrite."""
-    from irclogbot_spark.sources.tables import memo_scan
+    write_trgm_index invalidates on rewrite. The meta sidecar is read
+    once per (application, path) too."""
+    from irclogbot_spark.sources.tables import memo_scan_meta
 
-    with open(os.path.join(path, "_trgm_meta.json")) as f:
-        meta = json.load(f)
-    return memo_scan(spark, path), int(meta["n_buckets"])
+    idx, meta = memo_scan_meta(spark, path, os.path.join(path, "_trgm_meta.json"))
+    return idx, int(meta["n_buckets"])
 
 
 def trgm_search(

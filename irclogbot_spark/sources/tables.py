@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from irclogbot_spark.artifacts import read_meta
+
 TABLES = [
     "region",
     "nation",
@@ -107,25 +109,48 @@ def invalidate_table(sf_dir: str, name: str | None = None) -> None:
 #: Analyzed-scan memo for WRITE-ONCE on-disk artifacts (text/trgm
 #: index directories): same ~0.18 s/call relation-resolution cost as
 #: the corpus tables above, paid by every at-rest probe on every
-#: bench pass. Writers MUST call :func:`invalidate_scan` after
-#: rewriting a memoized path — the memo holds a resolved FileIndex,
-#: which would otherwise reference replaced files.
-_SCAN_MEMO: dict[tuple[str, str], DataFrame] = {}
+#: bench pass. It also holds the artifacts' JSON meta sidecars (a
+#: Hadoop-FS read costs ~5 ms). Writers MUST call
+#: :func:`invalidate_scan` after rewriting a memoized path — the memo
+#: holds a resolved FileIndex, which would otherwise reference
+#: replaced files.
+_SCAN_MEMO: dict[tuple[str, str], DataFrame | dict] = {}
+
+
+def _app(spark: SparkSession) -> str | None:
+    try:
+        return spark.sparkContext.applicationId
+    except Exception:  # Spark Connect: no sparkContext — skip the memo
+        return None
+
+
+def _memo(app: str | None, path: str, load):
+    if app is None:
+        return load()
+    v = _SCAN_MEMO.get((app, path))
+    if v is None:
+        v = _SCAN_MEMO[(app, path)] = load()
+    return v
 
 
 def memo_scan(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` memoized per (application, path);
     falls back to a plain read when no sparkContext is reachable
     (Spark Connect)."""
-    try:
-        key = (spark.sparkContext.applicationId, path)
-    except Exception:
-        return spark.read.parquet(path)
-    df = _SCAN_MEMO.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        _SCAN_MEMO[key] = df
-    return df
+    return _memo(_app(spark), path, lambda: spark.read.parquet(path))
+
+
+def memo_scan_meta(
+    spark: SparkSession, path: str, meta_path: str
+) -> tuple[DataFrame, dict]:
+    """:func:`memo_scan` of ``path`` plus the artifact's JSON meta
+    sidecar at ``meta_path``, both memoized under one application
+    lookup."""
+    app = _app(spark)
+    return (
+        _memo(app, path, lambda: spark.read.parquet(path)),
+        _memo(app, meta_path, lambda: read_meta(spark, meta_path)),
+    )
 
 
 def invalidate_scan(path: str) -> None:

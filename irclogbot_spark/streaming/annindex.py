@@ -15,21 +15,23 @@ re-encoded, because the codebooks/centroids are frozen at index
 creation (re-training would re-code the whole corpus; that is a
 rebuild, not maintenance, exactly as in FAISS/Lucene deployments).
 
-Effectively-once at any crash point, by the corpus.py recipe: the
-one write per batch is an OVERWRITE of this batch's own partition
-directory, so a foreachBatch replay rewrites identical rows.
+The index is an artifacts.PostingStore with ``cells/`` generations
+bucketed by ``cell``: the one write per batch OVERWRITES this
+batch's own partition directory, so a foreachBatch replay rewrites
+identical rows, and ``compact``/loading follow the store's commit
+rule (the generation ``gen = upto_batch_id + 1`` is written and
+committed before any source is deleted; a re-run after a crash
+during the deletes only finishes them; the loader serves the max
+committed generation plus the batch dirs with batch_id >= gen).
 
 ``compact`` is the physical half of the IVF story: it folds the
 accumulated per-batch files into ONE generation laid out
-``partitionBy("cell")`` — generation id = upto_batch_id + 1, so the
-loader's rule "read the max generation plus batch dirs with
-batch_id >= gen" is crash-safe by construction (a crash between the
-generation write and the source deletes leaves both on disk, but
-the covered batches are excluded by the rule, and re-running the
-same compact converges). At rest a probe of n_probe cells then
+``partitionBy("cell")``. At rest a probe of n_probe cells then
 touches n_probe/n_cells of the files — parquet PARTITION PRUNING,
 not a full scan with a logical filter (``load_index(cells=...)``
-puts the literal cell filter on the scan; plan-asserted in tests).
+filters the loaded frame on literal cells; Catalyst pushes the
+filter through the union onto the generation scan as
+PartitionFilters — plan-asserted in tests).
 
 Probing: ``probe_cells`` reproduces ivfpq_search's per-query cell
 selection driver-side (same left-to-right IEEE fold, same
@@ -45,10 +47,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from irclogbot_spark.artifacts import PostingStore
 from irclogbot_spark.operators.pq import encode_ivfpq
 
 EMB_SCHEMA = "vec_id long, embedding array<float>"
-_DATA_SCHEMA = "vec_id long, cell int, codes array<int>, embedding array<float>"
+_STORE = PostingStore(
+    "vec_id long, codes array<int>, embedding array<float>, cell int",
+    "cell",
+    gens="cells",
+)
 
 
 def ingest_batch(
@@ -62,8 +69,11 @@ def ingest_batch(
 ) -> None:
     """foreachBatch body: encode the arriving vectors (map-only) and
     overwrite this batch's index partition — idempotent on replay."""
-    enc = encode_ivfpq(batch, centroids, books, id_col=id_col, vec_col=vec_col)
-    enc.write.mode("overwrite").parquet(f"{index_dir}/index/batch_id={batch_id}")
+    _STORE.ingest(
+        encode_ivfpq(batch, centroids, books, id_col=id_col, vec_col=vec_col),
+        batch_id,
+        index_dir,
+    )
 
 
 def continuous_index(
@@ -92,69 +102,10 @@ def continuous_index(
     )
 
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
-def _part_ids(spark: SparkSession, path: str, prefix: str) -> list[int]:
-    p, fs = _fs(spark, path)
-    if not fs.exists(p):
-        return []
-    out = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if name.startswith(prefix + "="):
-            out.append(int(name.split("=", 1)[1]))
-    return sorted(out)
-
-
-def compact(spark: SparkSession, index_dir: str, upto_batch_id: int) -> None:
-    """Fold batch partitions 0..upto_batch_id (plus any previous
-    generation) into generation ``gen = upto_batch_id + 1`` under
-    ``cells/``, laid out ``partitionBy("cell")`` so probes prune
-    partitions at rest. Sources are deleted after the generation
-    lands; the loader's max-gen rule makes the in-between state
-    consistent, and re-running the same compact converges."""
-    gen = upto_batch_id + 1
-    gens = [g for g in _part_ids(spark, f"{index_dir}/cells", "gen") if g != gen]
-    prev = max(gens) if gens else 0
-    all_batches = _part_ids(spark, f"{index_dir}/index", "batch_id")
-    # batches below the previous generation are crash leftovers whose
-    # rows that generation already contains (the loader ignores them
-    # by the same rule) — fold only [prev, upto], delete the rest too
-    stale = [b for b in all_batches if b < prev]
-    batches = [b for b in all_batches if prev <= b <= upto_batch_id]
-    frames = []
-    if gens:
-        frames.append(
-            spark.read.schema(_DATA_SCHEMA)
-            .parquet(f"{index_dir}/cells/gen={prev}")
-            .select("vec_id", "cell", "codes", "embedding")
-        )
-    for b in batches:
-        frames.append(
-            spark.read.schema(_DATA_SCHEMA)
-            .parquet(f"{index_dir}/index/batch_id={b}")
-            .select("vec_id", "cell", "codes", "embedding")
-        )
-    if not frames:
-        return
-    data = frames[0]
-    for f in frames[1:]:
-        data = data.unionByName(f)
-    # sever lineage before overwriting directories being read
-    data = data.localCheckpoint(eager=True)
-    data.write.mode("overwrite").partitionBy("cell").parquet(
-        f"{index_dir}/cells/gen={gen}"
-    )
-    path_cls = spark._jvm.org.apache.hadoop.fs.Path
-    _, fs = _fs(spark, index_dir)
-    for b in batches + stale:
-        fs.delete(path_cls(f"{index_dir}/index/batch_id={b}"), True)
-    for g in gens:
-        fs.delete(path_cls(f"{index_dir}/cells/gen={g}"), True)
+#: fold batch partitions 0..upto_batch_id (plus the previous
+#: generation) into ``cells/gen = upto_batch_id + 1``, laid out
+#: partitionBy("cell") so probes prune partitions at rest
+compact = _STORE.compact
 
 
 def load_index(
@@ -165,47 +116,18 @@ def load_index(
     cells: list[int] | None = None,
 ) -> DataFrame:
     """The accumulated index rows, sans bookkeeping: the newest
-    compacted generation (cell-partitioned — with ``cells`` given,
-    the literal IN filter lands as PartitionFilters on the scan, so
-    only the probed cells' files are read) unioned with the live
-    batch partitions newer than that generation (cell there is a
-    data column; the same filter pushes down as a row-group filter).
-    Missing/empty dirs yield an empty frame (explicit schema — a
-    crash-leftover partition with no committed files must not break
-    inference)."""
-    gens = _part_ids(spark, f"{index_dir}/cells", "gen")
-    gen = max(gens) if gens else 0
-    sel = ["vec_id", "cell", "codes", "embedding"]
-    frames = []
-    if gens:
-        comp = (
-            spark.read.schema(
-                "vec_id long, codes array<int>, embedding array<float>, cell int"
-            )
-            .option("basePath", f"{index_dir}/cells/gen={gen}")
-            .parquet(f"{index_dir}/cells/gen={gen}")
-            .select(sel)
-        )
-        if cells is not None:
-            comp = comp.filter(F.col("cell").isin([int(c) for c in cells]))
-        frames.append(comp)
-    live = [b for b in _part_ids(spark, f"{index_dir}/index", "batch_id") if b >= gen]
-    for b in live:
-        f = (
-            spark.read.schema(_DATA_SCHEMA)
-            .parquet(f"{index_dir}/index/batch_id={b}")
-            .select(sel)
-        )
-        if cells is not None:
-            f = f.filter(F.col("cell").isin([int(c) for c in cells]))
-        frames.append(f)
-    if not frames:
-        empty = spark.createDataFrame([], _DATA_SCHEMA).select(sel)
-        return empty.withColumnsRenamed({"vec_id": id_col, "embedding": vec_col})
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out.withColumnsRenamed({"vec_id": id_col, "embedding": vec_col})
+    committed generation (cell-partitioned) unioned with the live
+    batch partitions it does not cover (cell there is a data
+    column). With ``cells`` given, the literal IN filter pushes
+    through the union: PartitionFilters on the generation scan (only
+    the probed cells' files are read), a row-group filter on the
+    batch scans. Missing/empty dirs yield an empty frame."""
+    out = _STORE.load(spark, index_dir)
+    if cells is not None:
+        out = out.filter(F.col("cell").isin([int(c) for c in cells]))
+    return out.select("vec_id", "cell", "codes", "embedding").withColumnsRenamed(
+        {"vec_id": id_col, "embedding": vec_col}
+    )
 
 
 def probe_cells(

@@ -29,8 +29,8 @@ append could duplicate and even contradict audit rows on replay) —
 the partition-overwrite recipe the irclog keyed-upsert sink
 (streaming/pipeline.py) established.
 
-Existence probes use the Hadoop FS API (pipeline.table_layout's
-rationale: os.path lies on HDFS/S3).
+Listing, writes and compaction go through irclogbot_spark/artifacts.py
+(Hadoop FS API — os.path lies on HDFS/S3).
 """
 
 from __future__ import annotations
@@ -38,6 +38,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from irclogbot_spark.artifacts import fold_batches
+from irclogbot_spark.artifacts import overwrite as _overwrite
+from irclogbot_spark.artifacts import read_parts
 from irclogbot_spark.operators.incremental import (
     band_index,
     dedup_against_index,
@@ -50,30 +53,11 @@ DOC_SCHEMA = "doc_id long, text string"
 TABLES = ("history", "fp_index", "band_index", "audit")
 
 
-def _read_parts(spark: SparkSession, path: str, template: DataFrame) -> DataFrame:
-    """Read a batch_id-partitioned parquet table; a missing/empty dir
-    yields the (empty) template. The schema is supplied explicitly —
-    template columns + the batch_id partition column — so a partial
-    crash-leftover partition with no committed files can't break
-    schema inference."""
-    schema = template.withColumn("batch_id", F.lit(0).cast("long")).schema
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(p) and fs.listStatus(p):
-        return spark.read.schema(schema).parquet(path)
-    return spark.createDataFrame([], schema)
-
-
-def _overwrite(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").parquet(path)
-
-
 def history(spark: SparkSession, corpus_dir: str, schema: str = DOC_SCHEMA) -> DataFrame:
     """The accumulated (exactly-deduplicated) corpus, sans the
     batch_id bookkeeping column."""
     template = spark.createDataFrame([], schema)
-    return _read_parts(spark, f"{corpus_dir}/history", template).drop("batch_id")
+    return read_parts(spark, f"{corpus_dir}/history", template).drop("batch_id")
 
 
 def bootstrap(
@@ -118,13 +102,13 @@ def verdict_frame(
     spark = batch.sparkSession
     empty = batch.limit(0)
     not_self = F.col("batch_id") != F.lit(batch_id)
-    fp = _read_parts(spark, f"{corpus_dir}/fp_index", fingerprint_index(empty))
-    bd = _read_parts(
+    fp = read_parts(spark, f"{corpus_dir}/fp_index", fingerprint_index(empty))
+    bd = read_parts(
         spark,
         f"{corpus_dir}/band_index",
         band_index(empty, num_perm=num_perm, bands=bands, n=n, seed=seed, hash_fn=hash_fn),
     )
-    hist = _read_parts(spark, f"{corpus_dir}/history", empty)
+    hist = read_parts(spark, f"{corpus_dir}/history", empty)
     return dedup_against_index(
         batch,
         fp.filter(not_self).drop("batch_id"),
@@ -182,49 +166,23 @@ def compact(spark: SparkSession, corpus_dir: str, upto_batch_id: int) -> None:
     the offline maintenance a long-running stream needs so the probe
     scan touches a few large parquet files instead of one file set
     per micro-batch. The audit trail keeps its per-batch partitions
-    (it IS the per-batch record).
+    (it IS the per-batch record). url_index exists only for
+    crawl-shaped corpora (round 8) and folds the same way; a missing
+    table is skipped.
 
     Negative generation ids can never collide with stream batch ids,
     so ingest continues against a compacted corpus unchanged.
 
-    Crash-safe by idempotent re-run: the generation is written first
-    (its own partition excluded from the input), the source
-    partitions are deleted after. A crash between the two leaves
-    duplicates that the probes tolerate (the fingerprint probe
-    min-aggregates, the band probe distincts candidates) and that
-    re-running the same compact() converges away."""
-    gen = -(upto_batch_id + 1)
-    jvm = spark._jvm
-    path_cls = jvm.org.apache.hadoop.fs.Path
-    # url_index exists only for crawl-shaped corpora (round 8); the
-    # fs.exists() guard below makes its inclusion a no-op elsewhere.
-    # Its probe min-aggregates per canon_url, so the same
-    # duplicate-tolerant idempotent-rerun argument applies.
+    Crash safety is the artifacts.fold commit rule: each generation
+    is written and committed (``_SUCCESS``) before any of its source
+    partitions is deleted. A crash before the commit leaves the
+    sources intact; a crash during the deletes leaves duplicates
+    that the probes tolerate (the fingerprint and url probes
+    min-aggregate, the band probe distincts candidates). Re-running
+    the same compact() finds the committed generation, skips the
+    write and only finishes the deletes."""
     for sub in ("history", "fp_index", "band_index", "url_index"):
-        root = f"{corpus_dir}/{sub}"
-        p = path_cls(root)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(p):
-            continue
-        parts = [st.getPath().getName() for st in fs.listStatus(p)]
-        ids = [
-            int(n.split("=", 1)[1])
-            for n in parts
-            if n.startswith("batch_id=")
-        ]
-        src = [i for i in ids if (0 <= i <= upto_batch_id) or (i < 0 and i != gen)]
-        if not src:
-            continue
-        df = spark.read.parquet(root)
-        data = (
-            df.filter(F.col("batch_id").isin(src))
-            .drop("batch_id")
-            # sever lineage before writing under the directory being read
-            .localCheckpoint(eager=True)
-        )
-        _overwrite(data, f"{root}/batch_id={gen}")
-        for i in src:
-            fs.delete(path_cls(f"{root}/batch_id={i}"), True)
+        fold_batches(spark, f"{corpus_dir}/{sub}", upto_batch_id)
 
 
 def continuous_ingest(
@@ -372,7 +330,7 @@ def crawl_ingest_batch(
     uidx_template = batch.select(
         F.col("url").alias("canon_url"), "doc_id"
     ).limit(0)
-    uidx = _read_parts(spark, f"{corpus_dir}/url_index", uidx_template)
+    uidx = read_parts(spark, f"{corpus_dir}/url_index", uidx_template)
     hist_urls = (
         uidx.filter(not_self)
         .groupBy("canon_url")

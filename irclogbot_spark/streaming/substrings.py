@@ -23,11 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from irclogbot_spark.artifacts import fold_batches, overwrite, read_parts
 from irclogbot_spark.operators.substrings import (
     gram_occurrences,
     substring_dedup_incremental,
 )
-from irclogbot_spark.streaming.corpus import _overwrite, _read_parts
 
 
 def substring_ingest_batch(
@@ -43,7 +43,7 @@ def substring_ingest_batch(
     hashes."""
     spark = batch.sparkSession
     template = spark.createDataFrame([], "h long")
-    hist = _read_parts(spark, f"{work_dir}/gram_index", template).filter(
+    hist = read_parts(spark, f"{work_dir}/gram_index", template).filter(
         F.col("batch_id") != F.lit(batch_id)
     ).select("h")
     # the occurrence frame feeds BOTH the excision and the index
@@ -54,9 +54,9 @@ def substring_ingest_batch(
     clean = substring_dedup_incremental(
         batch, hist, length=length, hash_fn=hash_fn, occ=occ
     )
-    _overwrite(clean, f"{work_dir}/clean/batch_id={batch_id}")
+    overwrite(clean, f"{work_dir}/clean/batch_id={batch_id}")
     fresh = occ.select("h").distinct().join(hist, "h", "left_anti")
-    _overwrite(fresh, f"{work_dir}/gram_index/batch_id={batch_id}")
+    overwrite(fresh, f"{work_dir}/gram_index/batch_id={batch_id}")
 
 
 def continuous_substring_dedup(
@@ -82,37 +82,15 @@ def continuous_substring_dedup(
 
 def compact(spark, work_dir: str, upto_batch_id: int) -> None:
     """Fold the gram index's per-batch partitions (ids
-    0..upto_batch_id plus any previous generation) into ONE
+    0..upto_batch_id plus any previous generation) into ONE distinct
     generation partition ``batch_id=-(upto_batch_id+1)`` — the
-    corpus.py recipe verbatim: negative generation ids can never
-    collide with stream batch ids, so ingest continues unchanged;
-    crash-safe by idempotent re-run (the probe is a membership test
-    on both sides — left-semi for history hits, left-anti for the
-    append — so duplicates a crash leaves behind are harmless and a
-    re-run converges). ``clean/`` keeps its per-batch partitions:
-    it IS the per-batch output record (the audit-table rule)."""
-    gen = -(upto_batch_id + 1)
-    jvm = spark._jvm
-    path_cls = jvm.org.apache.hadoop.fs.Path
-    root = f"{work_dir}/gram_index"
-    p = path_cls(root)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return
-    parts = [st.getPath().getName() for st in fs.listStatus(p)]
-    ids = [
-        int(n.split("=", 1)[1]) for n in parts if n.startswith("batch_id=")
-    ]
-    src = [i for i in ids if (0 <= i <= upto_batch_id) or (i < 0 and i != gen)]
-    if not src:
-        return
-    df = spark.read.parquet(root)
-    data = (
-        df.filter(F.col("batch_id").isin(src))
-        .drop("batch_id")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    _overwrite(data, f"{root}/batch_id={gen}")
-    for i in src:
-        fs.delete(path_cls(f"{root}/batch_id={i}"), True)
+    corpus.py recipe: negative generation ids can never collide with
+    stream batch ids, so ingest continues unchanged. Crash safety is
+    the artifacts.fold commit rule: the generation commits before any
+    source is deleted, a crash during the deletes leaves duplicate
+    hashes that the membership probes (left-semi for history hits,
+    left-anti for the append) ignore, and re-running the same compact
+    only finishes the deletes. ``clean/`` keeps its per-batch
+    partitions: it IS the per-batch output record (the audit-table
+    rule)."""
+    fold_batches(spark, f"{work_dir}/gram_index", upto_batch_id, distinct=True)

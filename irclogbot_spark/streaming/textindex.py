@@ -1,12 +1,13 @@
 """Continuous TEXT-index maintenance: the at-rest positional
 postings (operators/textindex.py — the one artifact serving BM25,
 match_phrase, span_near, fuzzy, more_like_this, prefix_suggest)
-kept fresh from a document stream, on the shared bucketed-posting
-machinery (streaming/postingindex.py — layout, replay idempotence,
-crash-safe generation compaction identical to the trigram index):
+kept fresh from a document stream, on the shared PostingStore
+(irclogbot_spark/artifacts.py — layout, replay idempotence and the
+generation commit rule, identical to the trigram and ANN indexes):
 
     <index_dir>/index/batch_id=N/          live per-batch appends
     <index_dir>/buckets/gen=G/term_bkt=K/  compacted generations
+    <index_dir>/vocab/gen=G/               term dictionary of gen G
     <index_dir>/doclens/batch_id=N/        per-batch doclens rows
 
 Per-batch work is MAP-ONLY (the in-row positional posting explode +
@@ -18,25 +19,28 @@ probe time, so the stream needs no running aggregate state.
 bm25_rank_indexed and serves exactly what the one-shot
 write_text_index artifact serves (pinned by test across compaction
 and crash replay). The one-shot artifact's ``vocab`` term
-dictionary (round 10) is NOT maintained here — a streamed index
-derives a vocabulary on the fly from its postings when a fuzzy/MLT
-probe needs one; the at-rest dictionary is a compaction-time
-artifact by nature (ES builds its term dict per segment the same
-way)."""
+dictionary (round 10) is rebuilt here at compaction time only — a
+streamed index derives the dictionary of its uncovered batches on
+the fly when a fuzzy/MLT probe needs one (ES builds its term dict
+per segment the same way)."""
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from irclogbot_spark import artifacts
 from irclogbot_spark.functions.text import WORD_RE, build_positional_index
-from irclogbot_spark.operators.textindex import term_bucket_col
-from irclogbot_spark.streaming import postingindex as _pi
+from irclogbot_spark.operators.textindex import META_NAME, term_bucket_col
 
-_POSTING_SCHEMA = "doc_id long, term string, positions array<int>, term_bkt int"
-_COLS = ["doc_id", "term", "positions", "term_bkt"]
+_STORE = artifacts.PostingStore(
+    "doc_id long, term string, positions array<int>, term_bkt int",
+    "term_bkt",
+    meta_name=META_NAME,
+)
 _DOCLEN_SCHEMA = "doc_id long, dl int"
-_META = "_text_index_meta.json"
 
 
 def text_ingest_batch(
@@ -66,21 +70,15 @@ def text_ingest_batch(
     postings = postings.withColumn(
         "term_bkt", term_bucket_col("term", n_buckets).cast("int")
     )
-    _pi.ingest_batch(
-        postings,
-        batch_id,
-        index_dir,
-        {"n_buckets": n_buckets, "id_col": id_col},
-        _META,
-    )
+    meta = {"n_buckets": n_buckets, "id_col": id_col}
+    _STORE.ingest(postings, batch_id, index_dir, meta)
     # NULL text -> dl=0, the write_text_index convention (round 13)
     toks = F.regexp_extract_all(
         F.coalesce(F.col(text_col), F.lit("")), F.lit(WORD_RE), F.lit(0)
     )
-    batch.select(
-        F.col(id_col).alias("doc_id"), F.size(toks).alias("dl")
-    ).write.mode("overwrite").parquet(
-        f"{index_dir}/doclens/batch_id={batch_id}"
+    artifacts.overwrite(
+        batch.select(F.col(id_col).alias("doc_id"), F.size(toks).alias("dl")),
+        f"{index_dir}/doclens/batch_id={batch_id}",
     )
 
 
@@ -115,27 +113,25 @@ def compact(spark: SparkSession, index_dir: str, upto_batch_id: int) -> None:
 
     Round 10: compaction also builds the TERM DICTIONARY for the new
     generation (``vocab/gen=G`` — the ES shape: the term dict is a
-    segment-merge artifact). ``load_vocab`` serves it plus an
-    on-the-fly aggregate of any batches the generation doesn't
-    cover, so the dictionary is always current; a crash between the
-    generation write and the vocab write falls back to deriving the
-    dictionary from the generation postings (max-gen rule)."""
-    _pi.compact(
-        spark, index_dir, upto_batch_id, _POSTING_SCHEMA, _COLS, "term_bkt"
-    )
+    segment-merge artifact), under the same commit rule: ``load_vocab``
+    serves a committed ``vocab/gen=G`` plus an on-the-fly aggregate of
+    the batches the generation doesn't cover, and derives the
+    dictionary from the generation postings after a crash before the
+    vocab commit. With nothing to fold there is no generation and no
+    vocab to build."""
+    if not _STORE.compact(spark, index_dir, upto_batch_id):
+        return
     gen = upto_batch_id + 1
-    vpath = f"{index_dir}/vocab/gen={gen}"
-    _vocab_of(
-        spark.read.schema(_POSTING_SCHEMA)
-        .parquet(f"{index_dir}/buckets/gen={gen}")
-        .select(*_COLS)
-    ).write.mode("overwrite").parquet(vpath)
-    path_cls = spark._jvm.org.apache.hadoop.fs.Path
-    p = path_cls(f"{index_dir}/vocab")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    for g in _pi.part_ids(spark, f"{index_dir}/vocab", "gen"):
-        if g != gen:
-            fs.delete(path_cls(f"{index_dir}/vocab/gen={g}"), True)
+    postings = _STORE.read(spark, [_STORE.gen_path(index_dir, gen)])
+    artifacts.overwrite(_vocab_of(postings), f"{index_dir}/vocab/gen={gen}")
+    artifacts.delete(
+        spark,
+        [
+            f"{index_dir}/vocab/gen={g}"
+            for g in artifacts.part_ids(spark, f"{index_dir}/vocab", "gen")
+            if g < gen
+        ],
+    )
 
 
 _VOCAB_SCHEMA = "term string, df long, freq long"
@@ -150,46 +146,20 @@ def _vocab_of(postings: DataFrame) -> DataFrame:
 
 def load_vocab(spark: SparkSession, index_dir: str) -> DataFrame:
     """(term, df, freq) dictionary over everything ingested so far:
-    the compacted generation's persisted vocab (or, after a crash
-    between the generation and vocab writes, a derivation from the
-    generation postings) merged with an on-the-fly aggregate of the
-    uncovered batch dirs. Disjoint sources (a batch is either folded
-    into the generation and deleted, or not), so the merge is a
-    per-term sum."""
-    gens_b = _pi.part_ids(spark, f"{index_dir}/buckets", "gen")
-    gen = max(gens_b) if gens_b else 0
-    gens_v = _pi.part_ids(spark, f"{index_dir}/vocab", "gen")
+    the served generation's committed vocab (or, after a crash
+    before the vocab commit, a derivation from the generation
+    postings) merged with an on-the-fly aggregate of the uncovered
+    batch dirs. Disjoint sources (a batch is either covered by the
+    generation or served on its own), so the merge is a per-term
+    sum."""
+    gen, paths = _STORE.live(spark, index_dir)
+    vocab = f"{index_dir}/vocab/gen={gen}"
     frames = []
-    if gen:
-        if gen in gens_v:
-            frames.append(
-                spark.read.schema(_VOCAB_SCHEMA).parquet(
-                    f"{index_dir}/vocab/gen={gen}"
-                )
-            )
-        else:
-            frames.append(
-                _vocab_of(
-                    spark.read.schema(_POSTING_SCHEMA)
-                    .parquet(f"{index_dir}/buckets/gen={gen}")
-                    .select(*_COLS)
-                )
-            )
-    for b in _pi.part_ids(spark, f"{index_dir}/index", "batch_id"):
-        if b >= gen:
-            frames.append(
-                _vocab_of(
-                    spark.read.schema(_POSTING_SCHEMA)
-                    .parquet(f"{index_dir}/index/batch_id={b}")
-                    .select(*_COLS)
-                )
-            )
-    if not frames:
-        return spark.createDataFrame([], _VOCAB_SCHEMA)
-    data = frames[0]
-    for fr in frames[1:]:
-        data = data.unionByName(fr)
-    return data.groupBy("term").agg(
+    if gen and artifacts.committed(spark, vocab):
+        frames.append(spark.read.schema(_VOCAB_SCHEMA).parquet(vocab))
+        paths = paths[1:]
+    frames.append(_vocab_of(_STORE.read(spark, paths)))
+    return reduce(DataFrame.unionByName, frames).groupBy("term").agg(
         F.sum("df").cast("long").alias("df"),
         F.sum("freq").cast("long").alias("freq"),
     )
@@ -206,7 +176,7 @@ def load_text(
     reader passes the same id_col whether the logical index was
     built one-shot or streamed. Indexes written before the meta
     carried id_col keep 'doc_id' (the old observable behavior)."""
-    postings, meta = _pi.load(spark, index_dir, _POSTING_SCHEMA, _COLS, _META)
+    postings, meta = _STORE.load(spark, index_dir), _STORE.meta(spark, index_dir)
     lens = spark.read.schema(_DOCLEN_SCHEMA).parquet(f"{index_dir}/doclens")
     id_col = meta.get("id_col", "doc_id")
     if id_col != "doc_id":

@@ -5,9 +5,9 @@ made continuous, the substring-search twin of streaming/annindex.py
 (ANN cells) and streaming/corpus.py (dedup indexes).
 
 All layout, idempotence, compaction-generation, and loading
-semantics live in streaming/postingindex.py (shared with the
-positional text index, round 9); this module binds them to the
-trigram posting projection:
+semantics live in irclogbot_spark/artifacts.py (the PostingStore
+shared with the positional text index and the ANN index); this
+module binds them to the trigram posting projection:
 
     <index_dir>/index/batch_id=N/         live per-batch appends
                                           (tri_bkt is a DATA column)
@@ -29,13 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from irclogbot_spark.artifacts import PostingStore
 from irclogbot_spark.operators.trgm import trgm_index
-from irclogbot_spark.streaming import postingindex as _pi
 
 DOC_SCHEMA = "doc_id long, text string"
-_POSTING_SCHEMA = "doc_id long, tri string, tri_bkt int"
-_COLS = ["doc_id", "tri", "tri_bkt"]
-_META = "_trgm_meta.json"
+_STORE = PostingStore(
+    "doc_id long, tri string, tri_bkt int", "tri_bkt", meta_name="_trgm_meta.json"
+)
 
 
 def _bucketed_postings(batch: DataFrame, n_buckets: int) -> DataFrame:
@@ -53,13 +53,8 @@ def trgm_ingest_batch(
     """foreachBatch body: post the arriving docs (map-only) and
     overwrite this batch's index partition — idempotent on replay;
     a DIFFERENT n_buckets against an existing index raises."""
-    _pi.ingest_batch(
-        _bucketed_postings(batch, n_buckets),
-        batch_id,
-        index_dir,
-        {"n_buckets": n_buckets},
-        _META,
-    )
+    postings = _bucketed_postings(batch, n_buckets)
+    _STORE.ingest(postings, batch_id, index_dir, {"n_buckets": n_buckets})
 
 
 def continuous_trgm(
@@ -80,18 +75,13 @@ def continuous_trgm(
     )
 
 
-def compact(spark: SparkSession, index_dir: str, upto_batch_id: int) -> None:
-    """Fold batch partitions into ``buckets/gen = upto + 1`` laid
-    out partitionBy("tri_bkt"); crash-safe max-gen rule (see
-    postingindex.compact)."""
-    _pi.compact(
-        spark, index_dir, upto_batch_id, _POSTING_SCHEMA, _COLS, "tri_bkt"
-    )
+#: fold batch partitions into ``buckets/gen = upto + 1`` laid out
+#: partitionBy("tri_bkt"); see artifacts.PostingStore.compact
+compact = _STORE.compact
 
 
 def load_trgm(spark: SparkSession, index_dir: str) -> tuple[DataFrame, int]:
     """(postings, n_buckets) over everything ingested so far —
     plugs into ``trgm_search(df, patterns, index=postings,
     index_buckets=n_buckets)``."""
-    data, meta = _pi.load(spark, index_dir, _POSTING_SCHEMA, _COLS, _META)
-    return data, int(meta["n_buckets"])
+    return _STORE.load(spark, index_dir), int(_STORE.meta(spark, index_dir)["n_buckets"])

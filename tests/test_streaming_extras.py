@@ -2054,3 +2054,260 @@ def test_streamed_index_id_col_matches_one_shot_convention(spark, tmp_path):
             n_buckets=8,
             text_col="remark",
         )
+
+
+# ------------------------------------------------ artifact store faults
+
+
+def _batch_parts(table):
+    return sorted(p.name for p in table.iterdir() if p.name.startswith("batch_id="))
+
+
+def _crash_mid_delete(tmp_path, compact, *parts):
+    """Run ``compact`` as if it crashed during its source deletes:
+    each of ``parts`` (source partition dirs) is copied aside before
+    and restored after, so the committed generation sits next to some
+    of its sources while the others are gone."""
+    import shutil
+
+    aside = []
+    for i, part in enumerate(parts):
+        copy = tmp_path / f"_aside_{i}"
+        shutil.copytree(part, copy)
+        aside.append((copy, part))
+    compact()
+    for copy, part in aside:
+        assert not part.exists()
+        shutil.copytree(copy, part)
+
+
+def test_corpus_compact_rerun_after_mid_delete_crash_keeps_history(spark, tmp_path):
+    """A corpus compaction that crashed after deleting some of its
+    source partitions, then re-run: history and url_index still hold
+    every admitted doc and URL (the re-run only finishes the deletes,
+    it does not rebuild the generation from the leftovers)."""
+    from irclogbot_spark.streaming import corpus as C
+
+    corpus_dir = tmp_path / "crawl"
+    batches = [
+        [(1, "https://a.com/1", "first batch page about compaction safety rules")],
+        [(2, "https://b.com/2", "second batch page on generation commit markers")],
+        [(3, "https://c.com/3", "third batch page covering delete crash recovery")],
+    ]
+    for i, rows in enumerate(batches):
+        C.crawl_ingest_batch(
+            spark.createDataFrame(rows, C.CRAWL_DOC_SCHEMA), i, str(corpus_dir)
+        )
+    _crash_mid_delete(
+        tmp_path,
+        lambda: C.compact(spark, str(corpus_dir), upto_batch_id=2),
+        corpus_dir / "history" / "batch_id=2",
+        corpus_dir / "url_index" / "batch_id=2",
+    )
+    C.compact(spark, str(corpus_dir), upto_batch_id=2)
+
+    for sub in ("history", "url_index"):
+        assert _batch_parts(corpus_dir / sub) == ["batch_id=-3"], sub
+    assert {r.doc_id for r in C.history(spark, str(corpus_dir)).collect()} == {1, 2, 3}
+    urls = spark.read.parquet(str(corpus_dir / "url_index"))
+    assert {r.doc_id for r in urls.collect()} == {1, 2, 3} and urls.count() == 3
+
+
+def test_substring_compact_rerun_after_mid_delete_crash_keeps_grams(spark, tmp_path):
+    """The gram index twin: a re-run after a mid-delete crash keeps
+    every hash the index held before compaction."""
+    from irclogbot_spark.streaming import substrings as SS
+
+    work = tmp_path / "ss"
+    texts = ["a b c d e f g h one", "i j k l m n o p two", "q r s t u v w x three"]
+    for i, t in enumerate(texts):
+        SS.substring_ingest_batch(
+            spark.createDataFrame([(i + 1, t)], "doc_id long, text string"),
+            i,
+            str(work),
+            length=8,
+        )
+
+    def grams():
+        return {r.h for r in spark.read.parquet(str(work / "gram_index")).collect()}
+
+    before = grams()
+    _crash_mid_delete(
+        tmp_path,
+        lambda: SS.compact(spark, str(work), upto_batch_id=2),
+        work / "gram_index" / "batch_id=2",
+    )
+    SS.compact(spark, str(work), upto_batch_id=2)
+    assert _batch_parts(work / "gram_index") == ["batch_id=-3"]
+    assert grams() == before
+
+
+def test_trgm_compact_rerun_after_mid_delete_crash_keeps_postings(spark, tmp_path):
+    """The posting-store twin: after a mid-delete crash and a re-run
+    the trigram index still serves every ingested doc."""
+    from irclogbot_spark.operators.trgm import trgm_search
+    from irclogbot_spark.streaming import trgmindex as TI
+
+    index_dir = tmp_path / "trgm"
+    rows = [(1, "shuffle one"), (2, "shuffle two"), (3, "shuffle three")]
+    for i, row in enumerate(rows):
+        TI.trgm_ingest_batch(
+            spark.createDataFrame([row], TI.DOC_SCHEMA), i, str(index_dir), n_buckets=8
+        )
+    _crash_mid_delete(
+        tmp_path,
+        lambda: TI.compact(spark, str(index_dir), upto_batch_id=2),
+        index_dir / "index" / "batch_id=2",
+    )
+    TI.compact(spark, str(index_dir), upto_batch_id=2)
+
+    assert _batch_parts(index_dir / "index") == []
+    idx, nb = TI.load_trgm(spark, str(index_dir))
+    docs = spark.createDataFrame(rows, TI.DOC_SCHEMA)
+    hits = trgm_search(docs, ["shuffle"], index=idx, index_buckets=nb).collect()
+    assert sorted(r.doc_id for r in hits) == [1, 2, 3]
+
+
+def test_ann_compact_rerun_after_mid_delete_crash_keeps_vectors(spark, tmp_path):
+    """The ANN cell-store twin: every encoded vector survives a re-run
+    after a mid-delete crash."""
+    from irclogbot_spark.streaming import annindex
+
+    cents, books, rows, frame = _ann_fixture(spark)
+    index_dir = tmp_path / "ann"
+    for i in range(3):
+        annindex.ingest_batch(
+            frame(rows[20 * i : 20 * (i + 1)]), i, str(index_dir), cents, books
+        )
+    _crash_mid_delete(
+        tmp_path,
+        lambda: annindex.compact(spark, str(index_dir), upto_batch_id=2),
+        index_dir / "index" / "batch_id=2",
+    )
+    annindex.compact(spark, str(index_dir), upto_batch_id=2)
+
+    assert sorted(p.name for p in (index_dir / "cells").iterdir()) == ["gen=3"]
+    got = annindex.load_index(spark, str(index_dir))
+    assert {r.vec_id for r in got.collect()} == {r.vec_id for r in rows}
+    assert got.count() == 60
+
+
+def test_uncommitted_generation_hides_no_batch(spark, tmp_path):
+    """A generation dir a crash left before its write job committed
+    (only ``_temporary/`` inside) is not served: the loaders still
+    serve every batch, and a compaction onto that generation id
+    rewrites it."""
+    from irclogbot_spark.streaming import annindex
+    from irclogbot_spark.streaming import textindex as TX
+
+    text_dir = tmp_path / "tx"
+    for i, t in enumerate(["alpha beta", "beta gamma"]):
+        TX.text_ingest_batch(
+            spark.createDataFrame([(i + 1, t)], "doc_id long, text string"),
+            i,
+            str(text_dir),
+            n_buckets=8,
+        )
+    cents, books, rows, frame = _ann_fixture(spark)
+    ann_dir = tmp_path / "ann"
+    annindex.ingest_batch(frame(rows[:20]), 0, str(ann_dir), cents, books)
+    annindex.ingest_batch(frame(rows[20:40]), 1, str(ann_dir), cents, books)
+    for gens in (text_dir / "buckets", ann_dir / "cells"):
+        for g in (2, 5):
+            (gens / f"gen={g}" / "_temporary" / "0").mkdir(parents=True)
+
+    def served():
+        pidx, lens, _nb = TX.load_text(spark, str(text_dir))
+        vocab = {r.term: r.df for r in TX.load_vocab(spark, str(text_dir)).collect()}
+        ann = {r.vec_id for r in annindex.load_index(spark, str(ann_dir)).collect()}
+        return sorted({r.doc_id for r in pidx.collect()}), lens.count(), vocab, ann
+
+    want = ([1, 2], 2, {"alpha": 1, "beta": 2, "gamma": 1}, {r.vec_id for r in rows[:40]})
+    assert served() == want
+    TX.compact(spark, str(text_dir), upto_batch_id=1)
+    annindex.compact(spark, str(ann_dir), upto_batch_id=1)
+    assert (text_dir / "buckets" / "gen=2" / "_SUCCESS").exists()
+    assert (ann_dir / "cells" / "gen=2" / "_SUCCESS").exists()
+    assert served() == want
+
+
+def test_text_compact_with_nothing_to_fold_is_a_no_op(spark, tmp_path):
+    """textindex.compact over batches that do not exist writes no
+    generation and builds no vocab from one; the index keeps serving
+    what it holds."""
+    from irclogbot_spark.streaming import textindex as TX
+
+    index_dir = str(tmp_path / "tx")
+    TX.text_ingest_batch(
+        spark.createDataFrame([(7, "late batch text")], "doc_id long, text string"),
+        3,
+        index_dir,
+        n_buckets=8,
+    )
+    TX.compact(spark, index_dir, upto_batch_id=1)
+    assert not (tmp_path / "tx" / "buckets").exists()
+    assert not (tmp_path / "tx" / "vocab").exists()
+    pidx, _lens, _nb = TX.load_text(spark, index_dir)
+    assert sorted(r.term for r in pidx.collect()) == ["batch", "late", "text"]
+    assert {r.term for r in TX.load_vocab(spark, index_dir).collect()} == {
+        "batch",
+        "late",
+        "text",
+    }
+
+
+def test_at_rest_indexes_accept_hadoop_uris(spark, tmp_path):
+    """write_trgm_index / write_text_index write their meta sidecar
+    through the Hadoop FS, so a ``file://`` URI works end to end (a
+    local ``open()`` of that string fails); a stray truncated temp
+    sidecar from an earlier crash breaks nothing."""
+    from irclogbot_spark.operators.textindex import read_text_index, write_text_index
+    from irclogbot_spark.operators.trgm import read_trgm_index, write_trgm_index
+
+    docs = spark.createDataFrame(
+        [(1, "shuffle merge data"), (2, "window data")], "doc_id long, text string"
+    )
+    (tmp_path / "tx").mkdir()
+    (tmp_path / "tx" / "_text_index_meta.json.tmp").write_text('{"n_buck')
+    trgm_uri, text_uri = f"file://{tmp_path}/trgm", f"file://{tmp_path}/tx"
+    write_trgm_index(docs, trgm_uri, n_buckets=8)
+    write_text_index(docs, text_uri, n_buckets=16)
+    idx, nb = read_trgm_index(spark, trgm_uri)
+    assert nb == 8 and idx.select("doc_id").distinct().count() == 2
+    pidx, lens, nb = read_text_index(spark, text_uri)
+    assert nb == 16 and lens.count() == 2
+    assert {r.doc_id for r in pidx.filter(F.col("term") == "data").collect()} == {1, 2}
+
+
+def test_streamed_meta_written_once_and_crash_leftovers_harmless(spark, tmp_path):
+    """The streamed ingest writes its meta sidecar only when absent
+    (later batches leave it untouched, so no batch reopens a crash
+    window on it); truncated temp sidecars, as a crash mid-write
+    leaves them, break neither the next ingest nor the load; a
+    different bucket count still raises."""
+    import os
+
+    from irclogbot_spark.streaming import trgmindex as TI
+
+    index_dir = tmp_path / "trgm"
+
+    def ingest(row, batch_id, n_buckets=8):
+        batch = spark.createDataFrame([row], TI.DOC_SCHEMA)
+        TI.trgm_ingest_batch(batch, batch_id, str(index_dir), n_buckets)
+
+    index_dir.mkdir()
+    stray = index_dir / "_trgm_meta.json.tmp"
+    stray.write_text('{"n_buck')  # crash while writing the first meta
+    ingest((1, "alpha one"), 0)
+    meta = index_dir / "_trgm_meta.json"
+    first = os.stat(meta)
+    stray.write_text('{"n_buckets": ')  # a later crash leftover
+    time.sleep(0.05)
+    ingest((2, "alpha two"), 1)
+    again = os.stat(meta)
+    assert (again.st_ino, again.st_mtime_ns) == (first.st_ino, first.st_mtime_ns)
+    idx, nb = TI.load_trgm(spark, str(index_dir))
+    assert nb == 8
+    assert {r.doc_id for r in idx.collect()} == {1, 2}
+    with pytest.raises(ValueError, match="n_buckets"):
+        ingest((3, "x"), 2, n_buckets=16)
