@@ -11,8 +11,9 @@ generation under one of two naming policies:
 
     in place      <root>/batch_id=N/        live batches
                   <root>/batch_id=-G/       generation G (batches < G)
-                  readers scan the whole root; negative ids never
-                  collide with stream batch ids (corpus, substrings)
+                  readers scan the root through :func:`read_parts`;
+                  negative ids never collide with stream batch ids
+                  (corpus, substrings)
 
     generations   <dir>/index/batch_id=N/   live batches (bucket is a
                                             data column)
@@ -29,10 +30,9 @@ generation that no reader serves; a crash during the deletes leaves
 a committed generation next to some of its sources. Re-running the
 same compaction finds the committed generation, skips the write and
 only finishes the deletes, so it never rebuilds the generation from
-the sources that are left. The generation loader serves the max
-COMMITTED generation plus the batches it does not cover; in-place
-readers see the leftover sources as duplicates, which their probes
-tolerate.
+the sources that are left. Both readers (:meth:`PostingStore.live`
+and :func:`read_parts`) serve the newest COMMITTED generation plus
+the batches it does not cover, so neither sees the leftover sources.
 """
 
 from __future__ import annotations
@@ -92,15 +92,28 @@ def overwrite(df: DataFrame, path: str, partition_by: str | None = None) -> None
 
 
 def read_parts(spark: SparkSession, path: str, template: DataFrame) -> DataFrame:
-    """Read a batch_id-partitioned parquet table; a missing/empty dir
+    """Read an in-place batch_id-partitioned table; a missing/empty dir
     yields the (empty) template. The schema is supplied explicitly —
     template columns + the batch_id partition column — so a partial
     crash-leftover partition with no committed files can't break
-    schema inference."""
+    schema inference.
+
+    Served: the newest committed generation ``batch_id=-G`` and the
+    batches it does not cover (``batch_id >= G``) — the
+    :meth:`PostingStore.live` rule, as a literal partition filter on
+    the one scan. Sources a crashed fold left next to its committed
+    generation, and uncommitted generations, are not read."""
     schema = template.withColumn("batch_id", F.lit(0).cast("long")).schema
-    if _names(spark, path):
-        return spark.read.schema(schema).parquet(path)
-    return spark.createDataFrame([], schema)
+    ids = part_ids(spark, path, "batch_id")
+    if not ids:
+        return spark.createDataFrame([], schema)
+    gen = next(
+        (-i for i in ids if i < 0 and committed(spark, f"{path}/batch_id={i}")), 0
+    )
+    live = F.col("batch_id") >= gen
+    if gen:
+        live = live | (F.col("batch_id") == -gen)
+    return spark.read.schema(schema).parquet(path).filter(live)
 
 
 def _read(spark: SparkSession, paths: list[str], schema) -> DataFrame:

@@ -75,6 +75,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from irclogbot_spark.functions.lits import literal_frame
+
 
 def qgrams(text: Column | str, q: int = 8) -> Column:
     """Distinct positional q-grams of ``text`` as an in-row array.
@@ -206,7 +208,7 @@ def fuzzy_term_search(
     from irclogbot_spark.operators.dedup import tokens
 
     spark = df.sparkSession
-    tdf = spark.createDataFrame([(t,) for t in terms], "term string")
+    tdf = literal_frame(spark, [(t,) for t in terms], "term string")
     if postings is not None:
         toks = postings.select(F.col(id_col), F.col("term").alias("tok"))
     else:

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from irclogbot_spark.functions.lits import literal_frame
 from irclogbot_spark.functions.text import WORD_RE
 
 
@@ -47,8 +48,8 @@ def query_table(
         mm = max(1, min(int(min_match), len(distinct)))
         for t in distinct:
             rows.append((int(qid), t, mm))
-    return spark.createDataFrame(
-        rows, "query_id long, term string, min_match long"
+    return literal_frame(
+        spark, rows, "query_id long, term string, min_match long"
     )
 
 

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from irclogbot_spark.artifacts import write_meta
+from irclogbot_spark.functions.lits import literal_frame
 from irclogbot_spark.functions.text import build_positional_index
 
 META_NAME = "_text_index_meta.json"
@@ -182,7 +183,7 @@ def fuzzy_term_search_atrest(
         raise ValueError("need at least one term")
     pidx, _lens, n_buckets = read_text_index(spark, path)
     vocab = read_vocab(spark, path)
-    tdf = spark.createDataFrame([(t,) for t in terms], "term string")
+    tdf = literal_frame(spark, [(t,) for t in terms], "term string")
     dist = F.levenshtein(F.col("tok"), F.col("term"), max_dist)
     matches = (
         vocab.select(F.col("term").alias("tok"), "df")
@@ -204,7 +205,7 @@ def fuzzy_term_search_atrest(
             .drop("_r")
         )
     rows = matches.select("term", "tok").collect()
-    mdf = spark.createDataFrame(rows, "term string, tok string")
+    mdf = literal_frame(spark, rows, "term string, tok string")
     probed = probe_postings(
         pidx, sorted({r.tok for r in rows}), n_buckets
     ).select(F.col("term").alias("tok"), id_col)
@@ -261,8 +262,8 @@ def more_like_this_atrest(
         .select(F.col(id_col).alias("query_id"), "term", "idf_milli")
     )
     qrows = qterms.collect()
-    qdf = spark.createDataFrame(
-        qrows, "query_id long, term string, idf_milli long"
+    qdf = literal_frame(
+        spark, qrows, "query_id long, term string, idf_milli long"
     )
     probed = postings_tf(
         probe_postings(pidx, sorted({r.term for r in qrows}), n_buckets),

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from irclogbot_spark.artifacts import write_meta
+from irclogbot_spark.functions.lits import literal_frame
 from irclogbot_spark.plans.partitioning import ensure_parallelism
 
 
@@ -148,11 +149,13 @@ def trgm_search(
         # come from one partial-agg count per (pattern, doc), and
         # the verify joins text back for candidate rows only with a
         # column-vs-column contains()
-        pat_tris = spark.createDataFrame(
+        pat_tris = literal_frame(
+            spark,
             [(p, t) for p in long_pats for t in py_trigrams(p)],
             "pattern string, tri string",
         )
-        need = spark.createDataFrame(
+        need = literal_frame(
+            spark,
             [(p, len(py_trigrams(p))) for p in long_pats],
             "pattern string, _need long",
         )
@@ -266,11 +269,13 @@ def wildcard_search(
                 }
             )
             idx = idx.filter(F.col("tri_bkt").isin(want))
-        pat_tris = spark.createDataFrame(
+        pat_tris = literal_frame(
+            spark,
             [(p, t) for p in long_pats for t in py_wildcard_trigrams(p)],
             "pattern string, tri string",
         )
-        need = spark.createDataFrame(
+        need = literal_frame(
+            spark,
             [(p, len(py_wildcard_trigrams(p))) for p in long_pats],
             "pattern string, _need long",
         )

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from irclogbot_spark import synth
+from irclogbot_spark.functions.lits import literal_frame
 from irclogbot_spark.functions.scalar import human_fmt
 from irclogbot_spark.session import ensure_runtime_confs
 from irclogbot_spark.sources.tables import load_table
@@ -2556,7 +2557,8 @@ def docs_bpe_merges(spark, sf_dir):
     from irclogbot_spark.operators.bpe import train_bpe
 
     merges = train_bpe(_t(spark, sf_dir, "documents"), n_merges=8)
-    return spark.createDataFrame(
+    return literal_frame(
+        spark,
         [
             (m["step"], m["lhs"], m["rhs"], m["merged"], m["pair_freq"])
             for m in merges

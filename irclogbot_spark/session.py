@@ -83,6 +83,16 @@ def get_spark(app_name: str = "sparklog", master: str | None = None) -> SparkSes
             "spark.sql.codegen.cache.maxEntries",
             os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"),
         )
+        # PySpark's DataFrame debugging (static conf, on by default in
+        # PySpark 4) wraps every Column and DataFrame call to capture
+        # its Python call site: a stack walk plus extra py4j messages
+        # per call (F.col: 13 messages instead of 3, ``a + b``: 11
+        # instead of 1), paid on every query build. Off, errors lose
+        # only the Python call site in their "== DataFrame ==" context.
+        # Static, so it is set here and not in RUNTIME_CONFS (a
+        # runtime set raises CANNOT_MODIFY_STATIC_CONFIG); a session
+        # built elsewhere (the driver harness) keeps PySpark's default.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # UI off by default (test noise); SPARK_GRAFT_UI=1/true/yes
         # turns it on for metric probes that read the REST stage API
         # (scale_probe). Spark only parses 'true'/'false', so

@@ -68,9 +68,13 @@ def ingest_batch(
     vec_col: str = "embedding",
 ) -> None:
     """foreachBatch body: encode the arriving vectors (map-only) and
-    overwrite this batch's index partition — idempotent on replay."""
+    overwrite this batch's index partition — idempotent on replay.
+    The caller's id/vector columns are stored as ``vec_id``/``embedding``,
+    the names the store schema reads back (``load_index`` renames them
+    to the caller's again)."""
+    codes = encode_ivfpq(batch, centroids, books, id_col=id_col, vec_col=vec_col)
     _STORE.ingest(
-        encode_ivfpq(batch, centroids, books, id_col=id_col, vec_col=vec_col),
+        codes.withColumnsRenamed({id_col: "vec_id", vec_col: "embedding"}),
         batch_id,
         index_dir,
     )

@@ -1,0 +1,101 @@
+"""Driver-side build cost: py4j budgets for warm query builds and
+literal (in-JVM) dimension frames.
+
+A registry query is built on the driver through py4j, one message per
+JVM call, before Spark plans anything; at small data that cost is the
+query's latency. The budgets below pin it for the hot search set, so a
+fixed-cost regression fails here and not in a noisy wall clock."""
+
+from __future__ import annotations
+
+import contextlib
+
+import pytest
+from py4j.java_gateway import GatewayClient
+from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
+
+from irclogbot_spark.queries import queries
+
+SF = "/root/testdata/sf0.001"
+
+#: py4j's "release this JVM object" message: Python's garbage collector
+#: decides when these go out, so they are not counted
+_DETACH = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+
+#: warm-build py4j messages per query: the measured count plus 25%
+#: (333, 927 and 486 at sf0.001, local[4])
+BUDGETS = {
+    "docs_bm25_atrest": 416,
+    "docs_multi_match_atrest": 1159,
+    "log_top_nicks": 608,
+}
+
+#: the queries whose operators build small dimension frames from
+#: Python rows (textindex fuzzy/MLT, editdist, trgm, wildcard,
+#: percolate, BPE merges)
+LITERAL_FRAME_QUERIES = [
+    "docs_fuzzy_term_search_atrest",
+    "docs_more_like_this_atrest",
+    "docs_fuzzy_term_search",
+    "docs_trgm_search",
+    "docs_wildcard_search",
+    "docs_percolate",
+    "docs_bpe_merges",
+]
+
+
+@contextlib.contextmanager
+def _py4j_calls(monkeypatch):
+    """Yield a one-element list holding the py4j messages sent inside."""
+    orig, out = GatewayClient.send_command, [0]
+
+    def send_command(client, command, *args, **kwargs):
+        if not command.startswith(_DETACH):
+            out[0] += 1
+        return orig(client, command, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(GatewayClient, "send_command", send_command)
+        yield out
+
+
+def test_session_turns_off_dataframe_debugging(spark):
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+@pytest.mark.parametrize("name", sorted(BUDGETS))
+def test_warm_build_within_py4j_budget(spark, monkeypatch, name):
+    build = queries()[name]
+    build(spark, SF)  # cold: materializes at-rest indexes on first use
+    with _py4j_calls(monkeypatch) as calls:
+        build(spark, SF)
+    assert calls[0] <= BUDGETS[name], f"{name}: {calls[0]} py4j calls"
+
+
+@pytest.mark.parametrize("name", LITERAL_FRAME_QUERIES)
+def test_dimension_frames_are_plan_literals(spark, name):
+    """Python-row dims are LocalRelations, not LogicalRDDs: a LogicalRDD
+    re-runs a PythonRDD stage on Python workers every execution."""
+    plan = queries()[name](spark, SF)._jdf.queryExecution().analyzed().toString()
+    assert "LogicalRDD" not in plan, plan
+
+
+def test_literal_frame_matches_create_dataframe(spark):
+    """Same rows and column types as createDataFrame, quoting included;
+    no rows gives the typed empty relation."""
+    from irclogbot_spark.functions.lits import literal_frame
+
+    rows = [("it's", 2**40, 0.1), ("back\\slash `q`", None, -2.5), ("ünï\ncode", 7, None)]
+    schema = "term string, `n` long, w double"
+    got = literal_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in want.schema
+    ]
+    assert sorted(got.collect()) == sorted(want.collect())
+
+    empty = literal_frame(spark, [], "k string, m map<string,int>, d decimal(10,2)")
+    assert [f.dataType.simpleString() for f in empty.schema] == [
+        "string", "map<string,int>", "decimal(10,2)"
+    ]
+    assert empty.count() == 0

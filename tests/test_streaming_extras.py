@@ -2081,14 +2081,9 @@ def _crash_mid_delete(tmp_path, compact, *parts):
         shutil.copytree(copy, part)
 
 
-def test_corpus_compact_rerun_after_mid_delete_crash_keeps_history(spark, tmp_path):
-    """A corpus compaction that crashed after deleting some of its
-    source partitions, then re-run: history and url_index still hold
-    every admitted doc and URL (the re-run only finishes the deletes,
-    it does not rebuild the generation from the leftovers)."""
+def _three_batch_corpus(spark, corpus_dir):
     from irclogbot_spark.streaming import corpus as C
 
-    corpus_dir = tmp_path / "crawl"
     batches = [
         [(1, "https://a.com/1", "first batch page about compaction safety rules")],
         [(2, "https://b.com/2", "second batch page on generation commit markers")],
@@ -2098,12 +2093,27 @@ def test_corpus_compact_rerun_after_mid_delete_crash_keeps_history(spark, tmp_pa
         C.crawl_ingest_batch(
             spark.createDataFrame(rows, C.CRAWL_DOC_SCHEMA), i, str(corpus_dir)
         )
+
+
+def test_corpus_compact_rerun_after_mid_delete_crash_keeps_history(spark, tmp_path):
+    """A corpus compaction that crashed after deleting some of its
+    source partitions, then re-run: history and url_index still hold
+    every admitted doc and URL (the re-run only finishes the deletes,
+    it does not rebuild the generation from the leftovers). Before the
+    re-run, history() serves the committed generation and not the
+    source partition left next to it (each doc once)."""
+    from irclogbot_spark.streaming import corpus as C
+
+    corpus_dir = tmp_path / "crawl"
+    _three_batch_corpus(spark, corpus_dir)
     _crash_mid_delete(
         tmp_path,
         lambda: C.compact(spark, str(corpus_dir), upto_batch_id=2),
         corpus_dir / "history" / "batch_id=2",
         corpus_dir / "url_index" / "batch_id=2",
     )
+    assert _batch_parts(corpus_dir / "history") == ["batch_id=-3", "batch_id=2"]
+    assert sorted(r.doc_id for r in C.history(spark, str(corpus_dir)).collect()) == [1, 2, 3]
     C.compact(spark, str(corpus_dir), upto_batch_id=2)
 
     for sub in ("history", "url_index"):
@@ -2229,6 +2239,46 @@ def test_uncommitted_generation_hides_no_batch(spark, tmp_path):
     assert (text_dir / "buckets" / "gen=2" / "_SUCCESS").exists()
     assert (ann_dir / "cells" / "gen=2" / "_SUCCESS").exists()
     assert served() == want
+
+
+def test_corpus_history_skips_uncommitted_generation(spark, tmp_path):
+    """An in-place generation whose write job never committed (data
+    files but no ``_SUCCESS``) is not served: its sources still are.
+    A compaction onto that generation id rewrites and commits it."""
+    import shutil
+
+    from irclogbot_spark.streaming import corpus as C
+
+    corpus_dir = tmp_path / "crawl"
+    _three_batch_corpus(spark, corpus_dir)
+    hist = corpus_dir / "history"
+    shutil.copytree(hist / "batch_id=0", hist / "batch_id=-2")
+    (hist / "batch_id=-2" / "_SUCCESS").unlink()
+
+    def doc_ids():
+        return sorted(r.doc_id for r in C.history(spark, str(corpus_dir)).collect())
+
+    assert doc_ids() == [1, 2, 3]
+    C.compact(spark, str(corpus_dir), upto_batch_id=1)
+    assert (hist / "batch_id=-2" / "_SUCCESS").exists()
+    assert _batch_parts(hist) == ["batch_id=-2", "batch_id=2"]
+    assert doc_ids() == [1, 2, 3]
+
+
+def test_ann_index_round_trips_custom_id_and_vector_columns(spark, tmp_path):
+    """ingest_batch with caller column names stores them under the
+    store's vec_id/embedding, so load_index with the same names hands
+    back every id and vector (not nulls)."""
+    from irclogbot_spark.streaming import annindex
+
+    cents, books, rows, frame = _ann_fixture(spark)
+    index_dir = str(tmp_path / "ann")
+    batch = frame(rows[:5]).withColumnsRenamed({"vec_id": "doc", "embedding": "emb"})
+    annindex.ingest_batch(batch, 0, index_dir, cents, books, id_col="doc", vec_col="emb")
+    got = annindex.load_index(spark, index_dir, id_col="doc", vec_col="emb").collect()
+    assert sorted((r.doc, list(r.emb)) for r in got) == sorted(
+        (r.vec_id, [float(x) for x in r.embedding]) for r in rows[:5]
+    )
 
 
 def test_text_compact_with_nothing_to_fold_is_a_no_op(spark, tmp_path):
