@@ -203,7 +203,8 @@ def minhash_signature(
         # query build (measured; the incremental/minhash queries pay
         # it 2-3x per pass). One parser call builds the identical
         # expression tree.
-        hs_sql = f"transform({_shingles_sql(f'`{text}`', n)}, s -> {sql_hash('s')})"
+        quoted = "`" + text.replace("`", "``") + "`"
+        hs_sql = f"transform({_shingles_sql(quoted, n)}, s -> {sql_hash('s')})"
         lanes = ", ".join(
             f"pmod(h * CAST({a} AS BIGINT) + {b}, CAST({_MH_PRIME} AS BIGINT))"
             for a, b in perms

@@ -77,20 +77,28 @@ def read_irclog(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFra
 
 
 def write_irclog_bucketed(
-    df: DataFrame, table: str, buckets: int = 64, bucket_col: str = "channel"
+    df: DataFrame,
+    table: str,
+    buckets: int = 64,
+    bucket_col: str = "channel",
+    path: str | None = None,
 ) -> None:
     """Persist the irclog as a bucketed table: rows co-located by
     hash(bucket_col) at write time, so every later groupBy/join on
     that column reads pre-partitioned data and skips its shuffle —
     the 100 TB answer to 'we aggregate by channel constantly'.
-    (saveAsTable because bucketing metadata lives in the catalog.)"""
-    (
+    (saveAsTable because bucketing metadata lives in the catalog.)
+    With ``path`` the table is EXTERNAL at that location: DROP TABLE
+    keeps its files, and the write leaves ``_SUCCESS`` there."""
+    writer = (
         df.write.mode("overwrite")
         .bucketBy(buckets, bucket_col)
         .sortBy(bucket_col)
         .format("parquet")
-        .saveAsTable(table)
     )
+    if path is not None:
+        writer = writer.option("path", path)
+    writer.saveAsTable(table)
 
 
 #: documents-table schema for the JSONL interchange path, plus the

@@ -63,73 +63,9 @@ def raw_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     return synthesize_irc_lines(ensure_parallelism(load_table(spark, sf_dir, "events")))
 
 
-#: opt-in cache of materialized irclog frames keyed by (sf_dir,
-#: compat_id) — bench.py uses it so per-operator timings measure the
-#: operator, not a repeated synth+parse+hash of the same corpus.
-#: Never populated implicitly: every query stays self-contained for
-#: the driver's oracle comparison unless the caller opts in.
-_IRCLOG_CACHE: dict[tuple[str, bool], DataFrame] = {}
-
-
 def irclog(spark: SparkSession, sf_dir: str, compat_id: bool = False) -> DataFrame:
     """The canonical irclog table at a scale factor: synthesized raw
-    lines through the full ingest chain, event time from events.ts."""
-    cached = _IRCLOG_CACHE.get((sf_dir.rstrip("/"), compat_id))
-    if cached is not None:
-        return cached
+    lines through the full ingest chain, event time from events.ts.
+    Every call builds the whole chain; the query registry's search
+    queries read a stored copy of it instead (queries._irclog)."""
     return parse_pipeline(raw_lines(spark, sf_dir), ts_col="ts", compat_id=compat_id)
-
-
-#: memo of the lazy-checkpointed frame built by irclog_materialized,
-#: keyed by (applicationId, sf_dir, compat_id) — ADVICE r8: without
-#: it, each of the five queries sharing the materialized log built
-#: its OWN checkpoint barrier on a cold session, materializing five
-#: full parsed-log copies into block storage (reclaimed only by
-#: ContextCleaner GC). The applicationId in the key drops frames
-#: whose SparkContext has been restarted (their checkpoint RDDs are
-#: unusable in the new context).
-_MATERIALIZED_CACHE: dict[tuple[str, str, bool], DataFrame] = {}
-
-
-def irclog_materialized(
-    spark: SparkSession, sf_dir: str, compat_id: bool = False
-) -> DataFrame:
-    """irclog() behind a lazy materialization barrier — the plan a
-    STORED log gives you: queries that branch the log (union arms,
-    key-agg + probe) or filter on parse-derived columns evaluate the
-    synth+parse+hash chain ONCE instead of once per branch / once per
-    pushed-down predicate re-derivation (round 8: log_term_time_filter
-    7.1->1.8s, log_point_lookup 8.6->2.2s at sf0.1 — Catalyst was
-    re-running the PRIVMSG regex chain per consumer). When the bench's
-    session cache is active the pinned frame already IS materialized,
-    so no extra barrier is added. The checkpointed frame is memoized
-    per (application, sf_dir, compat_id) so consumers in one session
-    share ONE materialized copy."""
-    key = (sf_dir.rstrip("/"), compat_id)
-    cached = _IRCLOG_CACHE.get(key)
-    if cached is not None:
-        return cached
-    mkey = (spark.sparkContext.applicationId, *key)
-    memo = _MATERIALIZED_CACHE.get(mkey)
-    if memo is None:
-        memo = irclog(spark, sf_dir, compat_id).localCheckpoint(eager=False)
-        _MATERIALIZED_CACHE[mkey] = memo
-    return memo
-
-
-def cache_irclog(spark: SparkSession, sf_dir: str, compat_id: bool = False) -> DataFrame:
-    """Materialize and pin the irclog for a scale factor; subsequent
-    irclog() calls reuse it until uncache_irclog()."""
-    key = (sf_dir.rstrip("/"), compat_id)
-    if key not in _IRCLOG_CACHE:
-        df = parse_pipeline(raw_lines(spark, sf_dir), ts_col="ts", compat_id=compat_id)
-        df = df.persist()
-        df.count()
-        _IRCLOG_CACHE[key] = df
-    return _IRCLOG_CACHE[key]
-
-
-def uncache_irclog() -> None:
-    for df in _IRCLOG_CACHE.values():
-        df.unpersist()
-    _IRCLOG_CACHE.clear()

@@ -23,12 +23,20 @@ SF = "/root/testdata/sf0.001"
 _DETACH = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
 
 #: warm-build py4j messages per query: the measured count plus 25%
-#: (333, 927 and 486 at sf0.001, local[4])
+#: (at sf0.001, local[4]: docs_bm25_atrest 333, docs_multi_match_atrest
+#: 927, log_top_nicks 52 and log_msgs_per_channel_day 58 on the stored
+#: log, docs_backoff_surprisal 4502)
 BUDGETS = {
     "docs_bm25_atrest": 416,
     "docs_multi_match_atrest": 1159,
-    "log_top_nicks": 608,
+    "log_top_nicks": 65,
+    "log_msgs_per_channel_day": 72,
+    "docs_backoff_surprisal": 5627,
 }
+
+#: searches over the irclog that must read the stored log, not run
+#: the parse chain
+STORED_LOG_QUERIES = ["log_top_nicks", "log_msgs_per_channel_day"]
 
 #: the queries whose operators build small dimension frames from
 #: Python rows (textindex fuzzy/MLT, editdist, trgm, wildcard,
@@ -70,6 +78,19 @@ def test_warm_build_within_py4j_budget(spark, monkeypatch, name):
     with _py4j_calls(monkeypatch) as calls:
         build(spark, SF)
     assert calls[0] <= BUDGETS[name], f"{name}: {calls[0]} py4j calls"
+
+
+@pytest.mark.parametrize("name", STORED_LOG_QUERIES)
+def test_search_reads_the_stored_log(spark, name):
+    """No parse chain in the optimized plan — no PRIVMSG regex (the
+    RLIKE match gate, regexp_extract) and no sha2 id — and every input
+    file is the stored log's, none the events table's."""
+    df = queries()[name](spark, SF)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    for marker in ("regexp_extract", "sha2", "RLIKE"):
+        assert marker not in plan, f"{name}: {marker} in\n{plan}"
+    files = df.inputFiles()
+    assert files and all("/sparklog_irclog_" in f for f in files), files
 
 
 @pytest.mark.parametrize("name", LITERAL_FRAME_QUERIES)

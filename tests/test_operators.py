@@ -248,6 +248,22 @@ def test_minhash_portable_hash_is_equivalent_machinery(spark, docs):
     assert len(mh) >= 0.9 * len(exact), f"recall {len(mh)}/{len(exact)}"
 
 
+@pytest.mark.parametrize("hash_fn", [dedup.xxhash31, dedup.md5_hash31])
+def test_minhash_sql_path_quotes_backticked_column(spark, hash_fn):
+    """A column name holding a backtick goes through the SQL-text fast
+    path (name given as a string) with its backtick doubled, and
+    signs exactly as the Column path does."""
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over"), (2, "lazy dogs sleep all day long")],
+        "id long, `te``xt` string",
+    )
+    fast = dedup.minhash_signature("te`xt", num_perm=8, hash_fn=hash_fn)
+    slow = dedup.minhash_signature(F.col("`te``xt`"), num_perm=8, hash_fn=hash_fn)
+    rows = df.select("id", fast.alias("a"), slow.alias("b")).collect()
+    assert len(rows) == 2
+    assert all(r.a == r.b and r.a is not None for r in rows)
+
+
 def test_ivf_trainer_matches_driver_replica_exactly(spark, emb):
     """The distributed trainer is a pure function of the corpus
     (integer-quantized accumulation): the driver-side replica that

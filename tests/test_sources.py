@@ -125,6 +125,22 @@ def test_bucketed_table_elides_shuffle_on_bucket_column(spark, sf_dir, tmp_path)
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
+def _drop_artifacts(spark, kind: str, table: bool = False) -> None:
+    """Remove this process's registry artifacts of ``kind`` and their
+    memo entries; with ``table``, also drop the external table named
+    after each path (DROP keeps an external table's files)."""
+    import os
+    import shutil
+
+    from irclogbot_spark.queries import _ARTIFACTS
+
+    for key in [k for k in _ARTIFACTS if k[1] == kind]:
+        path = _ARTIFACTS.pop(key)
+        if table:
+            spark.sql(f"DROP TABLE IF EXISTS {os.path.basename(path)}")
+        shutil.rmtree(path, ignore_errors=True)
+
+
 def test_log_channel_day_bucketed_query_no_exchange_and_value_equal(spark, sf_dir):
     """The driver-checked bucketed-layout query: zero Exchange in the
     whole plan (HashPartitioning(channel) satisfies the (channel,
@@ -148,11 +164,7 @@ def test_log_channel_day_bucketed_query_no_exchange_and_value_equal(spark, sf_di
             map(tuple, scan.collect()), key=lambda t: t[:2]
         )
     finally:
-        from irclogbot_spark.queries import _BUCKETED_IRCLOG
-
-        for tbl in _BUCKETED_IRCLOG.values():
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        _BUCKETED_IRCLOG.clear()
+        _drop_artifacts(spark, "irclog_bkt", table=True)
 
 
 def test_log_term_time_partitioned_prunes_and_value_equal(spark, sf_dir):
@@ -162,7 +174,7 @@ def test_log_term_time_partitioned_prunes_and_value_equal(spark, sf_dir):
     import re
 
     import __spark_entry__  # noqa: F401
-    from irclogbot_spark.queries import QUERIES, _PARTITIONED_IRCLOG
+    from irclogbot_spark.queries import QUERIES
 
     try:
         got = QUERIES["log_term_time_partitioned"](spark, sf_dir)
@@ -178,11 +190,7 @@ def test_log_term_time_partitioned_prunes_and_value_equal(spark, sf_dir):
             map(tuple, scan.collect())
         )
     finally:
-        import shutil
-
-        for p in _PARTITIONED_IRCLOG.values():
-            shutil.rmtree(p, ignore_errors=True)
-        _PARTITIONED_IRCLOG.clear()
+        _drop_artifacts(spark, "irclog_byday")
 
 
 def test_table_cache_invalidate_table(spark, tmp_path):
