@@ -201,8 +201,8 @@ HEADLINE = [
     # re-executes the bucket-pruned search per page (the ES
     # semantics), so it carries two full ranking executions
     "docs_bm25_search_after_atrest",
-    # round 11: the bool query's at-rest path (pivot agg + doclens
-    # join over the probed buckets)
+    # round 11: the bool query's at-rest path (pivot agg over the
+    # probed buckets, dl from the posting rows)
     "docs_bool_search_atrest",
     "docs_dis_max_search_atrest",
     "docs_boosting_search_atrest",

@@ -7,6 +7,8 @@ each has an exact ANSI-SQL twin for the DuckDB oracle.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -228,15 +230,109 @@ def bm25_rank_indexed(
 
     Scale shape: the postings scan carries an ``term IN (...)``
     filter (partition/row-group pruning at rest — the corpus text is
-    never touched); per-term df is a tiny aggregate over the
-    filtered postings; corpus stats (n, avgdl) broadcast from the
-    narrow doclens table; the hit set joins doclens on the id key;
-    top-k is a partial TakeOrdered."""
+    never touched); the corpus stats (n, dl sum, per-term df) are
+    plain values — read from an at-rest index's meta and vocab
+    sidecars (operators/textindex.py), or collected once from
+    in-session frames (:func:`frame_stats`); dl comes from the
+    postings row when the index stores it (an in-session
+    ``build_text_index`` frame joins doclens on the id); top-k is a
+    partial TakeOrdered."""
     return (
         bm25_scores_indexed(postings, doclens, terms, id_col, k1, b)
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
     )
+
+
+@dataclass(frozen=True)
+class Bm25Stats:
+    """Collection statistics of one indexed field as plain values:
+    the document count, the integer sum of document lengths, and the
+    document frequency of each probed term (a term missing from
+    ``df`` has no postings)."""
+
+    n_docs: int
+    dl_sum: int
+    df: dict
+
+    @property
+    def avgdl(self) -> float:
+        """The integer dl sum divided once: the same IEEE division as
+        the scan form's ``cast(sum(dl) as double) / count(1)``, so
+        indexed and scan scores stay bit-identical. An empty index
+        has no postings to score, so its 0.0 is never used."""
+        return float(self.dl_sum) / self.n_docs if self.n_docs else 0.0
+
+    def columns(
+        self, terms: list[str], n: str = "n", avgdl: str = "avgdl", df: str = "df{i}"
+    ) -> list[Column]:
+        """The statistics as literal columns named for the score
+        expressions: ``n``, ``avgdl`` and one ``df`` per term (``df``
+        is a template over the term's index ``i``)."""
+        return [
+            F.lit(self.n_docs).alias(n),
+            F.lit(self.avgdl).alias(avgdl),
+            *[
+                F.lit(self.df.get(t, 0)).alias(df.format(i=i))
+                for i, t in enumerate(terms)
+            ],
+        ]
+
+
+def frame_stats(hits, doclens) -> Bm25Stats:
+    """:class:`Bm25Stats` of in-session or streamed index frames: one
+    aggregate over ``doclens`` and one per-term count over ``hits``
+    (the postings of the probed terms), both collected. A postings
+    row exists iff tf > 0, so the count is the df."""
+    row = doclens.agg(
+        F.count(F.lit(1)).alias("n"), F.sum("dl").cast("long").alias("s")
+    ).first()
+    dfs = hits.groupBy("term").agg(F.count(F.lit(1)).alias("df")).collect()
+    return Bm25Stats(int(row.n), int(row.s or 0), {r.term: int(r.df) for r in dfs})
+
+
+def bm25_term_frame(hits, terms: list[str], stats: Bm25Stats, id_col: str = "doc_id"):
+    """One row per doc with >= 1 hit: ``tf<i>`` per term (0 where the
+    doc misses it), ``dl`` (read from the postings rows — every row
+    of a doc carries the same value) and the statistics as literal
+    ``n``, ``avgdl`` and ``df<i>`` columns. ``hits`` carries
+    (id, term, tf, dl); one doc-keyed aggregation, no joins."""
+    pivot = hits.groupBy(id_col).agg(
+        *[
+            F.coalesce(
+                F.max(F.when(F.col("term") == t, F.col("tf"))), F.lit(0)
+            ).alias(f"tf{i}")
+            for i, t in enumerate(terms)
+        ],
+        F.max("dl").alias("dl"),
+    )
+    return pivot.select("*", *stats.columns(terms))
+
+
+def bm25_scores(
+    hits,
+    terms: list[str],
+    stats: Bm25Stats,
+    id_col: str = "doc_id",
+    k1: float = 1.2,
+    b: float = 0.75,
+):
+    """The indexed BM25 score assembly: (id, score) for every doc in
+    ``hits`` (id, term, tf, dl), the per-term scores of
+    :func:`bm25_term_frame`'s columns added IN TERM ORDER — the scan
+    form's fixed expression tree, so the doubles agree bit for bit
+    (a term the doc misses scores the same +0.0 either way)."""
+    if not terms:
+        raise ValueError("terms must be non-empty")
+    j = bm25_term_frame(hits, terms, stats, id_col)
+    score = None
+    for i in range(len(terms)):
+        s = bm25_term_score(
+            F.col(f"tf{i}"), F.col(f"df{i}"), F.col("n"), F.col("avgdl"),
+            F.col("dl"), k1, b,
+        )
+        score = s if score is None else score + s
+    return j.select(F.col(id_col), score.alias("score"))
 
 
 def bm25_scores_indexed(
@@ -247,43 +343,19 @@ def bm25_scores_indexed(
     k1: float = 1.2,
     b: float = 0.75,
 ):
-    """The UNCUT (id, score) frame behind ``bm25_rank_indexed`` —
-    every doc with >= 1 query-term hit, scored with the identical
-    fixed-order double assembly (round 11: factored out so keyset
-    pagination — operators/textindex.py bm25_search_after_atrest —
-    can apply a cursor predicate before its own TakeOrdered cut
-    instead of re-ranking through a window)."""
+    """The UNCUT (id, score) frame behind ``bm25_rank_indexed`` for
+    in-session or streamed frames: the statistics are collected from
+    the frames (:func:`frame_stats`), then :func:`bm25_scores` runs.
+    Postings without a ``dl`` column (``build_text_index``) join it
+    from doclens on the id. An at-rest index reads its stored
+    statistics instead (operators/textindex.py bm25_scores_atrest)."""
     if not terms:
         raise ValueError("terms must be non-empty")
-    p = postings.filter(F.col("term").isin(list(terms)))
-    dfreq = p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    stats = doclens.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    hits = (
-        p.join(F.broadcast(dfreq), "term")
-        .join(doclens, id_col)
-        .join(F.broadcast(stats))
-    )
-    term_score = bm25_term_score(
-        F.col("tf"), F.col("df"), F.col("n"), F.col("avgdl"), F.col("dl"), k1, b
-    )
-    per_term = hits.select(F.col(id_col), F.col("term"), term_score.alias("_s"))
-    # re-add the per-term scores in the scan form's term order: one
-    # conditional max per term (a doc matches a term at most once),
-    # then the same fixed-order addition chain
-    agg = per_term.groupBy(id_col).agg(
-        *[
-            F.max(F.when(F.col("term") == t, F.col("_s"))).alias(f"_s{i}")
-            for i, t in enumerate(terms)
-        ]
-    )
-    score = None
-    for i in range(len(terms)):
-        s = F.coalesce(F.col(f"_s{i}"), F.lit(0.0))
-        score = s if score is None else score + s
-    return agg.select(F.col(id_col), score.alias("score"))
+    hits = postings.filter(F.col("term").isin(list(terms)))
+    stats = frame_stats(hits, doclens)
+    if "dl" not in hits.columns:
+        hits = hits.join(doclens.select(id_col, "dl"), id_col)
+    return bm25_scores(hits, terms, stats, id_col, k1, b)
 
 
 def vocab_coverage(
@@ -736,13 +808,16 @@ def phrase_search(
 
 
 def build_positional_index(df, id_col: str = "doc_id", text_col: str = "text"):
-    """Positional postings — (id, term, positions array<int>) — the
+    """Positional postings — (id, term, positions array<int>, dl) — the
     index form that serves PHRASE and proximity queries without
     touching document text (ES stores exactly this: term positions
     per doc). MAP-ONLY like build_text_index: per-row higher-order
     functions compute each distinct term's 1-based position list,
     exploded without any exchange; tf is ``size(positions)``, so
-    this index strictly generalizes the (id, term, tf) one.
+    this index strictly generalizes the (id, term, tf) one. Every
+    row carries its document's token count ``dl``, taken in-row
+    before the explode, so BM25 reads dl from the posting (as Lucene
+    reads norms) instead of joining a doclens table.
 
     At rest a deployment writes it partitioned/bucketed BY TERM
     (the write_trgm_index layout) so a phrase probe's
@@ -763,10 +838,13 @@ def build_positional_index(df, id_col: str = "doc_id", text_col: str = "text"):
             ).alias("positions"),
         ),
     )
-    return toks.select(F.col(id_col), F.explode(entries).alias("_e")).select(
+    return toks.select(
+        F.col(id_col), F.size("_toks").alias("dl"), F.explode(entries).alias("_e")
+    ).select(
         id_col,
         F.col("_e.term").alias("term"),
         F.col("_e.positions").alias("positions"),
+        "dl",
     )
 
 

@@ -23,8 +23,9 @@ bool semantics (the ES contract, reproduced exactly):
 - ``filter``: non-scoring gate. Modeled as a token-length range
   over the same dl the BM25 norm uses (the ES deployment shape is a
   numeric/date range over a doc-values field; dl is the one numeric
-  field both the corpus scan AND the at-rest doclens table carry,
-  so both physical paths serve the identical clause).
+  field both the corpus scan AND the at-rest index carry — in its
+  doclens table and in every posting row — so both physical paths
+  serve the identical clause).
 - ``must_not``: the doc must contain none of these terms;
   contributes no score (ES executes it as a filter-context
   exclusion).
@@ -54,9 +55,10 @@ Scale shape (both query types, both physical paths):
   referenced terms (literal crc32 bucket list -> PartitionFilters —
   a bool must_not term's postings are READ, bucket-pruned, and used
   as an in-pivot exclusion; the corpus text is never touched); one
-  doc-keyed pivot aggregation reassembles per-doc tf columns; dl
-  joins from the narrow doclens table; stats and df broadcast.
-  Exactly one corpus-hit-sized exchange.
+  doc-keyed pivot aggregation reassembles per-doc tf columns and
+  the dl each posting row carries; n, avgdl and df are literals
+  from the index's stored statistics (meta + vocab sidecars).
+  Exactly one corpus-hit-sized exchange, and no stats aggregate.
 """
 
 from __future__ import annotations
@@ -183,54 +185,30 @@ def _term_frame_atrest(
     spark: SparkSession,
     path: str,
     ref: list[str],
-    n_scoring: int,
     id_col: str,
     index: tuple | None = None,
 ) -> DataFrame:
     """The same frame reassembled from the at-rest index: one
-    bucket-pruned postings probe over every referenced term, a
-    doc-keyed pivot agg, dl from doclens, stats + per-term df
-    broadcast. df per term from the probed postings equals the
-    scan's tf>0 count because a postings row exists iff tf > 0.
-    Docs with zero referenced-term hits are absent — every compound
-    gate requires >= 1 scoring hit, so the hit sets agree."""
-    from irclogbot_spark.operators.textindex import (
-        postings_tf,
-        probe_postings,
-        read_text_index,
-    )
+    bucket-pruned postings probe over every referenced term and one
+    doc-keyed pivot agg (functions/text.py bm25_term_frame), with dl
+    read from the posting rows and n, avgdl and per-term df as
+    literals from the index's stored statistics. The stored df
+    equals the scan's tf>0 count because a postings row exists iff
+    tf > 0. Docs with zero referenced-term hits are absent — every
+    compound gate requires >= 1 scoring hit, so the hit sets agree.
 
-    # ``index``: pre-loaded (pidx, doclens, n_buckets) frames — the
-    # streamed-index form (streaming/textindex.py load_text returns
-    # frames, not a directory; generation layouts carry no single
-    # path). Path form reads the one-shot artifact.
-    pidx, doclens, n_buckets = index if index is not None else read_text_index(spark, path)
-    p = postings_tf(probe_postings(pidx, ref, n_buckets), id_col)
-    pivot = p.groupBy(id_col).agg(
-        *[
-            F.coalesce(
-                F.max(F.when(F.col("term") == t, F.col("tf"))), F.lit(0)
-            ).alias(f"tf{i}")
-            for i, t in enumerate(ref)
-        ]
+    ``index``: pre-loaded (pidx, doclens, n_buckets) frames — the
+    streamed-index form (streaming/textindex.py load_text returns
+    frames, not a directory; generation layouts carry no single
+    path), whose stats are collected from the frames. Path form
+    reads the one-shot artifact."""
+    from irclogbot_spark.functions.text import bm25_term_frame
+    from irclogbot_spark.operators.textindex import probe_indexes
+
+    [(hits, stats)] = probe_indexes(
+        spark, [index if index is not None else path], ref, id_col
     )
-    dfreq = p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    stats = doclens.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    dfrow = dfreq.groupBy().pivot("term", ref).agg(F.first("df"))
-    dfrow = dfrow.select(
-        *[
-            F.coalesce(F.col(f"`{t}`"), F.lit(0)).alias(f"df{i}")
-            for i, t in enumerate(ref[:n_scoring])
-        ]
-    )
-    return (
-        pivot.join(doclens, id_col)
-        .join(F.broadcast(stats))
-        .join(F.broadcast(dfrow))
-    )
+    return bm25_term_frame(hits, ref, stats, id_col)
 
 
 def _bool_project(
@@ -332,9 +310,7 @@ def bool_search_atrest(
     msm = _resolve_msm(minimum_should_match, must, should)
     ref = must + should + must_not
     _check_no_duplicate_terms(ref)
-    j = _term_frame_atrest(
-        spark, path, ref, len(must) + len(should), id_col, index
-    )
+    j = _term_frame_atrest(spark, path, ref, id_col, index)
     return _bool_project(
         j, must, should, must_not, msm, dl_between, k, id_col, k1, b
     )
@@ -411,9 +387,7 @@ def dis_max_search_atrest(
     if not terms:
         raise ValueError("dis_max needs at least one term")
     _check_no_duplicate_terms(list(terms))
-    j = _term_frame_atrest(
-        spark, path, list(terms), len(terms), id_col, index
-    )
+    j = _term_frame_atrest(spark, path, list(terms), id_col, index)
     return _dis_max_project(j, list(terms), tie_breaker, k, id_col, k1, b)
 
 
@@ -501,7 +475,7 @@ def boosting_search_atrest(
         raise ValueError("boosting needs at least one positive term")
     ref = list(positive) + list(negative or [])
     _check_no_duplicate_terms(ref)
-    j = _term_frame_atrest(spark, path, ref, len(positive), id_col, index)
+    j = _term_frame_atrest(spark, path, ref, id_col, index)
     return _boosting_project(
         j, list(positive), list(negative or []), negative_boost, k, id_col, k1, b
     )
@@ -699,7 +673,7 @@ def terms_set_search_atrest(
     if not terms:
         raise ValueError("terms_set needs at least one term")
     _check_no_duplicate_terms(list(terms))
-    j = _term_frame_atrest(spark, path, list(terms), len(terms), id_col, index)
+    j = _term_frame_atrest(spark, path, list(terms), id_col, index)
     j = j.join(corpus.select(id_col, msm_col), id_col)
     return _terms_set_project(j, list(terms), msm_col, k, id_col, k1, b)
 
@@ -1048,7 +1022,7 @@ def function_score_search_atrest(
         raise ValueError("function_score needs at least one term")
     _check_no_duplicate_terms(list(terms))
     fields = sorted({s["field"] for s in functions if "field" in s})
-    j = _term_frame_atrest(spark, path, list(terms), len(terms), id_col, index)
+    j = _term_frame_atrest(spark, path, list(terms), id_col, index)
     if fields:
         j = j.join(corpus.select(id_col, *fields), id_col)
     return _function_score_project(

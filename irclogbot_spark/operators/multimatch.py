@@ -61,12 +61,12 @@ Scale shape:
   map-side expressions; top-k is a partial TakeOrdered. Zero corpus
   shuffles — identical to the boolquery.py scan contract.
 - multi_match at-rest form: one bucket-pruned postings probe PER
-  FIELD INDEX (a field is its own index, as in ES), one hit-sized
-  pivot per field, per-field stats broadcast; the per-field score
-  frames full-outer-join on the id (hit-sized — a doc appears only
-  under fields it hits; a missing field contributes exactly 0.0, the
-  same value its tf=0 scan expression yields, so the two physical
-  forms stay bit-identical).
+  FIELD INDEX (a field is its own index, as in ES), ONE hit-sized
+  pivot over the union of the field probes (dl read from the posting
+  rows), per-field stats as literals from each index's stored
+  statistics (a doc appears only under fields it hits; a missing
+  field contributes exactly 0.0, the same value its tf=0 scan
+  expression yields, so the two physical forms stay bit-identical).
 - match_phrase_prefix scan form: the prefix expansion is a
   term-type-sized distinct (Heaps-sublinear) cut to max_expansions
   by a total order; candidate starts are found in-row (the
@@ -343,34 +343,28 @@ def multi_match_best_fields_atrest(
     directory ([(field, path), ...] or dict in declaration order);
     ``boosts`` maps field -> boost; ``indexes`` optionally injects
     pre-loaded (pidx, doclens, n_buckets) frames per field (the
-    streamed-index form); ``mm_type`` / ``operator`` as in the scan
-    form (operator="and" is a map-side filter over the grouped
-    pivot's tf_<field>_<i> columns — a term matches a field where its
-    tf > 0 — applied after the doclens/stats joins: no extra
-    exchange, and the pivot's union hit set is a superset of the
-    docs the gate keeps).
+    streamed-index form, whose statistics are collected from the
+    frames); ``mm_type`` / ``operator`` as in the scan form
+    (operator="and" is a map-side filter over the grouped pivot's
+    tf_<field>_<i> columns — a term matches a field where its
+    tf > 0 — applied after the pivot: no extra exchange, and the
+    pivot's union hit set is a superset of the docs the gate keeps).
 
     ONE grouped pivot serves every field and every mm_type (round-14
     optimization, VERDICT r13 next #9; guide §2.4): the per-field
-    probe hits union into a single (id, field, term, tf) frame and
-    ONE doc-keyed aggregation produces all tf_<field>_<i> columns —
-    replacing the former per-field pivot exchanges plus their
-    full-outer id-join chain with a single id-keyed exchange. Each
-    field's doclens then left-joins dl_<field> (coalesced to 0; a
-    doc absent from a field's hit set has tf=0 everywhere, and BM25
-    at tf=0 is exactly +0.0 regardless of dl — the same value its
-    scan expression yields — so bit-identity with the scan form
-    holds), and each field's 1-row stats / df frames broadcast onto
-    the joined frame. Per-field corpus sizes stay per-field
-    (n_<field>) for the field-centric types; cross_fields carries n
-    once (every field's doclens covers the same corpus). Assumes the
-    write_text_index invariant that a doc with a posting has a
-    doclens row (postings ⊆ doclens)."""
-    from irclogbot_spark.operators.textindex import (
-        postings_tf,
-        probe_postings,
-        read_text_index,
-    )
+    probe hits union into a single (id, field, term, tf, dl) frame
+    and ONE doc-keyed aggregation produces all tf_<field>_<i> and
+    dl_<field> columns — dl is read from the posting rows, so no
+    doclens table is joined. A doc absent from a field's hit set gets
+    tf=0 and dl=0 there, and BM25 at tf=0 is exactly +0.0 regardless
+    of dl — the same value its scan expression yields — so
+    bit-identity with the scan form holds. Each field's statistics
+    (n_<field>, avgdl_<field>, df_<field>_<i>) are literals from its
+    index's stored meta and vocab sidecars, read for all fields in
+    one vocab collect (textindex.py probe_indexes); cross_fields
+    carries n once, from the first field (every field's index covers
+    the same corpus)."""
+    from irclogbot_spark.operators.textindex import probe_indexes
 
     if mm_type not in MM_TYPES:
         raise ValueError(f"unknown multi_match type {mm_type!r}")
@@ -381,50 +375,19 @@ def multi_match_best_fields_atrest(
     _check_no_duplicate_terms(list(terms))
     path_pairs = list(paths.items()) if isinstance(paths, dict) else list(paths)
     pairs = _norm_fields([(f, dict(boosts)[f]) for f, _ in path_pairs])
-
-    hit_frames: list[DataFrame] = []
-    dl_frames: list[DataFrame] = []
-    stats_frames: list[DataFrame] = []
-    df_frames: list[DataFrame] = []
-    for fi, (fname, path) in enumerate(path_pairs):
-        pidx, doclens, n_buckets = (
-            indexes[fname]
-            if indexes is not None and fname in indexes
-            else read_text_index(spark, path)
-        )
-        p = postings_tf(probe_postings(pidx, list(terms), n_buckets), id_col)
-        hit_frames.append(
-            p.select(F.col(id_col), F.lit(fi).alias("_f"), "term", "tf")
-        )
-        dfreq = p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        dfrow = dfreq.groupBy().pivot("term", list(terms)).agg(F.first("df"))
-        dfrow = dfrow.select(
-            *[
-                F.coalesce(F.col(f"`{t}`"), F.lit(0)).alias(f"df_{fname}_{i}")
-                for i, t in enumerate(terms)
-            ]
-        )
-        # every field's doclens covers the whole corpus, so
-        # cross_fields carries n once (first field); the field-
-        # centric types keep their own copy as n_<field> (field
-        # scores are self-contained)
-        stat_cols = [
-            (F.sum("dl").cast("double") / F.count(F.lit(1))).alias(
-                f"avgdl_{fname}"
-            )
-        ]
-        if mm_type != "cross_fields":
-            stat_cols.append(F.count(F.lit(1)).alias(f"n_{fname}"))
-        elif fi == 0:
-            stat_cols.append(F.count(F.lit(1)).alias("n"))
-        stats_frames.append(doclens.agg(*stat_cols))
-        df_frames.append(dfrow)
-        dl_frames.append(
-            doclens.select(F.col(id_col), F.col("dl").alias(f"dl_{fname}"))
-        )
-    hits = hit_frames[0]
-    for nxt in hit_frames[1:]:
-        hits = hits.unionByName(nxt)
+    probed = probe_indexes(
+        spark,
+        [
+            indexes[fname] if indexes is not None and fname in indexes else path
+            for fname, path in path_pairs
+        ],
+        list(terms),
+        id_col,
+    )
+    hits = None
+    for fi, (h, _stats) in enumerate(probed):
+        h = h.select(F.col(id_col), F.lit(fi).alias("_f"), "term", "tf", "dl")
+        hits = h if hits is None else hits.unionByName(h)
     # ONE doc-keyed pivot for all fields: the union hit set IS the
     # union of the per-field hit sets, and a (field, term) the doc
     # missed aggregates to the same coalesced 0 the per-field pivots
@@ -441,16 +404,20 @@ def multi_match_best_fields_atrest(
             ).alias(f"tf_{fname}_{i}")
             for fi, (fname, _) in enumerate(path_pairs)
             for i, t in enumerate(terms)
-        ]
+        ],
+        *[
+            F.coalesce(F.max(F.when(F.col("_f") == fi, F.col("dl"))), F.lit(0)).alias(
+                f"dl_{fname}"
+            )
+            for fi, (fname, _) in enumerate(path_pairs)
+        ],
     )
-    for fi, (fname, _) in enumerate(path_pairs):
-        joined = joined.join(dl_frames[fi], id_col, "left").withColumn(
-            f"dl_{fname}", F.coalesce(F.col(f"dl_{fname}"), F.lit(0))
+    stat_cols = [F.lit(probed[0][1].n_docs).alias("n")]
+    for (fname, _), (_h, stats) in zip(path_pairs, probed):
+        stat_cols += stats.columns(
+            list(terms), f"n_{fname}", f"avgdl_{fname}", f"df_{fname}_{{i}}"
         )
-    for s in stats_frames:
-        joined = joined.join(F.broadcast(s))
-    for d in df_frames:
-        joined = joined.join(F.broadcast(d))
+    joined = joined.select("*", *stat_cols)
     if mm_type == "cross_fields":
         if operator == "and":
             # term-centric AND over the joined raw frame: every term

@@ -1,14 +1,31 @@
 """At-rest text index — the ES index as a storage artifact.
 
 One persisted artifact serves every term-level query type the engine
-exposes: POSITIONAL postings (id, term, positions — strictly more
+exposes: POSITIONAL postings (id, term, positions, dl — strictly more
 general than (id, term, tf): tf = size(positions)) PARTITIONED by a
-crc32 term bucket, plus the narrow doclens table. The layout mirrors
+crc32 term bucket, beside the narrow doclens table. The layout mirrors
 operators/trgm.py's bucketed posting convention (round 8): literal
 probe terms compute their bucket list DRIVER-side (zlib.crc32 is
 bit-identical to Spark's `crc32`), so an exact-term probe — BM25,
 match_phrase, span_near — reads only the probed bucket directories
-(storage-level PartitionFilters), never the whole index.
+(storage-level PartitionFilters), never the whole index. The files:
+
+    <path>/postings/term_bkt=K/   (id, term, positions, dl)
+    <path>/doclens/               (id, dl)
+    <path>/vocab/                 (term, df, freq)
+    <path>/_text_index_meta.json  n_buckets, id_col, format,
+                                  n_docs, dl_sum
+
+BM25 statistics are written with the index, as Lucene keeps them in
+its segments: every posting row carries its document's length ``dl``
+(Lucene's norms), the meta sidecar holds the document count
+``n_docs`` and the integer length sum ``dl_sum``, and the ``vocab``
+sidecar holds each term's ``df``. A BM25 probe reads them as plain
+values (:func:`probe_indexes`) — it neither re-aggregates doclens nor
+joins it. ``format`` (:data:`INDEX_FORMAT`) marks this layout; a
+reader that finds an index without it raises rather than quietly
+recomputing the statistics. doclens stays for the filter-only
+dl-range clauses (querystring, constant_score).
 
 Pruning boundary (round 10 closes the round-9 asymmetry): FUZZY and
 more_like_this cannot bucket-prune their TERM DISCOVERY — fuzzy
@@ -30,15 +47,24 @@ from __future__ import annotations
 
 import os
 import zlib
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from irclogbot_spark.artifacts import write_meta
 from irclogbot_spark.functions.lits import literal_frame
-from irclogbot_spark.functions.text import build_positional_index
+from irclogbot_spark.functions.text import (
+    Bm25Stats,
+    bm25_scores,
+    build_positional_index,
+    frame_stats,
+)
 
 META_NAME = "_text_index_meta.json"
+#: the index layout: dl in the postings rows, n_docs and dl_sum in the
+#: meta sidecar (an index without it predates the stored statistics)
+INDEX_FORMAT = 2
 
 
 def py_term_bucket(term: str, n_buckets: int) -> int:
@@ -59,38 +85,62 @@ def write_text_index(
     text_col: str = "text",
     n_buckets: int = 64,
 ) -> None:
-    """Persist the positional postings partitioned by term bucket
-    (bounded directory fan-out regardless of vocabulary size) and
-    the doclens table; a sidecar JSON records n_buckets so probes
-    recompute the same buckets."""
-    pidx = build_positional_index(df, id_col, text_col).withColumn(
-        "term_bkt", term_bucket_col("term", n_buckets)
-    )
-    pidx.write.partitionBy("term_bkt").mode("overwrite").parquet(
-        os.path.join(path, "postings")
-    )
+    """Persist the index (layout in the module docstring): doclens
+    first, then the positional postings partitioned by term bucket
+    (bounded directory fan-out regardless of vocabulary size), each
+    row carrying its document's dl taken in-row before the explode,
+    then the vocab, and last the meta sidecar — n_buckets (so probes
+    recompute the same buckets), id_col, ``format`` and the
+    collection statistics ``n_docs`` / ``dl_sum`` of the doclens just
+    written."""
+    spark = df.sparkSession
     # NULL text -> dl=0 (round 13): size(tokenize(NULL)) is -1, which
     # would poison this field's avgdl; the scan forms coalesce NULL
     # fields to '' (multimatch.py, per ADVICE r12), so the at-rest
-    # doclens must agree for scan/at-rest bit-identity
+    # doclens must agree for scan/at-rest bit-identity. A NULL text
+    # has no postings, so its dl never reaches a posting row.
     toks = F.regexp_extract_all(
         F.coalesce(F.col(text_col), F.lit("")), F.lit(r"\S+"), F.lit(0)
     )
     df.select(F.col(id_col), F.size(toks).alias("dl")).write.mode(
         "overwrite"
     ).parquet(os.path.join(path, "doclens"))
+    stats = (
+        spark.read.parquet(os.path.join(path, "doclens"))
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").cast("long").alias("s"))
+        .first()
+    )
+    postings = os.path.join(path, "postings")
+    pidx = build_positional_index(df, id_col, text_col)
+    pidx.withColumn("term_bkt", term_bucket_col("term", n_buckets)).write.partitionBy(
+        "term_bkt"
+    ).mode("overwrite").parquet(postings)
+    if not stats.n:
+        # an empty corpus writes no bucket directory: one empty file in
+        # bucket 0 keeps the postings schema readable
+        spark.createDataFrame([], pidx.schema).write.parquet(
+            os.path.join(postings, "term_bkt=0")
+        )
     # term dictionary (round 10 — ES's term dict/FST analog): the
     # (term, df) vocabulary, derived from the just-written postings
     # (an at-rest scan — no re-tokenize). Fuzzy walks THIS instead
     # of the full postings; matched types then bucket-prune the
-    # postings fetch. Term-type-sized (Heaps-sublinear).
-    spark = df.sparkSession
-    spark.read.parquet(os.path.join(path, "postings")).groupBy("term").agg(
+    # postings fetch; BM25 reads its df from it. Term-type-sized
+    # (Heaps-sublinear).
+    spark.read.parquet(postings).groupBy("term").agg(
         F.count(F.lit(1)).alias("df"),
         F.sum(F.size("positions")).cast("long").alias("freq"),
     ).write.mode("overwrite").parquet(os.path.join(path, "vocab"))
     write_meta(
-        spark, os.path.join(path, META_NAME), {"n_buckets": n_buckets, "id_col": id_col}
+        spark,
+        os.path.join(path, META_NAME),
+        {
+            "n_buckets": n_buckets,
+            "id_col": id_col,
+            "format": INDEX_FORMAT,
+            "n_docs": int(stats.n),
+            "dl_sum": int(stats.s or 0),
+        },
     )
     # a rewrite of this path must not serve stale memoized scans
     from irclogbot_spark.sources.tables import invalidate_scan
@@ -98,22 +148,122 @@ def write_text_index(
     invalidate_scan(path)
 
 
-def read_text_index(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, DataFrame, int]:
-    """(positional postings, doclens, n_buckets) from an at-rest
-    index. Scans are memoized per (application, path) — every
-    at-rest probe re-read the artifact's footers/listing on every
-    call (~0.18 s/artifact; round-13 optimization), and so is the
-    meta sidecar (a Hadoop-FS read costs milliseconds).
-    write_text_index invalidates the memo when it rewrites a path."""
-    from irclogbot_spark.sources.tables import memo_scan, memo_scan_meta
+def check_format(meta: dict, path: str) -> None:
+    """Raise unless the index at ``path`` has the current layout (its
+    meta records ``format`` :data:`INDEX_FORMAT`): an older index
+    carries no BM25 statistics and no dl in its postings, and is
+    rebuilt, not read."""
+    if meta.get("format") != INDEX_FORMAT:
+        raise ValueError(
+            f"text index at {path} has format {meta.get('format')!r}, not "
+            f"{INDEX_FORMAT}: it carries no stored BM25 statistics; rebuild it"
+        )
+
+
+def _index(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
+    """(postings, format-checked meta) of an at-rest index. Scans are
+    memoized per (application, path) — every at-rest probe re-read
+    the artifact's footers/listing on every call (~0.18 s/artifact;
+    round-13 optimization), and so is the meta sidecar (a Hadoop-FS
+    read costs milliseconds). write_text_index invalidates the memo
+    when it rewrites a path."""
+    from irclogbot_spark.sources.tables import memo_scan_meta
 
     postings, meta = memo_scan_meta(
         spark, os.path.join(path, "postings"), os.path.join(path, META_NAME)
     )
+    check_format(meta, path)
+    return postings, meta
+
+
+def read_text_index(
+    spark: SparkSession, path: str
+) -> tuple[DataFrame, DataFrame, int]:
+    """(positional postings, doclens, n_buckets) from an at-rest
+    index (memoized scans, see :func:`_index`); raises for an index
+    without the current ``format``."""
+    from irclogbot_spark.sources.tables import memo_scan
+
+    postings, meta = _index(spark, path)
     doclens = memo_scan(spark, os.path.join(path, "doclens"))
     return postings, doclens, int(meta["n_buckets"])
+
+
+def _stored_stats(
+    spark: SparkSession, metas: dict[str, dict], terms: list[str]
+) -> dict[str, Bm25Stats]:
+    """The stored BM25 statistics of each at-rest index (path -> its
+    meta): n_docs and dl_sum from the meta, and the df of ``terms``
+    from its vocab — one filtered collect over every index's vocab
+    together."""
+    paths, want = list(metas), list(terms)
+    vocab = reduce(
+        DataFrame.unionByName,
+        [
+            read_vocab(spark, p)
+            .filter(F.col("term").isin(want))
+            .select(F.lit(i).alias("_i"), "term", "df")
+            for i, p in enumerate(paths)
+        ],
+    )
+    dfs: list[dict] = [{} for _ in paths]
+    for r in vocab.collect():
+        dfs[r._i][r.term] = int(r.df)
+    return {
+        p: Bm25Stats(int(metas[p]["n_docs"]), int(metas[p]["dl_sum"]), d)
+        for p, d in zip(paths, dfs)
+    }
+
+
+def probe_indexes(
+    spark: SparkSession, sources: list, terms: list[str], id_col: str = "doc_id"
+) -> list[tuple[DataFrame, Bm25Stats]]:
+    """(hits, stats) per index for the BM25 consumers: ``hits`` is the
+    bucket-pruned probe of ``terms`` as (id, term, tf, dl) rows, and
+    ``stats`` its :class:`Bm25Stats`. A source is an at-rest index
+    path, whose statistics are stored in its meta and vocab sidecars
+    (every path's vocab read in one collect), or pre-loaded
+    (postings, doclens, n_buckets) frames — the streamed form, whose
+    statistics are collected from the frames (:func:`frame_stats`)."""
+    opened = {s: _index(spark, s) for s in sources if not isinstance(s, tuple)}
+    stored = (
+        _stored_stats(spark, {p: meta for p, (_, meta) in opened.items()}, terms)
+        if opened
+        else {}
+    )
+    out = []
+    for src in sources:
+        if isinstance(src, tuple):
+            pidx, doclens, n_buckets = src
+        else:
+            pidx, meta = opened[src]
+            n_buckets = int(meta["n_buckets"])
+        hits = probe_postings(pidx, terms, n_buckets).select(
+            id_col, "term", F.size("positions").cast("long").alias("tf"), "dl"
+        )
+        if isinstance(src, tuple):
+            out.append((hits, frame_stats(hits, doclens)))
+        else:
+            out.append((hits, stored[src]))
+    return out
+
+
+def bm25_scores_atrest(
+    spark: SparkSession,
+    path: str,
+    terms: list[str],
+    id_col: str = "doc_id",
+    k1: float = 1.2,
+    b: float = 0.75,
+) -> DataFrame:
+    """The uncut (id, score) BM25 frame of an at-rest index: the
+    bucket-pruned probe with dl from the posting rows, scored by
+    :func:`bm25_scores` with the index's stored statistics —
+    bit-identical to the scan form (``bm25_rank``) on every hit."""
+    if not terms:
+        raise ValueError("terms must be non-empty")
+    [(hits, stats)] = probe_indexes(spark, [path], terms, id_col)
+    return bm25_scores(hits, terms, stats, id_col, k1, b)
 
 
 def probe_postings(
@@ -231,8 +381,8 @@ def more_like_this_atrest(
     asymmetry): the query docs' term vectors come from a corpus
     POINT LOOKUP (id-pushdown scan of a handful of rows, tokenized
     in-row — ES's "like" text handling); per-term df comes from the
-    VOCAB sidecar (term-type-sized, never the postings); the
-    selected top terms (<= |query_ids| * top_terms — tiny) collect
+    VOCAB sidecar (term-type-sized, never the postings) and the
+    document count from the meta sidecar; the selected top terms (<= |query_ids| * top_terms — tiny) collect
     driver-side and bucket-prune the candidate postings fetch.
     Scores are the bit-identical integer pipeline of
     functions/text.py more_like_this (same oracle)."""
@@ -242,17 +392,18 @@ def more_like_this_atrest(
 
     if not query_ids:
         raise ValueError("need at least one query doc id")
-    pidx, lens, n_buckets = read_text_index(spark, path)
+    pidx, meta = _index(spark, path)
+    n_buckets = int(meta["n_buckets"])
     vocab = read_vocab(spark, path)
     ids = [int(i) for i in query_ids]
     qpostings, _ = build_text_index(
         corpus.filter(F.col(id_col).isin(ids)), id_col, text_col
     )
-    nrow = lens.agg(F.count(F.lit(1)).alias("n_docs"))
     qt = (
         qpostings.join(vocab.withColumnRenamed("df", "dfq"), "term")
-        .crossJoin(F.broadcast(nrow))
-        .withColumn("idf_milli", F.expr("(n_docs * 1000) DIV dfq"))
+        .withColumn(
+            "idf_milli", F.expr(f"({int(meta['n_docs'])}L * 1000) DIV dfq")
+        )
         .withColumn("w", F.col("tf") * F.col("idf_milli"))
     )
     tw = Window.partitionBy(id_col).orderBy(F.desc("w"), "term")
@@ -336,8 +487,8 @@ def bm25_search_after_atrest(
     search with the cursor predicate (there is no server-side page
     state), which is exactly what this composes — the bucket-pruned
     postings probe (PartitionFilters on the literal terms' crc32
-    buckets), the bit-exact ``bm25_scores_indexed`` assembly, the
-    cursor cut, and a partial TakeOrdered (TakeOrderedAndProject —
+    buckets), the bit-exact :func:`bm25_scores_atrest` assembly over
+    the index's stored statistics, the cursor cut, and a partial TakeOrdered (TakeOrderedAndProject —
     never a global sort, never an OFFSET that reads and discards
     every earlier hit).
 
@@ -348,17 +499,7 @@ def bm25_search_after_atrest(
     so page 2 is reproducible end-to-end.
 
     Returns (id_col, score) — the bm25 ranking shape."""
-    from irclogbot_spark.functions.text import bm25_scores_indexed
-
-    pidx, doclens, n_buckets = read_text_index(spark, path)
-    scored = bm25_scores_indexed(
-        postings_tf(probe_postings(pidx, terms, n_buckets), id_col),
-        doclens,
-        terms,
-        id_col,
-        k1,
-        b,
-    )
+    scored = bm25_scores_atrest(spark, path, terms, id_col, k1, b)
     if after is not None:
         if isinstance(after, DataFrame):
             cur = after.select(

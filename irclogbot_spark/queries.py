@@ -273,20 +273,23 @@ def log_term_time_filter(spark, sf_dir):
     column; merged round 3 from log_term_time_filter + log_fulltext to
     free a recorded slot for docs_pii_redact): 'term_time' = exact term
     (ES .keyword semantics) AND time-range scan on posted, 'fulltext' =
-    LIKE full-text over remark. Both predicate sets are pushed ahead of
-    any shuffle, into the two arms' scans of the stored log (over the
-    parse chain, Catalyst re-ran the chain once per union arm: 7.1 vs
-    1.8 s at sf0.1 in round 8)."""
+    LIKE full-text over remark. ONE scan of the stored log carries
+    both predicate sets as a pushed-down OR; each kept row is labelled
+    with the arms it matches, so a row matching both comes out twice,
+    once per variant — the union-of-arms multiset."""
     log = _irclog(spark, sf_dir)
-    tt = log.filter(
+    tt = (
         (F.col("channel") == "#purchase")
         & (F.col("posted") >= _ntz("2024-01-08 00:00:00"))
         & (F.col("posted") < _ntz("2024-01-14 00:00:00"))
     )
-    ft = log.filter(F.col("remark").like('%"k": 4%'))
-    cols = ["channel", "nick", "posted", "remark", "id"]
-    return tt.select(F.lit("term_time").alias("variant"), *cols).unionAll(
-        ft.select(F.lit("fulltext").alias("variant"), *cols)
+    ft = F.col("remark").like('%"k": 4%')
+    variants = F.array_compact(
+        F.array(F.when(tt, "term_time"), F.when(ft, "fulltext"))
+    )
+    return log.filter(tt | ft).select(
+        F.explode(variants).alias("variant"),
+        "channel", "nick", "posted", "remark", "id",
     )
 
 
@@ -1416,30 +1419,26 @@ def log_significant_terms(spark, sf_dir):
     BIGINT end to end: f*B*1000 < 1e16 at any realistic per-term
     count, no float division), a min-count guard f >= 3 (ES's
     min_doc_count), deterministic tiebreak (lift desc, f desc, term
-    asc). Shape: ONE (channel, term) partial-agg shuffle; channel
-    totals and the background table re-aggregate that SAME
-    term-type-sized frame (never the corpus); the 1-row corpus total
-    broadcasts; ranking is a per-channel window over term-type rows.
-    Tail registration; value-checked by the local parity suite."""
+    asc). Shape: ONE (channel, term) partial-agg shuffle; the
+    background count, the corpus total and the channel totals are
+    window sums over that SAME term-type-sized frame (never the
+    corpus), so the whole aggregation is one plan with no self-join
+    and no checkpoint; ranking is a per-channel window over
+    term-type rows. The corpus total is an unpartitioned window: its
+    exchange gathers the (channel, term) rows into one partition,
+    the one step that does not spread over executors. Tail
+    registration; value-checked by the local parity suite."""
     log = _irclog(spark, sf_dir)
     terms = log.select(
         "channel", F.explode(F.split("remark", r"\s+")).alias("term")
     ).filter(F.col("term") != "")
-    # four consumers below (chan_tot, bg, tot, scored): materialize
-    # the term-type-sized aggregate once — the prep.py
-    # multiply-referenced-frame rule
-    ct = (
-        terms.groupBy("channel", "term")
-        .agg(F.count(F.lit(1)).alias("f_cnt"))
-        .localCheckpoint(eager=False)
-    )
-    chan_tot = ct.groupBy("channel").agg(F.sum("f_cnt").alias("chan_total"))
-    bg = ct.groupBy("term").agg(F.sum("f_cnt").alias("bg_cnt"))
-    tot = ct.agg(F.sum("f_cnt").alias("corpus_total"))
+    ct = terms.groupBy("channel", "term").agg(F.count(F.lit(1)).alias("f_cnt"))
     scored = (
-        ct.join(chan_tot, "channel")
-        .join(bg, "term")
-        .crossJoin(F.broadcast(tot))
+        ct.withColumn("bg_cnt", F.sum("f_cnt").over(Window.partitionBy("term")))
+        .withColumn("corpus_total", F.sum("f_cnt").over(Window.partitionBy()))
+        .withColumn(
+            "chan_total", F.sum("f_cnt").over(Window.partitionBy("channel"))
+        )
         .filter(F.col("f_cnt") >= 3)
         .withColumn(
             "lift_milli",
@@ -5106,21 +5105,23 @@ def docs_bm25_atrest(spark, sf_dir):
     terms compute their crc32 bucket list driver-side, so the
     postings scan reads only the probed bucket directories
     (storage-level PartitionFilters, plan-asserted by test); tf is
-    derived in-row as size(positions) (postings_tf — the positional
-    artifact strictly generalizes the tf one), then
-    bm25_rank_indexed's bit-exact score assembly runs unchanged.
+    derived in-row as size(positions) (the positional artifact
+    strictly generalizes the tf one) and dl is read from the same
+    posting rows; n, the integer dl sum and per-term df are the
+    index's stored statistics (meta + vocab sidecars), so the plan
+    holds no doclens aggregate, no df aggregate and no doclens join
+    (plan-pinned); then the bit-exact indexed score assembly runs.
     Three dataflows (corpus scan, in-session tf index, at-rest
     bucketed positional index), ONE value hash. Tail registration;
     first driver row queued in the round-10 window."""
-    from irclogbot_spark.functions.text import bm25_rank_indexed
-    from irclogbot_spark.operators.textindex import (
-        postings_tf,
-        probe_postings,
-    )
+    from irclogbot_spark.operators.textindex import bm25_scores_atrest
 
-    pidx, doclens, n_buckets = _text_index_at_rest(spark, sf_dir)
-    probed = probe_postings(pidx, ["the", "data"], n_buckets)
-    return bm25_rank_indexed(postings_tf(probed), doclens, ["the", "data"], k=10)
+    path = _text_index_path(spark, sf_dir)
+    return (
+        bm25_scores_atrest(spark, path, ["the", "data"])
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(10)
+    )
 
 
 @query("docs_bm25_search_after_atrest")
@@ -5196,8 +5197,10 @@ def docs_bool_search_atrest(spark, sf_dir):
     postings probe covers all four referenced terms (the must_not
     term's postings are read bucket-pruned and become the exclusion
     column of the per-doc pivot — the corpus text is never touched),
-    dl joins from the narrow doclens table, stats + per-term df
-    broadcast. Bit-identical scores to the scan form — second
+    dl rides in the posting rows, and n, avgdl and per-term df are
+    literals from the index's stored statistics — no doclens
+    aggregate or join (plan-pinned). Bit-identical scores to the
+    scan form — second
     physical path on the bool oracle, one value hash. Tail
     registration; first driver row queued for the round-12
     window."""
@@ -5232,7 +5235,8 @@ def docs_dis_max_search(spark, sf_dir):
 def docs_dis_max_search_atrest(spark, sf_dir):
     """docs_dis_max_search served from the AT-REST index (round 11):
     the shared term-frame pivot (one bucket-pruned postings probe,
-    dl from doclens, stats/df broadcast) under the dis_max scorer —
+    dl from the posting rows, stored stats as literals) under the
+    dis_max scorer —
     second physical path, one value hash. Tail registration; first
     driver row queued for the round-12 window."""
     from irclogbot_spark.operators.boolquery import dis_max_search_atrest
@@ -5480,7 +5484,7 @@ def docs_collapse_by_source(spark, sf_dir):
 def docs_collapse_by_source_atrest(spark, sf_dir):
     """docs_collapse_by_source served from the AT-REST index (round
     11): the 'the data' scores come from the bucket-pruned postings
-    probe (bm25_scores_indexed — bit-exact doubles), the collapse
+    probe (bm25_scores_atrest — bit-exact doubles), the collapse
     field from a COLUMN-PRUNED (doc_id, source) corpus fetch — ES's
     stored-fields/doc-values read, joined co-keyed on the id — then
     the same WindowGroupLimit top-2 per source. Hit-set caveat
@@ -5491,17 +5495,10 @@ def docs_collapse_by_source_atrest(spark, sf_dir):
     form's zero-hit 0.0 whenever the group has >= 2 hits). Second
     physical path on the collapse oracle. Tail registration; first
     driver row queued for the round-12 window."""
-    from irclogbot_spark.functions.text import bm25_scores_indexed
-    from irclogbot_spark.operators.textindex import (
-        postings_tf,
-        probe_postings,
-    )
+    from irclogbot_spark.operators.textindex import bm25_scores_atrest
 
-    pidx, doclens, n_buckets = _text_index_at_rest(spark, sf_dir)
-    scored = bm25_scores_indexed(
-        postings_tf(probe_postings(pidx, ["the", "data"], n_buckets)),
-        doclens,
-        ["the", "data"],
+    scored = bm25_scores_atrest(
+        spark, _text_index_path(spark, sf_dir), ["the", "data"]
     )
     src = _t(spark, sf_dir, "documents").select("doc_id", "source")
     w = Window.partitionBy("source").orderBy(F.desc("score"), "doc_id")
@@ -5595,10 +5592,12 @@ def docs_multi_match_atrest(spark, sf_dir):
     """docs_multi_match served from PER-FIELD at-rest indexes (round
     12 — a field is its own index in ES: the title field gets its
     own bucketed postings artifact, the text field reuses the
-    session text index): one bucket-pruned probe + hit-sized pivot
-    per field, per-field stats broadcast, per-field score frames
-    full-outer-joined on doc_id (a missing field coalesces to
-    exactly the 0.0 its tf=0 scan expression yields). Bit-identical
+    session text index): one bucket-pruned probe per field, ONE
+    hit-sized pivot over their union with dl from the posting rows,
+    each field's n/avgdl/df as literals from its index's stored
+    statistics (both vocabs read in one collect) — no doclens
+    aggregate or join (plan-pinned); a missing field contributes
+    exactly the 0.0 its tf=0 scan expression yields. Bit-identical
     scores to the scan form — second physical path, one value hash.
     Round-12 registration; leads the r12 driver window."""
     from irclogbot_spark.operators.multimatch import (

@@ -11,10 +11,17 @@ generation commit rule, identical to the trigram and ANN indexes):
     <index_dir>/doclens/batch_id=N/        per-batch doclens rows
 
 Per-batch work is MAP-ONLY (the in-row positional posting explode +
-a crc32 term bucket — no shuffle, no state). Doclens rows (one per
-doc) ride their own batch partitions under the same overwrite-own-
-partition idempotence; BM25's integer dl-sum re-aggregates them at
-probe time, so the stream needs no running aggregate state.
+a crc32 term bucket — no shuffle, no state). Every posting row
+carries its document's length ``dl`` (the one-shot layout), taken
+in-row before the explode. Doclens rows (one per doc) ride their own
+batch partitions under the same overwrite-own-partition idempotence;
+a BM25 probe of the streamed index collects its statistics from the
+frames ``load_text`` returns (one aggregate over doclens for n_docs
+and the integer dl sum, df from the probed postings —
+functions/text.py frame_stats), so the stream needs no running
+aggregate state. The meta sidecar records ``format``
+(operators/textindex.py INDEX_FORMAT); an index written before
+posting rows carried dl raises on ingest and on load.
 ``load_text`` plugs straight into probe_postings / postings_tf +
 bm25_rank_indexed and serves exactly what the one-shot
 write_text_index artifact serves (pinned by test across compaction
@@ -33,10 +40,15 @@ from pyspark.sql import functions as F
 
 from irclogbot_spark import artifacts
 from irclogbot_spark.functions.text import WORD_RE, build_positional_index
-from irclogbot_spark.operators.textindex import META_NAME, term_bucket_col
+from irclogbot_spark.operators.textindex import (
+    INDEX_FORMAT,
+    META_NAME,
+    check_format,
+    term_bucket_col,
+)
 
 _STORE = artifacts.PostingStore(
-    "doc_id long, term string, positions array<int>, term_bkt int",
+    "doc_id long, term string, positions array<int>, dl int, term_bkt int",
     "term_bkt",
     meta_name=META_NAME,
 )
@@ -63,14 +75,19 @@ def text_ingest_batch(
     13, per ADVICE r12: the one-shot write_text_index keeps the
     caller's id_col, so readers of both artifact kinds now pass the
     same id_col regardless of how the index was built; id_col is
-    frozen per index like n_buckets)."""
+    frozen per index like n_buckets). An existing index without the
+    current ``format`` raises (its posting rows carry no dl)."""
+    try:
+        check_format(_STORE.meta(batch.sparkSession, index_dir), index_dir)
+    except FileNotFoundError:
+        pass  # a new index: the ingest below writes its meta
     postings = build_positional_index(batch, id_col, text_col)
     if id_col != "doc_id":
         postings = postings.withColumnRenamed(id_col, "doc_id")
     postings = postings.withColumn(
         "term_bkt", term_bucket_col("term", n_buckets).cast("int")
     )
-    meta = {"n_buckets": n_buckets, "id_col": id_col}
+    meta = {"n_buckets": n_buckets, "id_col": id_col, "format": INDEX_FORMAT}
     _STORE.ingest(postings, batch_id, index_dir, meta)
     # NULL text -> dl=0, the write_text_index convention (round 13)
     toks = F.regexp_extract_all(
@@ -174,11 +191,13 @@ def load_text(
     id-column name: the on-disk doc_id renames back to the
     meta-recorded ingest id_col (round 13, per ADVICE r12), so a
     reader passes the same id_col whether the logical index was
-    built one-shot or streamed. Indexes written before the meta
-    carried id_col keep 'doc_id' (the old observable behavior)."""
-    postings, meta = _STORE.load(spark, index_dir), _STORE.meta(spark, index_dir)
+    built one-shot or streamed. The postings carry dl; an index
+    without the current ``format`` raises."""
+    meta = _STORE.meta(spark, index_dir)
+    check_format(meta, index_dir)
+    postings = _STORE.load(spark, index_dir)
     lens = spark.read.schema(_DOCLEN_SCHEMA).parquet(f"{index_dir}/doclens")
-    id_col = meta.get("id_col", "doc_id")
+    id_col = meta["id_col"]
     if id_col != "doc_id":
         postings = postings.withColumnRenamed("doc_id", id_col)
         lens = lens.withColumnRenamed("doc_id", id_col)
