@@ -39,25 +39,12 @@ calibrate = sys.argv[4] == "1"
 from irclogbot_spark.session import get_spark
 from irclogbot_spark.queries import queries
 
-spark = get_spark("ab_worker", master="local[32]")
+# local[$SPARK_GRAFT_CPUS], the master bench.py and its calibration use
+spark = get_spark("ab_worker")
 if calibrate:
-    # the bench.py calibration microbench, inlined so the worker is
-    # version-independent (the anchor landed in round 12; older refs
-    # have no bench._calibration): median-of-3 codegen xxhash64 fold,
-    # CALIB_REF_SEC = 2.0 on the reference host
-    from pyspark.sql import functions as F
+    import bench
 
-    def _one(n):
-        t0 = time.perf_counter()
-        spark.range(n, numPartitions=32).select(
-            F.expr("bit_xor(xxhash64(id))")
-        ).collect()
-        return time.perf_counter() - t0
-
-    _one(16_000_000)
-    print("ABCALIB " + json.dumps(
-        sorted(_one(16_000_000_000) for _ in range(3))[1]
-    ), flush=True)
+    print("ABCALIB " + json.dumps(bench._calibration(spark)), flush=True)
 q = queries()[qname]
 for warm_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.1"):
     q(spark, warm_dir).write.format("noop").mode("overwrite").save()

@@ -1,14 +1,23 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
+"""Benchmark harness: every registered query at $SPARK_GRAFT_SF_DIR on
 local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
 
 Each query materializes fully through the 'noop' sink — a count()
 would let Catalyst prune exactly the expensive columns (ids,
 signatures) we mean to measure.
 
-Two recorded passes (round 2 bench hygiene, VERDICT r1 #8):
+Which queries make up the headline metric is the registry's ``tier``
+(``queries.query(name, tier=...)``): ``headline`` queries are timed
+median-of-3, ``cheap`` ones once. Two recorded headline passes
+(round 2 bench hygiene, VERDICT r1 #8):
 * queries        — at SF_DIR (round-comparable);
 * queries_small  — same set at sf0.01, exposing the scaling slope.
+
+Every registered query also gets a row in BENCH_DETAIL.json's
+``ledger`` (``LEDGER_FIELDS``): its recorded SF_DIR time with that
+run's status-store counters, read by job group after the clock stops
+(``Counters``), and the build and plan layers of one more build of the
+same frame, taken after the last timed pass (``_profile``).
 
 Search and aggregation queries over the irclog read the registry's
 stored log (written once per process on first use, so the warm-up
@@ -18,6 +27,7 @@ every call, because that chain is what they measure.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import sys
@@ -25,279 +35,25 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from py4j.java_gateway import GatewayClient  # noqa: E402
+from py4j.protocol import Py4JJavaError  # noqa: E402
+
+from perfbench.tracing import Py4jCounter, SparkCounters, count_exchanges  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SMALL_DIR = os.environ.get("SPARK_GRAFT_SMALL_DIR", "/root/testdata/sf0.01")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-#: The headline set: ingest chain + hash (the reference's whole job),
-#: the implied analytics surface, the TPC-H-ish join/agg shapes, and
-#: the north-star dedup/similarity/text operators.
-HEADLINE = [
-    "ingest_parse",
-    "ingest_dedup",
-    "log_msgs_per_channel_day",
-    "log_top_nicks",
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier",
-    "events_session_window",
-    "events_asof_join",
-    "docs_token_stats",
-    "docs_minhash_neardup",
-    "docs_minhash_lsh",
-    "docs_neardup_clusters",
-    "docs_dedup_pipeline",
-    "docs_decontaminate",
-    "docs_lm_score",
-    "docs_crossdup",
-    "docs_prep_pipeline",
-    "docs_prep_pipeline_fast",
-    "docs_simhash_neardup",
-    "docs_c4_clean",
-    "docs_quality_score",
-    "docs_adaptive_quality",
-    "docs_inverted_index",
-    "docs_tfidf_topk",
-    "docs_incremental_dedup",
-    "docs_budget_cap",
-    "emb_cosine_neardup",
-    "emb_knn_join",
-    "emb_ann_topk",
-    "emb_ivf_topk",
-    "emb_semantic_dedup",
-    "emb_pq_topk",
-    "emb_ivfpq_topk",
-    "docs_dedup_keep_best",
-    "docs_hybrid_search",
-    "docs_crossdup_remove",
-    "docs_vocab_coverage",
-    "events_funnel",
-    "events_retention",
-    "events_range_join",
-    "docs_tokenize",
-    "log_nick_cooccurrence",
-    # round-5 additions: the previously unbenched registered queries
-    # (VERDICT r4 #7 — regressions in unbenched paths are invisible)
-    "docs_chunking",
-    "docs_temperature_mix",
-    "docs_reservoir_sample",
-    "docs_sample_split",
-    "emb_ivf_recall",
-    "docs_incremental_dedup_wb",
-    # round-5 operators
-    "events_funnel_window",
-    "docs_winnow_fingerprint",
-    "docs_importance_resample",
-    "docs_dedup_keep_best_fast",
-    "docs_bm25_indexed",
-    "docs_paragraph_dedup",
-    "docs_decontam_bloom",
-    "events_top_paths",
-    "emb_semantic_decontam",
-    "docs_normalized_dedup",
-    "docs_bpe_merges",
-    "emb_kmeans_clusters",
-    "docs_data_card",
-    "graph_pagerank_trade",
-    "docs_bpe_tokenize",
-    "docs_tokenize_fast",
-    "media_frame_plan",
-    "docs_lsh_recall",
-    "docs_compression_ratio",
-    "events_anomaly",
-    "docs_pps_sample",
-    "log_trending_terms",
-    # round-6 additions
-    "log_channel_day_bucketed",
-    "docs_corpus_shuffle",
-    "media_audio_stats",
-    "media_resize_stats",
-    "media_decode_stats",
-    "docs_corpus_shuffle_fast",
-    "tpch_q16_supplier_cnt",
-    "log_term_time_partitioned",
-    "tpch_q4_order_priority",
-    "tpch_q7_volume_shipping",
-    "tpch_q13_cust_distribution",
-    "tpch_q14_promo_revenue",
-    "tpch_q17_small_qty_revenue",
-    "tpch_q22_global_sales",
-    "docs_editdist_neardup",
-    "docs_snapshot_diff",
-    "docs_length_winsorize",
-    "docs_editdist_dedup",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q6_forecast_revenue",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "tpch_q10_returned_items",
-    "tpch_q11_important_stock",
-    "tpch_q12_late_lines",
-    "tpch_q15_top_supplier",
-    "tpch_q19_disjunctive_rev",
-    "tpch_q20_promotion_parts",
-    "tpch_q21_waiting_suppliers",
-    "events_salted_enrich",
-    "events_attribution",
-    "agg_unpivot",
-    "emb_random_projection",
-    "emb_hard_negatives",
-    "docs_ngram_novelty",
-    "emb_projection_recall",
-    "docs_source_containment",
-    "docs_leakage_safe_split",
-    "docs_length_batching",
-    "docs_jsonl_ingest",
-    "docs_heavy_hitters_cms",
-    "emb_sq8_error",
-    "docs_hll_distinct",
-    "docs_length_quantile_sketch",
-    "docs_priority_sample",
-    "events_anomaly_mad",
-    "docs_multikey_linkage",
-    "docs_unigram_segment",
-    "docs_prefix_filter_join",
-    "events_theil_sen_trend",
-    "events_zorder_layout",
-    "docs_backoff_surprisal",
-    # round 7
-    "media_png_decode_stats",
-    "docs_html_extract",
-    "docs_nfc_normalize",
-    "docs_url_canonicalize",
-    "docs_paragraph_langid",
-    "docs_trgm_search",
-    "docs_hll_sketch_only",
-    # round 8
-    "media_jpeg_decode_stats",
-    "docs_trgm_search_indexed",
-    "docs_warc_ingest",
-    # round 9
-    "docs_trgm_multi_search",
-    "docs_crawl_admit",
-    "docs_simhash_neardup_md5",
-    "docs_fuzzy_term_search",
-    "log_significant_terms",
-    "docs_more_like_this",
-    # round 9 (cont.): the phrase/suggest pair scans or indexes the
-    # whole corpus — headline-weight
-    "docs_phrase_search",
-    "docs_phrase_search_indexed",
-    "docs_prefix_suggest",
-    "docs_percolate",
-    "docs_span_near",
-    "docs_phrase_search_atrest",
-    "docs_bm25_atrest",
-    "docs_substring_dedup",
-    "docs_substring_dedup_fast",
-    "docs_substring_dedup_incr",
-    "docs_fuzzy_term_search_atrest",
-    "docs_more_like_this_atrest",
-    "docs_wildcard_search",
-    "docs_span_near_atrest",
-    "docs_bm25_rescore",
-    "docs_wildcard_search_indexed",
-    # round 11: keyset pagination over the at-rest BM25 ranking —
-    # re-executes the bucket-pruned search per page (the ES
-    # semantics), so it carries two full ranking executions
-    "docs_bm25_search_after_atrest",
-    # round 11: the bool query's at-rest path (pivot agg over the
-    # probed buckets, dl from the posting rows)
-    "docs_bool_search_atrest",
-    "docs_dis_max_search_atrest",
-    "docs_boosting_search_atrest",
-    "docs_constant_score_atrest",
-    "docs_collapse_by_source_atrest",
-    "docs_function_score_atrest",
-    "log_recency_search",
-    # round 12: multi-field retrieval — the at-rest multi_match pays
-    # one probe+pivot per field index; the phrase-prefix pair pays
-    # the irclog parse + keyed-upsert distinct (scan) / the log-index
-    # build + vocab walk (at-rest)
-    "docs_multi_match_atrest",
-    "log_match_phrase_prefix",
-    "log_match_phrase_prefix_atrest",
-    "docs_multi_match_most_fields_atrest",
-    "docs_simple_query_string_atrest",
-    "docs_terms_set_atrest",
-    "docs_span_first_atrest",
-    "docs_span_not_atrest",
-    # round 13: cross_fields pays the same per-field probes as the
-    # other at-rest multi_match types; the fuzzy bool pays the vocab
-    # sidecar walk + the compiled bool probe
-    "docs_multi_match_cross_fields_atrest",
-    "docs_bool_fuzzy_search_atrest",
-    "docs_multi_match_operator_and_atrest",
-]
-
-#: Every registered query NOT in HEADLINE (VERDICT r7 missing #4:
-#: the scalar/filter/agg queries had no recorded time at all, so a
-#: regression there was invisible). Benched ONCE
-#: per round at SF_DIR (single pass, no median — these are cheap and
-#: a coarse number beats none); a test pins HEADLINE ∪ CHEAP ==
-#: queries() so future registrations can't silently go unbenched.
-CHEAP = [
-    "ingest_filter_stats",
-    "ingest_action_rows",
-    "ingest_compat_ids",
-    "channels_catalog",
-    "log_term_time_filter",
-    "log_point_lookup",
-    "log_nick_rank_per_channel",
-    "log_inter_message_gap",
-    "log_search_terms",
-    "join_top_customers",
-    "join_anti_customers_no_orders",
-    "join_semi_parts_ordered",
-    "agg_rollup_sets",
-    "agg_stats",
-    "agg_pivot",
-    "set_ops",
-    "scalar_human_fmt",
-    "events_windows",
-    "events_json_extract",
-    "events_approx_stats",
-    "docs_quality",
-    "docs_bm25_search",
-    "docs_bool_search",
-    "docs_dis_max_search",
-    "docs_boosting_search",
-    "docs_constant_score",
-    "docs_multi_match",
-    "docs_multi_match_most_fields",
-    "docs_multi_match_cross_fields",
-    "docs_multi_match_operator_and",
-    "docs_simple_query_string",
-    "docs_bool_fuzzy_search",
-    "docs_bool_search_msm_pct",
-    "docs_terms_set",
-    "docs_span_first",
-    "docs_span_not",
-    "docs_function_score",
-    "docs_neardup_jaccard",
-    "docs_dedup_keep_first",
-    "docs_lang_id",
-    "docs_pack_sequences",
-    "docs_pii_redact",
-    "emb_ann_recall",
-    "window_date_functions",
-    "math_array_functions",
-    "tpch_q18_big_orders",
-    # round 8
-    "emb_anchor_gate",
-    # round 9 (cont.): map-only or events-sized — cheap by design
-    "docs_highlight",
-    "events_search_after",
-    "events_composite_agg",
-    "events_geo_distance",
-    "events_geotile_grid",
-    "events_pipeline_aggs",
-    "docs_rare_terms",
-    "events_adjacency_matrix",
-    # round 10: dictionary-only / window-bounded — cheap by design
-    "docs_prefix_suggest_atrest",
-    "docs_collapse_by_source",
-]
+#: the fields of one ledger row: the reported wall time of build and
+#: run together (the ``queries`` value) and its status-store counters,
+#: then, from a later untimed build of the same frame, the build's
+#: seconds and py4j messages and the physical plan's seconds and
+#: exchanges
+LEDGER_FIELDS = (
+    "run_s", "jobs", "stages", "tasks", "input_bytes", "shuffle_read_bytes",
+    "shuffle_write_bytes", "spill_bytes", "executor_cpu_s", "build_s",
+    "py4j", "plan_s", "exchanges",
+)
 
 
 def _sf_of(path: str) -> float | str:
@@ -308,29 +64,145 @@ def _sf_of(path: str) -> float | str:
         return sf
 
 
-def _time_one(qs, spark, name, sf_dir) -> float:
-    t0 = time.perf_counter()
-    qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return round(time.perf_counter() - t0, 3)
+def tiers(qs) -> tuple[list[str], list[str]]:
+    """The headline and cheap query names, in registry order, read from
+    the tier each query registered with."""
+    return (
+        [n for n, f in qs.items() if f.tier == "headline"],
+        [n for n, f in qs.items() if f.tier == "cheap"],
+    )
 
 
-def _run(qs, spark, names, sf_dir, passes: int = 1) -> dict[str, float]:
-    """Per-query wall time. passes>=3 reports the MEDIAN of `passes`
-    timed runs (round-3 bench hygiene, VERDICT r2 #5: single-shot
-    timings swung ±0.3 s round-over-round, making <15% deltas
-    unattributable). Min/max per query land in _SPREAD."""
+class _Evicted:
+    """A stage Spark's status store no longer holds, as SparkCounters
+    reads it: not COMPLETE, so not counted."""
+
+    def status(self):
+        return self
+
+    def toString(self) -> str:
+        return "EVICTED"
+
+
+class _StatusStore:
+    """The status store SparkCounters reads, with an evicted stage read
+    as ``_Evicted`` instead of raising NoSuchElementException."""
+
+    def __init__(self, store):
+        self._store = store
+
+    def job(self, job_id):
+        return self._store.job(job_id)
+
+    def lastStageAttempt(self, stage_id):
+        try:
+            return self._store.lastStageAttempt(stage_id)
+        except Py4JJavaError as e:
+            if e.java_exception.getClass().getName() != "java.util.NoSuchElementException":
+                raise
+            return _Evicted()
+
+
+class Counters(SparkCounters):
+    """perfbench's ``SparkCounters`` (jobs, stages, tasks, bytes, spill
+    and executor CPU of one job group, read from Spark's status store;
+    the Spark UI stays off), shared by bench and scale_probe.
+
+    Past ``spark.ui.retainedStages`` (1000) the store evicts skipped
+    stages first, often those of the group just run, and
+    ``SparkCounters.read`` raises on a stage it no longer holds. Here
+    such a stage reads as not completed: SparkCounters counts only
+    completed stages, and the completed stages of the newest jobs are
+    the last the store evicts, so every count stays as it was."""
+
+    def __init__(self, spark):
+        super().__init__(spark)
+        self._store = _StatusStore(self._store)
+        self._runs = itertools.count()
+
+    def timed(self, label: str, fn):
+        """Run ``fn`` under a fresh job group named after ``label``:
+        (seconds, fn's result, the group's counters). The group label
+        is set before the clock starts and the counters are read after
+        it stops, so only ``fn`` is timed."""
+        group = f"{label}#{next(self._runs)}"
+        self.set_group(group)
+        t0 = time.perf_counter()
+        result = fn()
+        seconds = time.perf_counter() - t0
+        return seconds, result, self.read(group)
+
+
+def _run(counters, qs, spark, names, sf_dir, passes: int = 1):
+    """Per-query wall time: (times, spread, counts). passes>=3 reports
+    the MEDIAN of `passes` timed runs (round-3 bench hygiene, VERDICT
+    r2 #5: single-shot timings swung ±0.3 s round-over-round, making
+    <15% deltas unattributable), and spread holds each query's
+    [min, max]. counts holds the status-store counters of the run
+    whose time is reported."""
     times: dict[str, float] = {}
+    spread: dict[str, list[float]] = {}
+    counts: dict[str, dict] = {}
     for name in names:
-        samples = sorted(_time_one(qs, spark, name, sf_dir) for _ in range(passes))
-        times[name] = samples[len(samples) // 2]
+        samples = sorted(
+            (
+                counters.timed(
+                    name,
+                    lambda: qs[name](spark, sf_dir)
+                    .write.format("noop").mode("overwrite").save(),
+                )
+                for _ in range(passes)
+            ),
+            key=lambda s: s[0],
+        )
+        sec, _, counts[name] = samples[len(samples) // 2]
+        times[name] = round(sec, 3)
         if passes > 1:
-            _SPREAD[name] = [samples[0], samples[-1]]
-    return times
+            spread[name] = [round(samples[0][0], 3), round(samples[-1][0], 3)]
+    return times, spread, counts
 
 
-_SPREAD: dict[str, list[float]] = {}
+def _profile(spark, qs, names, sf_dir) -> dict[str, dict]:
+    """Build each query's frame once more and plan it without running
+    it: its build seconds, the py4j messages sent while building
+    (perfbench's ``Py4jCounter``), its planning seconds and the
+    exchanges of its physical plan. Untimed; py4j's send is wrapped
+    only for the length of this call."""
+    send = GatewayClient.send_command
+    py4j = Py4jCounter()
+    py4j.install()
+    out = {}
+    try:
+        for name in names:
+            t0 = time.perf_counter()
+            with py4j.counting() as calls:
+                df = qs[name](spark, sf_dir)
+            t1 = time.perf_counter()
+            executed = df._jdf.queryExecution().executedPlan()
+            out[name] = {
+                "build_s": round(t1 - t0, 3),
+                "py4j": calls[0],
+                "plan_s": round(time.perf_counter() - t1, 3),
+                "exchanges": count_exchanges(executed.toString()),
+            }
+    finally:
+        GatewayClient.send_command = send
+    return out
 
-STRESS_ROWS = int(os.environ.get("SPARK_GRAFT_STRESS_ROWS", "2000000"))
+
+def ledger(times, counts, profiles) -> dict[str, dict]:
+    """One row of ``LEDGER_FIELDS`` per query in ``times``."""
+    return {
+        name: {
+            "run_s": sec,
+            **{k: round(v, 3) for k, v in counts[name].items()},
+            **profiles[name],
+        }
+        for name, sec in times.items()
+    }
+
+
+STRESS_ROWS = 2_000_000
 
 #: calibration anchor (VERDICT r11 next #3 — the host-bimodality
 #: classifier): a FIXED pure-CPU workload in the same JVM before the
@@ -339,7 +211,7 @@ STRESS_ROWS = int(os.environ.get("SPARK_GRAFT_STRESS_ROWS", "2000000"))
 #: reference, BENCH_AB.md calibration table); a slow-mode run shows
 #: proportionally larger calibration_sec, so drift in the headline is
 #: classifiable in one line: environmental iff calibration moved too.
-CALIB_ROWS = int(os.environ.get("SPARK_GRAFT_CALIB_ROWS", "16000000000"))
+CALIB_ROWS = 16_000_000_000
 #: fast-mode anchor measured round 12 — value_norm = value * (REF/cal)
 CALIB_REF_SEC = 2.0
 
@@ -413,13 +285,15 @@ def main() -> None:
     from irclogbot_spark.session import get_spark
 
     spark = get_spark("sparklog-bench", master=f"local[{CPUS}]")
+    counters = Counters(spark)
     qs = queries()
+    headline, cheap_names = tiers(qs)
     calibration = _calibration(spark)
     # warm the JVM/codegen on the smallest corpus so per-query times
     # measure the operator, not first-call compilation
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir):
-        _run(qs, spark, HEADLINE, warm_dir)
+        _run(counters, qs, spark, headline, warm_dir)
 
     # warm EVERY measured dir before timing it (VERDICT r3 #3: the
     # sf0.01 pass used to be the first visit to SMALL_DIR, so one-time
@@ -428,18 +302,23 @@ def main() -> None:
     # ~8.6 s was training)
     small = {}
     if os.path.isdir(SMALL_DIR):
-        _run(qs, spark, HEADLINE, SMALL_DIR)
-        small = _run(qs, spark, HEADLINE, SMALL_DIR)
-    _run(qs, spark, HEADLINE, SF_DIR)
-    times = _run(qs, spark, HEADLINE, SF_DIR, passes=3)
+        _run(counters, qs, spark, headline, SMALL_DIR)
+        small = _run(counters, qs, spark, headline, SMALL_DIR)[0]
+    _run(counters, qs, spark, headline, SF_DIR)
+    times, spread, counts = _run(counters, qs, spark, headline, SF_DIR, passes=3)
 
     # the cheap tail: one warmed pass each so EVERY registered query
     # has a recorded time (their sum stays out of the headline metric
     # to keep it round-comparable)
-    _run(qs, spark, CHEAP, warm_dir if os.path.isdir(warm_dir) else SF_DIR)
-    cheap = _run(qs, spark, CHEAP, SF_DIR)
+    _run(counters, qs, spark, cheap_names,
+         warm_dir if os.path.isdir(warm_dir) else SF_DIR)
+    cheap, _, cheap_counts = _run(counters, qs, spark, cheap_names, SF_DIR)
 
     stress = _ingest_stress(spark)
+    # the ledger's build and plan layers come after the last timed
+    # pass, so nothing they add is ever on the clock
+    rows = ledger({**times, **cheap}, {**counts, **cheap_counts},
+                  _profile(spark, qs, list(qs), SF_DIR))
 
     # full detail to a file (and stderr for humans); the driver's tail
     # capture parses the FINAL stdout line, which round 3 proved must
@@ -448,7 +327,8 @@ def main() -> None:
     detail = {
         "queries": times,
         "queries_cheap": cheap,
-        "queries_minmax": _SPREAD,
+        "queries_minmax": spread,
+        "ledger": {name: rows[name] for name in qs},
         "queries_small": small,
         "sf_small": _sf_of(SMALL_DIR),
         "ingest_stress": stress,

@@ -469,37 +469,31 @@ def prefix_suggest_atrest(
     )
 
 
-def bm25_search_after_atrest(
-    spark: SparkSession,
-    path: str,
-    terms: list[str],
-    k: int = 10,
-    after=None,
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
+def search_after(
+    scored: DataFrame, k: int = 10, after=None, id_col: str = "doc_id"
 ) -> DataFrame:
-    """ES ``search_after`` over the at-rest BM25 ranking (round 11,
-    VERDICT r10 next #6) — KEYSET pagination on the (score DESC,
-    id ASC) total order, the deployment query every search UI
-    issues for page >= 2. ES semantics: the cursor is the LAST HIT's
-    sort values from the previous page; each page RE-EXECUTES the
-    search with the cursor predicate (there is no server-side page
-    state), which is exactly what this composes — the bucket-pruned
-    postings probe (PartitionFilters on the literal terms' crc32
-    buckets), the bit-exact :func:`bm25_scores_atrest` assembly over
-    the index's stored statistics, the cursor cut, and a partial TakeOrdered (TakeOrderedAndProject —
-    never a global sort, never an OFFSET that reads and discards
-    every earlier hit).
+    """ES ``search_after`` over an uncut (id_col, score) ranking such
+    as :func:`bm25_scores_atrest` (round 11, VERDICT r10 next #6) —
+    KEYSET pagination on the (score DESC, id ASC) total order, the
+    deployment query every search UI issues for page >= 2. ES
+    semantics: the cursor is the LAST HIT's sort values from the
+    previous page; each page RE-EXECUTES the search with the cursor
+    predicate (there is no server-side page state), which is exactly
+    what this composes — the ranking, the cursor cut, and a partial
+    TakeOrdered (TakeOrderedAndProject — never a global sort, never
+    an OFFSET that reads and discards every earlier hit). Pages cut
+    from one ``scored`` frame share its build (for the at-rest BM25
+    ranking, the bucket-pruned postings probe and the statistics
+    read), while each page still re-executes the ranking when it
+    runs.
 
     ``after``: ``None`` -> page 1 (plain top-k); a ``(score, id)``
     tuple -> the literal ES cursor; a 1-row DataFrame carrying
     (score, id_col) -> an in-plan cursor (broadcast, 1 row) — the
     deterministic declared query derives page 1's last hit this way
-    so page 2 is reproducible end-to-end.
+    (:func:`last_sort_values`) so page 2 is reproducible end-to-end.
 
-    Returns (id_col, score) — the bm25 ranking shape."""
-    scored = bm25_scores_atrest(spark, path, terms, id_col, k1, b)
+    Returns (id_col, score) — the ranking's shape."""
     if after is not None:
         if isinstance(after, DataFrame):
             cur = after.select(
@@ -507,7 +501,7 @@ def bm25_search_after_atrest(
             )
         else:
             s, i = after
-            cur = spark.range(1).select(
+            cur = scored.sparkSession.range(1).select(
                 F.lit(float(s)).alias("_cs"), F.lit(i).alias("_cid")
             )
         scored = (

@@ -2968,7 +2968,7 @@ ORACLES["docs_bm25_atrest"] = ORACLES["docs_bm25_search"]
 # last hit (smallest score, largest doc_id within the top-10) as the
 # keyset cursor, then the strictly-after cut re-ranked. Mirrors
 # queries.docs_bm25_search_after_atrest / textindex.py
-# bm25_search_after_atrest. NOTE the hit-set caveat shared with every
+# search_after. NOTE the hit-set caveat shared with every
 # indexed BM25 twin: the index only sees docs with >= 1 query-term
 # hit; zero-hit docs score exactly 0.0 in this scan-form SQL, so the
 # two agree whenever ranks 1-20 all have hits (they do on the

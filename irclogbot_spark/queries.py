@@ -36,12 +36,18 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 
 
-def query(name: str):
+def query(name: str, tier: str = "headline"):
+    """Register a query builder under ``name``. ``tier`` is its bench
+    tier, recorded on the registered callable: ``"headline"`` queries
+    make up bench.py's median-of-3 suite metric, ``"cheap"`` ones
+    (map-only, dictionary-sized or events-sized) get one timed pass."""
+
     def deco(fn: QueryFn) -> QueryFn:
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             ensure_runtime_confs(spark)
             return fn(spark, sf_dir)
 
+        wrapped.tier = tier
         QUERIES[name] = wrapped
         return wrapped
 
@@ -164,7 +170,7 @@ def ingest_parse(spark, sf_dir):
     return synth.irclog(spark, sf_dir)
 
 
-@query("ingest_filter_stats")
+@query("ingest_filter_stats", tier="cheap")
 def ingest_filter_stats(spark, sf_dir):
     """Per-stage survivor counts for the filter chain F1->F2->F3->F4."""
     from irclogbot_spark.ingest import ANCHORED_MSG_PAT as PAT
@@ -200,7 +206,7 @@ def ingest_dedup(spark, sf_dir):
     )
 
 
-@query("ingest_action_rows")
+@query("ingest_action_rows", tier="cheap")
 def ingest_action_rows(spark, sf_dir):
     """P3 coverage: rows that went through the ACTION -> /me rewrite.
     Filters the stored log, so the remark predicate is a parquet scan
@@ -214,7 +220,7 @@ def ingest_action_rows(spark, sf_dir):
     )
 
 
-@query("channels_catalog")
+@query("channels_catalog", tier="cheap")
 def channels_catalog(spark, sf_dir):
     """S4/D1: channel catalog with static 40-per-bot range sharding
     (irclogbot.py:215-224). The global window is fine: the catalog is
@@ -267,7 +273,7 @@ def log_term_time_partitioned(spark, sf_dir):
 
 
 # ------------------------------------------------- implied ES query surface
-@query("log_term_time_filter")
+@query("log_term_time_filter", tier="cheap")
 def log_term_time_filter(spark, sf_dir):
     """§2H bool-query filter surface, both arms in one result (variant
     column; merged round 3 from log_term_time_filter + log_fulltext to
@@ -293,7 +299,7 @@ def log_term_time_filter(spark, sf_dir):
     )
 
 
-@query("log_point_lookup")
+@query("log_point_lookup", tier="cheap")
 def log_point_lookup(spark, sf_dir):
     """§2H point lookup by content id (keyed PUT analog). The key set
     is one row — broadcast to every executor, no shuffle of the log.
@@ -365,7 +371,7 @@ def log_top_nicks(spark, sf_dir):
     )
 
 
-@query("log_nick_rank_per_channel")
+@query("log_nick_rank_per_channel", tier="cheap")
 def log_nick_rank_per_channel(spark, sf_dir):
     """Window function: rank nicks by message count within channel."""
     log = _irclog(spark, sf_dir)
@@ -375,7 +381,7 @@ def log_nick_rank_per_channel(spark, sf_dir):
     return cnt.withColumn("rnk", F.rank().over(w).cast("long")).filter(F.col("rnk") <= 3)
 
 
-@query("log_inter_message_gap")
+@query("log_inter_message_gap", tier="cheap")
 def log_inter_message_gap(spark, sf_dir):
     """Window lag: inter-message gap stats per channel (epoch-micros
     arithmetic; ties broken by id so the lag sequence is stable)."""
@@ -461,7 +467,7 @@ def tpch_q5(spark, sf_dir):
     )
 
 
-@query("join_top_customers")
+@query("join_top_customers", tier="cheap")
 def join_top_customers(spark, sf_dir):
     """Broadcast dim join + top-k by aggregate."""
     o = _t(spark, sf_dir, "orders")
@@ -477,7 +483,7 @@ def join_top_customers(spark, sf_dir):
     )
 
 
-@query("join_anti_customers_no_orders")
+@query("join_anti_customers_no_orders", tier="cheap")
 def join_anti(spark, sf_dir):
     """Left-anti join (NOT EXISTS): customers with no big-ticket
     orders (the unrestricted variant is empty at every SF — every
@@ -489,7 +495,7 @@ def join_anti(spark, sf_dir):
     )
 
 
-@query("join_semi_parts_ordered")
+@query("join_semi_parts_ordered", tier="cheap")
 def join_semi(spark, sf_dir):
     """Left-semi join (EXISTS) + aggregate."""
     p = _t(spark, sf_dir, "part")
@@ -501,7 +507,7 @@ def join_semi(spark, sf_dir):
     )
 
 
-@query("agg_rollup_sets")
+@query("agg_rollup_sets", tier="cheap")
 def agg_rollup_sets(spark, sf_dir):
     """ROLLUP, CUBE, and explicit GROUPING SETS in one result (variant
     column; merged round 3 from agg_rollup + agg_grouping_sets +
@@ -536,7 +542,7 @@ def agg_rollup_sets(spark, sf_dir):
     return r.unionAll(cu).unionAll(gs)
 
 
-@query("set_ops")
+@query("set_ops", tier="cheap")
 def set_ops(spark, sf_dir):
     """Set operations, both semantics in one result (variant column):
     'distinct' = INTERSECT / UNION / EXCEPT composition, 'bag' =
@@ -561,7 +567,7 @@ def set_ops(spark, sf_dir):
     )
 
 
-@query("scalar_human_fmt")
+@query("scalar_human_fmt", tier="cheap")
 def scalar_human_fmt(spark, sf_dir):
     """X1 human_fmt as a pure CASE expression over derived byte sizes."""
     o = _t(spark, sf_dir, "orders")
@@ -594,7 +600,7 @@ def events_session_window(spark, sf_dir):
     )
 
 
-@query("events_windows")
+@query("events_windows", tier="cheap")
 def events_windows(spark, sf_dir):
     """Event-time windows, tumbling AND sliding, in one result
     (variant column; merged round 3 from events_tumbling_hourly +
@@ -625,7 +631,7 @@ def events_windows(spark, sf_dir):
     )
 
 
-@query("events_json_extract")
+@query("events_json_extract", tier="cheap")
 def events_json_extract(spark, sf_dir):
     """Semi-structured extraction from the props JSON payload."""
     ev = _t(spark, sf_dir, "events")
@@ -671,7 +677,7 @@ def docs_token_stats(spark, sf_dir):
     )
 
 
-@query("docs_quality")
+@query("docs_quality", tier="cheap")
 def docs_quality(spark, sf_dir):
     """Per-doc quality battery: token count, stopword ratio, pass
     flag, AND the Gopher repetition signals (top-2-gram / dup-5-gram
@@ -703,7 +709,7 @@ def docs_quality(spark, sf_dir):
     return q.join(repetition_signals(d), "doc_id")
 
 
-@query("docs_bm25_search")
+@query("docs_bm25_search", tier="cheap")
 def docs_bm25_search(spark, sf_dir):
     """BM25-ranked full-text retrieval over documents — the SCORED
     search at the core of the ES capability (§2H), beyond boolean
@@ -744,7 +750,7 @@ def emb_cosine_neardup(spark, sf_dir):
 
 
 # ------------------------------------------- dedup / similarity operators
-@query("docs_neardup_jaccard")
+@query("docs_neardup_jaccard", tier="cheap")
 def docs_neardup_jaccard(spark, sf_dir):
     """Exact 5-gram Jaccard near-dup pairs (the MinHash verifier)."""
     from irclogbot_spark.operators.dedup import jaccard_pairs
@@ -778,7 +784,7 @@ def docs_dedup_pipeline(spark, sf_dir):
     return dedup_corpus(docs, pairs=jaccard_pairs(docs, n=5, threshold=0.8))
 
 
-@query("docs_dedup_keep_first")
+@query("docs_dedup_keep_first", tier="cheap")
 def docs_dedup_keep_first(spark, sf_dir):
     """Exact keep-first dedup on content fingerprint."""
     from irclogbot_spark.operators.dedup import exact_dedup
@@ -786,7 +792,7 @@ def docs_dedup_keep_first(spark, sf_dir):
     return exact_dedup(_t(spark, sf_dir, "documents")).select("doc_id", "lang", "source")
 
 
-@query("docs_lang_id")
+@query("docs_lang_id", tier="cheap")
 def docs_lang_id(spark, sf_dir):
     """Stopword-profile language ID vs the labeled lang column,
     merged with the per-source corpus breakdown (round 3: the merge
@@ -932,7 +938,7 @@ def docs_lm_score(spark, sf_dir):
     return lm_familiarity(_t(spark, sf_dir, "documents"), vocab_k=500)
 
 
-@query("docs_pack_sequences")
+@query("docs_pack_sequences", tier="cheap")
 def docs_pack_sequences(spark, sf_dir):
     """Sequence packing (operators/packing.py): GPT-style
     concat-then-chunk layout of the corpus into 512-token training
@@ -945,7 +951,7 @@ def docs_pack_sequences(spark, sf_dir):
     return pack_sequences(_t(spark, sf_dir, "documents"), budget=512, shards=8)
 
 
-@query("docs_pii_redact")
+@query("docs_pii_redact", tier="cheap")
 def docs_pii_redact(spark, sf_dir):
     """PII scrub (functions/pii.py): per-rule match counts + tagged
     redaction, map-only codegen'd regex expressions, no UDF. The
@@ -1048,7 +1054,7 @@ def emb_ivf_topk(spark, sf_dir):
     )
 
 
-@query("emb_ann_recall")
+@query("emb_ann_recall", tier="cheap")
 def emb_ann_recall(spark, sf_dir):
     """ANN quality as a checked number: recall@5 of the SRP-LSH path
     against exact kNN, per query id. Both sides are deterministic
@@ -1146,7 +1152,7 @@ def media_jpeg_decode_stats(spark, sf_dir):
 
 
 # ---------------------------------------------- coverage batteries (round 1)
-@query("window_date_functions")
+@query("window_date_functions", tier="cheap")
 def window_date_functions(spark, sf_dir):
     """Window frames + the date/time battery in one per-row pass over
     orders (merged round 3 from window_frames + date_functions to
@@ -1182,7 +1188,7 @@ def window_date_functions(spark, sf_dir):
     )
 
 
-@query("math_array_functions")
+@query("math_array_functions", tier="cheap")
 def math_array_functions(spark, sf_dir):
     """Scalar math + array function battery over lineitem
     (sqrt/abs/floor/ceil/sign/mod — the IEEE-exact subset; ln/exp
@@ -1217,7 +1223,7 @@ def math_array_functions(spark, sf_dir):
     )
 
 
-@query("log_search_terms")
+@query("log_search_terms", tier="cheap")
 def log_search_terms(spark, sf_dir):
     """Tokenized full-text search surface over the substring-matched
     subset: F5 contains-any gate (the wait_for predicate,
@@ -1244,7 +1250,7 @@ def log_search_terms(spark, sf_dir):
 _PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 
 
-@query("agg_stats")
+@query("agg_stats", tier="cheap")
 def agg_stats(spark, sf_dir):
     """Exact percentiles + mean/stddev + distinct aggregate per group,
     in one pass (merged round 3 from agg_stats + agg_distinct — same
@@ -1283,7 +1289,7 @@ def agg_stats(spark, sf_dir):
     )
 
 
-@query("agg_pivot")
+@query("agg_pivot", tier="cheap")
 def agg_pivot(spark, sf_dir):
     """PIVOT: order counts by status x priority (static value list —
     dynamic pivot values would need a driver-side pass at scale)."""
@@ -1504,7 +1510,7 @@ def docs_simhash_neardup_md5(spark, sf_dir):
     return pairs.select("d1", "d2", F.col("hamming").cast("long").alias("hamming"))
 
 
-@query("ingest_compat_ids")
+@query("ingest_compat_ids", tier="cheap")
 def ingest_compat_ids(spark, sf_dir):
     """Byte-exact blake2b-8 reference ids (H1 compat mode; no SQL
     oracle — blake2b is not a DuckDB builtin. Golden-id tests in
@@ -1663,7 +1669,7 @@ def docs_incremental_dedup(spark, sf_dir):
     return incremental_dedup(history, batch, hash_fn=md5_hash31)
 
 
-@query("events_approx_stats")
+@query("events_approx_stats", tier="cheap")
 def events_approx_stats(spark, sf_dir):
     """Approximate aggregates beside their exact twins — the sketch
     path a 100 TB deployment actually runs: HyperLogLog++ distinct
@@ -1714,7 +1720,7 @@ def docs_budget_cap(spark, sf_dir):
     return capped.select("source", "doc_id", "n_tokens", "cum_tokens")
 
 
-@query("tpch_q18_big_orders")
+@query("tpch_q18_big_orders", tier="cheap")
 def tpch_q18_big_orders(spark, sf_dir):
     """TPC-H Q18 shape: semi-join on a HAVING aggregate (orders whose
     total quantity exceeds a threshold), then re-join lineitem for
@@ -4739,7 +4745,7 @@ def docs_crawl_admit(spark, sf_dir):
     return url_dups.unionByName(content)
 
 
-@query("emb_anchor_gate")
+@query("emb_anchor_gate", tier="cheap")
 def emb_anchor_gate(spark, sf_dir):
     """CLIP-score-style anchor-alignment data filtering (round 8 —
     the DataComp/LAION curation recipe): vectors vec_id < 8 act as
@@ -4823,7 +4829,7 @@ def docs_phrase_search_indexed(spark, sf_dir):
     return phrase_search_indexed(pidx, _PHRASE)
 
 
-@query("docs_highlight")
+@query("docs_highlight", tier="cheap")
 def docs_highlight(spark, sf_dir):
     """ES highlight analog (the plain highlighter; functions/text.py
     highlight_snippets): for docs containing 'merge', the ±30-char
@@ -4856,7 +4862,7 @@ def docs_prefix_suggest(spark, sf_dir):
 _SEARCH_AFTER_TS = "2024-01-15 00:00:00"
 
 
-@query("events_search_after")
+@query("events_search_after", tier="cheap")
 def events_search_after(spark, sf_dir):
     """ES search_after analog — KEYSET pagination on the (ts,
     event_id) total order: the 20 events strictly after the cursor.
@@ -4879,7 +4885,7 @@ def events_search_after(spark, sf_dir):
     )
 
 
-@query("events_composite_agg")
+@query("events_composite_agg", tier="cheap")
 def events_composite_agg(spark, sf_dir):
     """ES composite-aggregation analog — bucket pagination: the
     (user_id, event_type) buckets ORDERED BY their composite key,
@@ -4901,7 +4907,7 @@ def events_composite_agg(spark, sf_dir):
     return g.filter(after).orderBy("user_id", "event_type").limit(25)
 
 
-@query("events_geo_distance")
+@query("events_geo_distance", tier="cheap")
 def events_geo_distance(spark, sf_dir):
     """ES geo_distance analog (operators/geo.py): events whose
     user's point (deterministic synthetic micro-degree coordinates —
@@ -4923,7 +4929,7 @@ def events_geo_distance(spark, sf_dir):
     )
 
 
-@query("events_geotile_grid")
+@query("events_geotile_grid", tier="cheap")
 def events_geotile_grid(spark, sf_dir):
     """ES geotile_grid aggregation analog (operators/geo.py): every
     event bucketed into a 12x12 fixed grid (10°x30° cells over
@@ -5032,7 +5038,7 @@ def docs_wildcard_search(spark, sf_dir):
     return wildcard_search(_t(spark, sf_dir, "documents"), _WILDCARDS)
 
 
-@query("docs_prefix_suggest_atrest")
+@query("docs_prefix_suggest_atrest", tier="cheap")
 def docs_prefix_suggest_atrest(spark, sf_dir):
     """ES completion suggester served ENTIRELY from the term
     dictionary (round 10 — operators/textindex.py
@@ -5127,8 +5133,8 @@ def docs_bm25_atrest(spark, sf_dir):
 @query("docs_bm25_search_after_atrest")
 def docs_bm25_search_after_atrest(spark, sf_dir):
     """ES search_after over the at-rest BM25 ranking (round 11 —
-    VERDICT r10 next #6; operators/textindex.py
-    bm25_search_after_atrest): KEYSET pagination on the
+    VERDICT r10 next #6; operators/textindex.py search_after over
+    bm25_scores_atrest): KEYSET pagination on the
     (score DESC, doc_id ASC) total order — page 2 of the 'the data'
     search, i.e. ranks 11-20. The cursor is page 1's LAST hit's sort
     values, derived IN-PLAN (a 1-row TakeOrdered over page 1's 10
@@ -5137,22 +5143,24 @@ def docs_bm25_search_after_atrest(spark, sf_dir):
     search exactly as ES does (search_after holds no server-side
     page state — re-running the ranking per page IS the deployment
     semantics, which is why the scored frame is deliberately NOT
-    materialized across the two executions). Both the cursor
+    materialized across the two executions). Both pages are cut
+    from ONE scored frame, so a build reads the index statistics
+    once. Both the cursor
     derivation and the page cut compile to TakeOrderedAndProject
     (plan-pinned) — never a global sort, never an OFFSET scan-and-
     discard. Fourth physical path on the BM25 score assembly, new
     oracle (the page-2 CTE replay). First driver row queued in the
     round-11 window."""
     from irclogbot_spark.operators.textindex import (
-        bm25_search_after_atrest,
+        bm25_scores_atrest,
         last_sort_values,
+        search_after,
     )
 
     path = _text_index_path(spark, sf_dir)
-    page1 = bm25_search_after_atrest(spark, path, ["the", "data"], k=10)
-    return bm25_search_after_atrest(
-        spark, path, ["the", "data"], k=10, after=last_sort_values(page1)
-    )
+    scored = bm25_scores_atrest(spark, path, ["the", "data"])
+    page1 = search_after(scored, k=10)
+    return search_after(scored, k=10, after=last_sort_values(page1))
 
 
 #: the declared bool-query clause set: must 'data' (df ~395/500 at
@@ -5170,7 +5178,7 @@ _BOOL_CLAUSES = dict(
 )
 
 
-@query("docs_bool_search")
+@query("docs_bool_search", tier="cheap")
 def docs_bool_search(spark, sf_dir):
     """ES bool query (round 11 — §2H; operators/boolquery.py): the
     compound must/should/filter/must_not search — the single
@@ -5209,7 +5217,7 @@ def docs_bool_search_atrest(spark, sf_dir):
     return bool_search_atrest(spark, _text_index_path(spark, sf_dir), **_BOOL_CLAUSES)
 
 
-@query("docs_dis_max_search")
+@query("docs_dis_max_search", tier="cheap")
 def docs_dis_max_search(spark, sf_dir):
     """ES dis_max query (round 11 — §2H; operators/boolquery.py
     dis_max_search): disjunction-max scoring — the multi_match
@@ -5250,7 +5258,7 @@ def docs_dis_max_search_atrest(spark, sf_dir):
     )
 
 
-@query("docs_boosting_search")
+@query("docs_boosting_search", tier="cheap")
 def docs_boosting_search(spark, sf_dir):
     """ES boosting query (round 11 — §2H; operators/boolquery.py
     boosting_search): docs matching 'batch' or 'window' scored by
@@ -5289,7 +5297,7 @@ def docs_boosting_search_atrest(spark, sf_dir):
     )
 
 
-@query("docs_constant_score")
+@query("docs_constant_score", tier="cheap")
 def docs_constant_score(spark, sf_dir):
     """ES constant_score query (round 11 — §2H; the cacheable
     filter-context wrapper): docs containing BOTH 'data' and 'merge'
@@ -5342,7 +5350,7 @@ _FSCORE_FUNCS = [
 ]
 
 
-@query("docs_function_score")
+@query("docs_function_score", tier="cheap")
 def docs_function_score(spark, sf_dir):
     """ES function_score query (round 11 — §2H;
     operators/boolquery.py function_score_search): the 'data batch'
@@ -5426,7 +5434,7 @@ def log_recency_search(spark, sf_dir):
     )
 
 
-@query("docs_collapse_by_source")
+@query("docs_collapse_by_source", tier="cheap")
 def docs_collapse_by_source(spark, sf_dir):
     """ES field-collapsing analog (round 10 — §2H: collapse +
     inner_hits): the 'the data' BM25 ranking collapsed on source —
@@ -5563,7 +5571,7 @@ _MM_TERMS = ["spark", "merge"]
 _MM_FIELDS = [("title", 2.0), ("text", 1.0)]
 
 
-@query("docs_multi_match")
+@query("docs_multi_match", tier="cheap")
 def docs_multi_match(spark, sf_dir):
     """ES multi_match type=best_fields (round 12 — §2H's last
     high-traffic retrieval gap, VERDICT r11 next #2;
@@ -5661,7 +5669,7 @@ def log_match_phrase_prefix_atrest(spark, sf_dir):
     )
 
 
-@query("docs_multi_match_most_fields")
+@query("docs_multi_match_most_fields", tier="cheap")
 def docs_multi_match_most_fields(spark, sf_dir):
     """ES multi_match type=most_fields (round 12 — the
     the-more-fields-match-the-better variant: ES compiles it to a
@@ -5700,7 +5708,7 @@ def docs_multi_match_most_fields_atrest(spark, sf_dir):
     )
 
 
-@query("docs_multi_match_cross_fields")
+@query("docs_multi_match_cross_fields", tier="cheap")
 def docs_multi_match_cross_fields(spark, sf_dir):
     """ES multi_match type=cross_fields (round 13 — VERDICT r12 next
     #2, the last multi_match type: the term-centric
@@ -5748,7 +5756,7 @@ def docs_multi_match_cross_fields_atrest(spark, sf_dir):
     )
 
 
-@query("docs_multi_match_operator_and")
+@query("docs_multi_match_operator_and", tier="cheap")
 def docs_multi_match_operator_and(spark, sf_dir):
     """ES multi_match best_fields with operator=and (round 13 —
     ES's match-operator knob: the search box that requires EVERY
@@ -5791,7 +5799,7 @@ def docs_multi_match_operator_and_atrest(spark, sf_dir):
     )
 
 
-@query("docs_bool_search_msm_pct")
+@query("docs_bool_search_msm_pct", tier="cheap")
 def docs_bool_search_msm_pct(spark, sf_dir):
     """ES bool query with a PERCENTAGE minimum_should_match (round
     13 — ES's msm value syntax: '50%' of four optional clauses,
@@ -5816,7 +5824,7 @@ def docs_bool_search_msm_pct(spark, sf_dir):
 _BF_KW = dict(must=["data"], should=["batch"], fuzzy=["mergz"], k=10)
 
 
-@query("docs_bool_fuzzy_search")
+@query("docs_bool_fuzzy_search", tier="cheap")
 def docs_bool_fuzzy_search(spark, sf_dir):
     """ES bool query with a FUZZY clause (round 13 — VERDICT r12
     next #4: ES `match` accepts `fuzziness` inside compound queries;
@@ -5854,7 +5862,7 @@ def docs_bool_fuzzy_search_atrest(spark, sf_dir):
 _SQS_QUERY = "+data batch -dup window"
 
 
-@query("docs_simple_query_string")
+@query("docs_simple_query_string", tier="cheap")
 def docs_simple_query_string(spark, sf_dir):
     """ES simple_query_string (round 12 —
     operators/querystring.py): the user-facing +/-/bare search-box
@@ -5904,7 +5912,7 @@ def _docs_with_req(spark, sf_dir):
     )
 
 
-@query("docs_terms_set")
+@query("docs_terms_set", tier="cheap")
 def docs_terms_set(spark, sf_dir):
     """ES terms_set query (round 12 — §2H;
     operators/boolquery.py terms_set_search): four searched terms,
@@ -5942,7 +5950,7 @@ def docs_terms_set_atrest(spark, sf_dir):
     )
 
 
-@query("docs_span_first")
+@query("docs_span_first", tier="cheap")
 def docs_span_first(spark, sf_dir):
     """ES span_first query (round 12 — §2H span-family completion;
     functions/text.py span_first_search): the in-order 'slow hash'
@@ -5975,7 +5983,7 @@ def docs_span_first_atrest(spark, sf_dir):
     return span_first_search(probed, ["slow", "hash"], end=20, slop=1)
 
 
-@query("docs_span_not")
+@query("docs_span_not", tier="cheap")
 def docs_span_not(spark, sf_dir):
     """ES span_not query (round 12 — §2H span-family completion;
     functions/text.py span_not_search): the in-order 'slow hash'
@@ -6073,7 +6081,7 @@ def docs_percolate(spark, sf_dir):
     return percolate(_t(spark, sf_dir, "documents"), qt)
 
 
-@query("events_pipeline_aggs")
+@query("events_pipeline_aggs", tier="cheap")
 def events_pipeline_aggs(spark, sf_dir):
     """ES pipeline-aggregation battery (round 9 — §2H: the
     date_histogram + cumulative_sum / derivative / moving_avg
@@ -6111,7 +6119,7 @@ def events_pipeline_aggs(spark, sf_dir):
     )
 
 
-@query("docs_rare_terms")
+@query("docs_rare_terms", tier="cheap")
 def docs_rare_terms(spark, sf_dir):
     """ES rare_terms aggregation analog (round 9 — §2H): the
     long-tail complement of significant_terms — the 10 RAREST terms
@@ -6149,7 +6157,7 @@ def docs_rare_terms(spark, sf_dir):
     )
 
 
-@query("events_adjacency_matrix")
+@query("events_adjacency_matrix", tier="cheap")
 def events_adjacency_matrix(spark, sf_dir):
     """ES adjacency_matrix aggregation analog (round 9 — §2H): named
     filters A (value >= 10), B (event_type = 'click'), C (January

@@ -93,17 +93,10 @@ def get_spark(app_name: str = "sparklog", master: str | None = None) -> SparkSes
         # runtime set raises CANNOT_MODIFY_STATIC_CONFIG); a session
         # built elsewhere (the driver harness) keeps PySpark's default.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        # UI off by default (test noise); SPARK_GRAFT_UI=1/true/yes
-        # turns it on for metric probes that read the REST stage API
-        # (scale_probe). Spark only parses 'true'/'false', so
-        # normalize the conventional truthy spellings here.
-        .config(
-            "spark.ui.enabled",
-            "true"
-            if os.environ.get("SPARK_GRAFT_UI", "").strip().lower()
-            in ("1", "true", "yes", "on")
-            else "false",
-        )
+        # No Spark UI: per-query and per-phase metrics (bench.py's
+        # ledger, scale_probe, perfbench) are status-store counters read
+        # by job group, which need neither the UI nor its REST API.
+        .config("spark.ui.enabled", "false")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -1,8 +1,9 @@
 """One-shot super-SF scale probe (VERDICT r6 next #6): build a ~10x
 documents corpus ("sf1") from the sf0.1 parquet and run the hottest
 document pipelines at both SFs, recording wall time and REAL shuffle
-bytes (Spark UI REST stage metrics) so SCALE.md's 100x-survivability
-claims carry a measured scaling point instead of design argument only.
+bytes (status-store counters per job group, bench.Counters) so
+SCALE.md's 100x-survivability claims carry a measured scaling point
+instead of design argument only.
 
 Corpus construction keeps duplicate DENSITY constant — the property
 that makes the ratio meaningful for dedup pipelines: replica k of a
@@ -26,10 +27,9 @@ Writes the measured table to stdout (markdown) for SCALE.md.
 from __future__ import annotations
 
 import argparse
-import json
 import os
-import time
-import urllib.request
+
+from bench import Counters
 
 
 def build_sf1(spark, src_sf: str, out_dir: str, replicas: int = 10) -> None:
@@ -127,31 +127,13 @@ def build_sf1(spark, src_sf: str, out_dir: str, replicas: int = 10) -> None:
     print(f"built {out_dir}: {nev} events x {replicas} replicas")
 
 
-def _stage_totals(ui: str) -> dict[str, int]:
-    apps = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications"))
-    app_id = apps[0]["id"]
-    stages = json.load(
-        urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/stages?status=complete")
-    )
-    return {
-        "shuffle_write": sum(s.get("shuffleWriteBytes", 0) for s in stages),
-        "shuffle_read": sum(s.get("shuffleReadBytes", 0) for s in stages),
-        "input": sum(s.get("inputBytes", 0) for s in stages),
-    }
-
-
-def probe(
-    spark, queries, names, sf_dir: str, reps: int, sink: str = "noop"
-) -> dict[str, dict]:
-    """sink='noop' (default since round 10) fully materializes every
-    query through the noop writer — the bench.py convention. A bare
-    .count() (sink='count', the pre-r10 behavior, kept for
-    comparability reruns of old rows) lets Catalyst ELIMINATE
-    subtrees a count can prove row-preserving — e.g. the left-outer
-    enrich join ending substring_dedup drops its entire dedup
-    pipeline under count(), reporting near-zero shuffle
-    (SCALE.md round-10 note)."""
-    ui = spark.sparkContext.uiWebUrl
+def probe(spark, queries, names, sf_dir: str, reps: int) -> dict[str, dict]:
+    """Best of ``reps`` runs of each query, fully materialized through
+    the noop writer (the bench.py convention; a bare .count() lets
+    Catalyst ELIMINATE subtrees a count can prove row-preserving —
+    e.g. the left-outer enrich join ending substring_dedup drops its
+    entire dedup pipeline under count(), SCALE.md round-10 note)."""
+    counters = Counters(spark)
     out = {}
     for name in names:
         best, metrics = None, None
@@ -161,23 +143,16 @@ def probe(
         # the full-materialization noop number
         n_rows = queries[name](spark, sf_dir).count()
         for _ in range(reps):
-            before = _stage_totals(ui)
-            t0 = time.time()
-            df = queries[name](spark, sf_dir)
-            if sink == "noop":
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                n_rows = df.count()
-            dt = time.time() - t0
-            after = _stage_totals(ui)
+            dt, _, met = counters.timed(
+                f"probe:{name}@{sf_dir}",
+                lambda: queries[name](spark, sf_dir)
+                .write.format("noop").mode("overwrite").save(),
+            )
             if best is None or dt < best:
-                best = dt
-                metrics = {
-                    k: after[k] - before[k] for k in after
-                } | {"rows": n_rows}
+                best, metrics = dt, {"rows": n_rows, **met}
         out[name] = {"sec": round(best, 2)} | metrics
-        print(f"  {name} @ {sf_dir}: {best:.2f}s rows={metrics['rows']} "
-              f"shuffleW={metrics['shuffle_write']/1e6:.1f}MB")
+        print(f"  {name} @ {sf_dir}: {best:.2f}s rows={n_rows} "
+              f"shuffleW={metrics['shuffle_write_bytes']/1e6:.1f}MB")
     return out
 
 
@@ -187,8 +162,8 @@ def crawl_probe(spark, sf_dir: str, work_dir: str) -> dict[str, dict]:
     URL new: full canonicalize -> URL-layer -> content-dedup ->
     admit + 4 index writes), an ALL-REFETCH batch (every URL already
     indexed: must settle at the URL layer with zero text hashed),
-    and the WARC write + record-walk read. Shuffle bytes from the UI
-    REST stage API, same as probe()."""
+    and the WARC write + record-walk read. Shuffle bytes from the
+    status-store counters of each step's job group, same as probe()."""
     import shutil
 
     from pyspark.sql import functions as F
@@ -196,7 +171,7 @@ def crawl_probe(spark, sf_dir: str, work_dir: str) -> dict[str, dict]:
     from irclogbot_spark.sources.warc import read_warc, write_warc
     from irclogbot_spark.streaming.corpus import crawl_ingest_batch
 
-    ui = spark.sparkContext.uiWebUrl
+    counters = Counters(spark)
     d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     docs = d.select(
         "doc_id",
@@ -208,17 +183,11 @@ def crawl_probe(spark, sf_dir: str, work_dir: str) -> dict[str, dict]:
     out: dict[str, dict] = {}
 
     def timed(label: str, fn) -> None:
-        before = _stage_totals(ui)
-        t0 = time.time()
-        rows = fn()
-        dt = time.time() - t0
-        after = _stage_totals(ui)
-        out[label] = {"sec": round(dt, 2), "rows": rows} | {
-            k: after[k] - before[k] for k in after
-        }
+        dt, rows, met = counters.timed(f"crawl:{label}@{sf_dir}", fn)
+        out[label] = {"sec": round(dt, 2), "rows": rows, **met}
         print(
             f"  {label} @ {sf_dir}: {dt:.2f}s rows={rows} "
-            f"shuffleW={out[label]['shuffle_write']/1e6:.1f}MB"
+            f"shuffleW={met['shuffle_write_bytes']/1e6:.1f}MB"
         )
 
     corpus_dir = os.path.join(work_dir, "corpus")
@@ -298,14 +267,6 @@ def main() -> None:
         help="comma-separated subset of PROBE_QUERIES to run",
     )
     ap.add_argument(
-        "--sink",
-        choices=["noop", "count"],
-        default="noop",
-        help="noop = full materialization (default, round 10); "
-        "count = the pre-r10 .count() (subtree-elimination caveat "
-        "in probe()'s docstring)",
-    )
-    ap.add_argument(
         "--crawl",
         action="store_true",
         help="run the crawl-admission + WARC probe instead of PROBE_QUERIES",
@@ -317,20 +278,10 @@ def main() -> None:
         else PROBE_QUERIES
     )
 
-    # the probe reads the UI REST stage API — force the UI on before
-    # the session builds (get_spark normalizes truthy spellings)
-    os.environ.setdefault("SPARK_GRAFT_UI", "true")
-
     import __spark_entry__ as entry
     from irclogbot_spark.session import get_spark
 
     spark = get_spark("scale_probe", master="local[32]")
-    if spark.sparkContext.uiWebUrl is None:
-        raise SystemExit(
-            "Spark UI is disabled (uiWebUrl=None) — scale_probe needs the "
-            "REST stage API. Unset SPARK_GRAFT_UI=0/false, or stop the "
-            "already-running SparkSession that was built with the UI off."
-        )
     src = "/root/testdata/sf0.1"
     if not args.skip_build:
         build_sf1(spark, src, args.out)
@@ -344,16 +295,16 @@ def main() -> None:
     else:
         qs = entry.queries()
         print("== sf0.1 ==")
-        small = probe(spark, qs, probe_queries, src, args.reps, args.sink)
+        small = probe(spark, qs, probe_queries, src, args.reps)
         print("== sf1 (10x) ==")
-        big = probe(spark, qs, probe_queries, args.out, args.reps, args.sink)
+        big = probe(spark, qs, probe_queries, args.out, args.reps)
 
     print("\n| query | sf0.1 s | sf1 s | time x | sf0.1 shufW MB | sf1 shufW MB | shufW x |")
     print("|---|---|---|---|---|---|---|")
     for name in probe_queries:
         s, b = small[name], big[name]
         tr = b["sec"] / s["sec"] if s["sec"] else float("inf")
-        sw_s, sw_b = s["shuffle_write"] / 1e6, b["shuffle_write"] / 1e6
+        sw_s, sw_b = s["shuffle_write_bytes"] / 1e6, b["shuffle_write_bytes"] / 1e6
         swr = (sw_b / sw_s) if sw_s > 0.05 else float("nan")
         print(
             f"| {name} | {s['sec']} | {b['sec']} | {tr:.1f} | "

@@ -42,9 +42,12 @@ BUDGETS = {
 #: docs_bool_search_atrest in 8 and docs_multi_match_atrest in 14 (the
 #: doclens aggregate, the df aggregate and broadcast and the doclens
 #: join per field or clause), and log_significant_terms in 9 (three
-#: self-joins and a localCheckpoint)
+#: self-joins and a localCheckpoint); docs_bm25_search_after_atrest ran
+#: 5 while it read the statistics once per page (4 with both pages cut
+#: from one scored frame)
 JOB_BUDGETS = {
     "docs_bm25_atrest": 3,
+    "docs_bm25_search_after_atrest": 4,
     "docs_bool_search_atrest": 3,
     "docs_multi_match_atrest": 5,
     "log_significant_terms": 3,

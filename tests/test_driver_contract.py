@@ -7,6 +7,8 @@ the 25 round-3/4 flagships that had only local parity checks)."""
 
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as entrymod
 from irclogbot_spark.queries import _DRIVER_WINDOW
 
@@ -115,17 +117,40 @@ def test_every_oracle_has_a_query():
         assert name in qs, name
 
 
+def _assert_bench_covers(qs, headline, cheap):
+    assert set(headline) | set(cheap) == set(qs), (
+        sorted(set(qs) - set(headline) - set(cheap)),  # registered, untimed
+        sorted((set(headline) | set(cheap)) - set(qs)),  # stale name
+    )
+    assert not set(headline) & set(cheap)
+
+
 def test_bench_covers_every_registered_query():
     # VERDICT r7 missing #4: every name in queries() must have a
-    # recorded bench time — HEADLINE (median-of-3) or CHEAP (single
-    # warmed pass). A new registration missing from both lists fails
-    # here instead of silently going unbenched.
+    # recorded bench time — headline (median-of-3) or cheap (single
+    # warmed pass). bench reads both tiers from the registry; a query
+    # registered with a tier bench does not time fails here instead
+    # of silently going unbenched.
     import bench
 
-    qs = set(entrymod.queries())
-    benched = set(bench.HEADLINE) | set(bench.CHEAP)
-    assert benched == qs, (
-        sorted(qs - benched),  # registered but unbenched
-        sorted(benched - qs),  # benched but unregistered (stale name)
-    )
-    assert not set(bench.HEADLINE) & set(bench.CHEAP)
+    qs = entrymod.queries()
+    _assert_bench_covers(qs, *bench.tiers(qs))
+
+
+def test_bench_coverage_check_rejects_untimed_stale_and_doubled():
+    import bench
+
+    def unbenched(spark, sf_dir):
+        return None
+
+    unbenched.tier = "nightly"  # a tier bench does not time
+    qs = entrymod.queries()
+    headline, cheap = bench.tiers(qs)
+    untimed = {**qs, "unbenched": unbenched}
+    for args in (
+        (untimed, *bench.tiers(untimed)),
+        (qs, headline + ["no_such_query"], cheap),
+        (qs, headline, cheap + headline[:1]),
+    ):
+        with pytest.raises(AssertionError):
+            _assert_bench_covers(*args)

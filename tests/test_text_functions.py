@@ -493,18 +493,20 @@ def test_bm25_rescore_reorders_within_window_only(spark):
 
 
 def test_bm25_search_after_atrest_keyset_pagination(spark, tmp_path):
-    """operators/textindex.py bm25_search_after_atrest (round 11):
+    """operators/textindex.py search_after over bm25_scores_atrest
+    (round 11):
     page 1 and the cursor-cut page 2 are disjoint, their union is
     the top-(2k) of the same ranking, order within each page is
     (score desc, id asc), and BOTH pages compile to
     TakeOrderedAndProject — never a global sort, never an offset."""
     from irclogbot_spark.functions.text import bm25_rank_indexed
     from irclogbot_spark.operators.textindex import (
-        bm25_search_after_atrest,
+        bm25_scores_atrest,
         last_sort_values,
         postings_tf,
         probe_postings,
         read_text_index,
+        search_after,
         write_text_index,
     )
 
@@ -517,10 +519,9 @@ def test_bm25_search_after_atrest_keyset_pagination(spark, tmp_path):
     write_text_index(docs, path, n_buckets=8)
     terms = ["the", "data"]
 
-    page1 = bm25_search_after_atrest(spark, path, terms, k=10)
-    page2 = bm25_search_after_atrest(
-        spark, path, terms, k=10, after=last_sort_values(page1)
-    )
+    scored = bm25_scores_atrest(spark, path, terms)
+    page1 = search_after(scored, k=10)
+    page2 = search_after(scored, k=10, after=last_sort_values(page1))
     r1 = [tuple(r) for r in page1.collect()]
     r2 = [tuple(r) for r in page2.collect()]
     assert len(r1) == 10 and len(r2) == 10
@@ -540,9 +541,7 @@ def test_bm25_search_after_atrest_keyset_pagination(spark, tmp_path):
     cs, cid = r1[-1][1], r1[-1][0]
     r2_lit = [
         tuple(r)
-        for r in bm25_search_after_atrest(
-            spark, path, terms, k=10, after=(cs, cid)
-        ).collect()
+        for r in search_after(scored, k=10, after=(cs, cid)).collect()
     ]
     assert r2_lit == r2
 
