@@ -2,8 +2,8 @@
 BENCH_AB.md method; ``--query ingest_parse`` is the original
 ingest-parse A/B).
 
-Two checkouts — a git worktree pinned at --ref and the current
-HEAD working tree — run ALTERNATELY, one fresh JVM per (code,
+Two checkouts — a git worktree pinned at --ref (or the tree at
+--worktree) and the current HEAD working tree — run ALTERNATELY, one fresh JVM per (code,
 round) via subprocess, each doing a sf0.001 + sf0.1 warm pass then
 timing 3 sf0.1 passes through the noop sink; medians compared.
 Interleaving cancels machine drift; fresh JVMs remove suite-level
@@ -14,8 +14,9 @@ r8 wrong #1: docs_simhash_neardup read 8.6 s in the driver's run vs
 2.5 s in the builder's on identical code).
 
 Usage: python ab_query.py --query docs_simhash_neardup
-           [--ref HEAD] [--rounds 3] [--timed 3]
-Prints the BENCH_AB.md row.
+           [--ref HEAD | --worktree DIR] [--rounds 3] [--timed 3]
+Prints the BENCH_AB.md row; the other side is labelled with --worktree's
+directory when given, else with --ref.
 """
 
 from __future__ import annotations
@@ -101,6 +102,7 @@ def main() -> None:
     args = ap.parse_args()
 
     wt = args.worktree or f"/tmp/ab_{args.query}_worktree"
+    ref_label = args.worktree or args.ref
     if not os.path.isdir(wt):
         subprocess.run(
             ["git", "worktree", "add", "--detach", wt, args.ref],
@@ -131,7 +133,7 @@ def main() -> None:
 
     ref_med = statistics.median(ref_times)
     head_med = statistics.median(head_times)
-    print(f"\n| query | {args.ref} (median s) | HEAD (median s) | ratio |")
+    print(f"\n| query | {ref_label} (median s) | HEAD (median s) | ratio |")
     print("|---|---|---|---|")
     print(
         f"| {args.query} | {ref_med:.3f} | {head_med:.3f} | "
@@ -139,13 +141,13 @@ def main() -> None:
     )
     if ref_cal and head_cal:
         print(
-            f"calibration medians: {args.ref} "
+            f"calibration medians: {ref_label} "
             f"{statistics.median(ref_cal):.3f}s, HEAD "
             f"{statistics.median(head_cal):.3f}s (reference host 2.0s)"
         )
     all_times = sorted(ref_times + head_times)
     print(
-        f"spreads: {args.ref} {min(ref_times):.3f}-{max(ref_times):.3f}, "
+        f"spreads: {ref_label} {min(ref_times):.3f}-{max(ref_times):.3f}, "
         f"HEAD {min(head_times):.3f}-{max(head_times):.3f}; "
         f"pooled median {statistics.median(all_times):.3f}, "
         f"n={len(all_times)}"

@@ -7,7 +7,9 @@ each has an exact ANSI-SQL twin for the DuckDB oracle.
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -28,18 +30,118 @@ LANG_STOPWORDS = {
 }
 
 
-def bm25_term_score(tf, dfreq, n, avgdl, dl, k1: float, b: float) -> Column:
+def bm25_term_scores(
+    n_terms: int,
+    k1: float,
+    b: float,
+    *,
+    tf: str = "tf{i}",
+    df: str | list[Column] = "df{i}",
+    n: str = "n",
+    avgdl: str = "avgdl",
+    dl: str = "dl",
+) -> list[Column]:
     """The repo-wide BM25 per-term expression (rational idf — see
-    bm25_rank's determinism note). A term the doc does not contain
-    scores +0.0 without evaluating the length norm: at b=1.0 or k1=0
-    an empty field makes the denominator ``tf + k1 * norm`` zero,
-    which the engine's pinned ANSI mode raises on. For any other
-    parameters the formula itself gives +0.0 at tf=0, so the guard
-    changes no score."""
-    denom_norm = F.lit(1.0) - F.lit(b) + F.lit(b) * dl / avgdl
-    idf = (n - dfreq + F.lit(0.5)) / (dfreq + F.lit(0.5))
-    tfc = (tf * (F.lit(k1) + F.lit(1.0))) / (tf + F.lit(k1) * denom_norm)
-    return F.when(tf > 0, idf * tfc).otherwise(F.lit(0.0))
+    bm25_rank's determinism note) of each term ``i`` over a scored
+    frame's columns, in term order. ``tf`` and ``df`` are templates
+    over ``i`` (multi_match asks for ``tf_<field>_{i}``); ``df`` may
+    instead be one Column per term (cross_fields' blended df).
+
+    A term the doc does not contain scores +0.0 without evaluating
+    the length norm: at b=1.0 or k1=0 an empty field makes the
+    denominator ``tf + k1 * norm`` zero, which the engine's pinned
+    ANSI mode raises on. For any other parameters the formula itself
+    gives +0.0 at tf=0, so the guard changes no score. The constants
+    and the length norm are built once and shared by every term's
+    expression (the same tree, fewer JVM calls to build it)."""
+    one, lb, half, lk1, zero = (F.lit(v) for v in (1.0, b, 0.5, k1, 0.0))
+    norm = one - lb + lb * F.col(dl) / F.col(avgdl)
+    k1_plus_1, n_col = lk1 + one, F.col(n)
+    dfs = df if isinstance(df, list) else [F.col(df.format(i=i)) for i in range(n_terms)]
+    out = []
+    for i in range(n_terms):
+        tf_col, dfreq = F.col(tf.format(i=i)), dfs[i]
+        idf = (n_col - dfreq + half) / (dfreq + half)
+        tfc = (tf_col * k1_plus_1) / (tf_col + lk1 * norm)
+        out.append(F.when(tf_col > 0, idf * tfc).otherwise(zero))
+    return out
+
+
+def bm25_score_sum(n_terms: int, k1: float, b: float, **names) -> Column:
+    """The per-term scores of :func:`bm25_term_scores` added IN TERM
+    ORDER: one fixed left-to-right tree of double additions, which
+    the scan form, the at-rest form and the SQL twins all evaluate,
+    so their scores agree bit for bit (a SUM() over matched terms
+    would re-associate and drift in the last ulp)."""
+    return reduce(operator.add, bm25_term_scores(n_terms, k1, b, **names))
+
+
+def bm25_scan_columns(
+    text: Column,
+    terms: list[str],
+    n_df: int | None = None,
+    *,
+    toks: str = "_toks",
+    dl: str = "dl",
+    tf: str = "tf{i}",
+    n: str | None = "n",
+    avgdl: str = "avgdl",
+    df: str = "df{i}",
+) -> tuple[Column, list[Column], list[Column]]:
+    """The corpus-scan BM25 inputs of one text column, for
+    :func:`bm25_scan_frame`: the token array aliased ``toks`` (each
+    row is tokenized once), the in-row ``dl`` and one ``tf`` per term
+    over that array, and the stats-row aggregates over those columns
+    — ``avgdl`` (the integer dl sum divided once), ``n`` (left out
+    when None: one stats row carries one ``n``) and ``df`` for the
+    first ``n_df`` terms (all by default; a must_not or negative term
+    is gated on, never scored). ``tf`` and ``df`` are templates over
+    the term's index ``i``. ``text`` is a Column, so a caller may
+    coalesce a NULL field to '' first."""
+    arr = F.col(toks)
+    in_row = [
+        F.size(arr).alias(dl),
+        *[
+            F.size(F.filter(arr, lambda x: x == F.lit(t))).alias(tf.format(i=i))
+            for i, t in enumerate(terms)
+        ],
+    ]
+    count = F.count(F.lit(1))
+    aggs = [(F.sum(dl).cast("double") / count).alias(avgdl)]
+    if n is not None:
+        aggs.append(count.alias(n))
+    aggs += [
+        F.sum(F.when(F.col(tf.format(i=i)) > 0, 1).otherwise(0)).alias(df.format(i=i))
+        for i in range(len(terms) if n_df is None else n_df)
+    ]
+    tokens = F.regexp_extract_all(text, F.lit(WORD_RE), F.lit(0)).alias(toks)
+    return tokens, in_row, aggs
+
+
+def bm25_scan_frame(df, keep: list[str], *scans):
+    """The scan form's scored frame: the ``keep`` columns with each
+    :func:`bm25_scan_columns` scan's in-row columns, joined with the
+    ONE broadcast stats row aggregated over them. The token arrays
+    come from one projection, dl/tf from the next; zero shuffles."""
+    kept = [F.col(c) for c in keep]
+    base = df.select(*kept, *[s[0] for s in scans]).select(
+        *kept, *[c for s in scans for c in s[1]]
+    )
+    return base.join(F.broadcast(base.agg(*[c for s in scans for c in s[2]])))
+
+
+def term_counts(count: str = "tf") -> Column:
+    """Each distinct token of the token-array column ``_toks`` with its
+    in-row count: array<struct<term, ``count``: long>>, counted by
+    in-row higher-order functions (O(len^2) over a short array beats
+    a (doc, term) pre-shuffle)."""
+    return F.transform(
+        F.array_distinct("_toks"),
+        lambda t: F.struct(
+            t.alias("term"),
+            F.size(F.filter(F.col("_toks"), lambda x: x == t)).cast("long").alias(count),
+        ),
+    )
 
 
 def token_count(text: Column | str, pattern: str = WORD_RE) -> Column:
@@ -136,34 +238,9 @@ def bm25_rank(
     """
     if not terms:
         raise ValueError("terms must be non-empty")
-    toks = F.regexp_extract_all(F.col(text_col), F.lit(WORD_RE), F.lit(0))
-
-    def _eq(t: str):
-        return lambda x: x == F.lit(t)
-
-    base = df.select(F.col(id_col), toks.alias("_toks")).select(
-        F.col(id_col),
-        F.size("_toks").alias("dl"),
-        *[F.size(F.filter(F.col("_toks"), _eq(t))).alias(f"tf{i}") for i, t in enumerate(terms)],
-    )
-    stats = base.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(F.when(F.col(f"tf{i}") > 0, 1).otherwise(0)).alias(f"df{i}")
-            for i in range(len(terms))
-        ],
-    )
-    joined = base.join(F.broadcast(stats))
-    score = None
-    for i in range(len(terms)):
-        term_score = bm25_term_score(
-            F.col(f"tf{i}"), F.col(f"df{i}"), F.col("n"), F.col("avgdl"),
-            F.col("dl"), k1, b,
-        )
-        score = term_score if score is None else score + term_score
+    joined = bm25_scan_frame(df, [id_col], bm25_scan_columns(F.col(text_col), terms))
     return (
-        joined.select(F.col(id_col), score.alias("score"))
+        joined.select(F.col(id_col), bm25_score_sum(len(terms), k1, b).alias("score"))
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
     )
@@ -190,16 +267,7 @@ def build_text_index(df, id_col: str = "doc_id", text_col: str = "text"):
         ),
     )
     doclens = toks.select(F.col(id_col), F.size("_toks").alias("dl"))
-    entries = F.transform(
-        F.array_distinct("_toks"),
-        lambda t: F.struct(
-            t.alias("term"),
-            F.size(F.filter(F.col("_toks"), lambda x: x == t))
-            .cast("long")
-            .alias("tf"),
-        ),
-    )
-    postings = toks.select(F.col(id_col), F.explode(entries).alias("_e")).select(
+    postings = toks.select(F.col(id_col), F.explode(term_counts()).alias("_e")).select(
         id_col, F.col("_e.term").alias("term"), F.col("_e.tf").alias("tf")
     )
     return postings, doclens
@@ -325,14 +393,7 @@ def bm25_scores(
     if not terms:
         raise ValueError("terms must be non-empty")
     j = bm25_term_frame(hits, terms, stats, id_col)
-    score = None
-    for i in range(len(terms)):
-        s = bm25_term_score(
-            F.col(f"tf{i}"), F.col(f"df{i}"), F.col("n"), F.col("avgdl"),
-            F.col("dl"), k1, b,
-        )
-        score = s if score is None else score + s
-    return j.select(F.col(id_col), score.alias("score"))
+    return j.select(F.col(id_col), bm25_score_sum(len(terms), k1, b).alias("score"))
 
 
 def bm25_scores_indexed(
@@ -533,16 +594,7 @@ def tfidf_topk(df, id_col: str = "doc_id", text_col: str = "text", k: int = 3):
         F.col(id_col),
         F.regexp_extract_all(F.col(text_col), F.lit(WORD_RE), F.lit(0)).alias("_toks"),
     )
-    entries = F.transform(
-        F.array_distinct("_toks"),
-        lambda t: F.struct(
-            t.alias("term"),
-            F.size(F.filter(F.col("_toks"), lambda x: x == t))
-            .cast("long")
-            .alias("tf"),
-        ),
-    )
-    tc = toks.select(F.col(id_col), F.explode(entries).alias("_e")).select(
+    tc = toks.select(F.col(id_col), F.explode(term_counts()).alias("_e")).select(
         id_col, F.col("_e.term").alias("term"), F.col("_e.tf").alias("tf")
     )
     # df-branch: distinct terms only — skips the per-term tf filters

@@ -44,10 +44,15 @@ the bool should-sum). max/sum/discount use the identical expression
 tree in the DuckDB twin (GREATEST + the fixed-order sum), so the
 scores value-hash.
 
-Scale shape (both query types, both physical paths):
+Scale shape (every scorer here, both physical paths). The BM25
+assembly is shared, in functions/text.py: ``bm25_scan_frame`` /
+``bm25_scan_columns`` build the scan frame, ``bm25_term_frame`` the
+at-rest one, and ``bm25_term_scores`` / ``bm25_score_sum`` the
+per-term scores; each query type here only adds its gates and its
+combine, in one ``_<type>_project`` both forms call.
 
-- Scan form: one in-row projection computes per-doc dl + one tf per
-  referenced term (the token array materializes once); ONE global
+- Scan form: one projection tokenizes each row once (``_toks``), the
+  next computes per-doc dl + one tf per referenced term; ONE global
   aggregate produces the corpus-stats row (n, avgdl, per-term df)
   and broadcasts back; the gates and the score are map-side
   expressions; top-k is a partial TakeOrdered. Zero corpus shuffles.
@@ -63,10 +68,19 @@ Scale shape (both query types, both physical paths):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import operator
+from functools import reduce
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from irclogbot_spark.functions.text import bm25_term_score
+from irclogbot_spark.functions.text import (
+    WORD_RE,
+    bm25_scan_columns,
+    bm25_scan_frame,
+    bm25_score_sum,
+    bm25_term_scores,
+)
 
 
 def parse_minimum_should_match(spec, n_should: int) -> int | None:
@@ -147,40 +161,6 @@ def _check_no_duplicate_terms(ref: list[str]) -> None:
         )
 
 
-def _term_frame_scan(
-    df: DataFrame,
-    ref: list[str],
-    n_scoring: int,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """(id, dl, tf0..tfN, n, avgdl, df0..df{n_scoring-1}): the in-row
-    tf projection joined with the ONE broadcast corpus-stats row —
-    the shared frame both compound scorers read. Zero shuffles."""
-    toks = F.regexp_extract_all(F.col(text_col), F.lit(r"\S+"), F.lit(0))
-
-    def _eq(t: str):
-        return lambda x: x == F.lit(t)
-
-    base = df.select(
-        F.col(id_col),
-        F.size(toks).alias("dl"),
-        *[
-            F.size(F.filter(toks, _eq(t))).alias(f"tf{i}")
-            for i, t in enumerate(ref)
-        ],
-    )
-    stats = base.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(F.when(F.col(f"tf{i}") > 0, 1).otherwise(0)).alias(f"df{i}")
-            for i in range(n_scoring)
-        ],
-    )
-    return base.join(F.broadcast(stats))
-
-
 def _term_frame_atrest(
     spark: SparkSession,
     path: str,
@@ -188,7 +168,8 @@ def _term_frame_atrest(
     id_col: str,
     index: tuple | None = None,
 ) -> DataFrame:
-    """The same frame reassembled from the at-rest index: one
+    """The scan frame (id, dl, tf<i>, n, avgdl, df<i> — functions/text.py
+    bm25_scan_frame) reassembled from the at-rest index: one
     bucket-pruned postings probe over every referenced term and one
     doc-keyed pivot agg (functions/text.py bm25_term_frame), with dl
     read from the posting rows and n, avgdl and per-term df as
@@ -225,13 +206,7 @@ def _bool_project(
 ) -> DataFrame:
     n_scoring = len(must) + len(should)
     n_ref = n_scoring + len(must_not)
-    score = None
-    for i in range(n_scoring):
-        s = bm25_term_score(
-            F.col(f"tf{i}"), F.col(f"df{i}"), F.col("n"), F.col("avgdl"),
-            F.col("dl"), k1, b,
-        )
-        score = s if score is None else score + s
+    score = bm25_score_sum(n_scoring, k1, b)
     n_should = None
     for i in range(len(must), n_scoring):
         c = F.when(F.col(f"tf{i}") > 0, 1).otherwise(0)
@@ -279,7 +254,9 @@ def bool_search(
     msm = _resolve_msm(minimum_should_match, must, should)
     ref = must + should + must_not
     _check_no_duplicate_terms(ref)
-    j = _term_frame_scan(df, ref, len(must) + len(should), id_col, text_col)
+    j = bm25_scan_frame(
+        df, [id_col], bm25_scan_columns(F.col(text_col), ref, len(must) + len(should))
+    )
     return _bool_project(
         j, must, should, must_not, msm, dl_between, k, id_col, k1, b
     )
@@ -325,22 +302,11 @@ def _dis_max_project(
     k1: float,
     b: float,
 ) -> DataFrame:
-    scores: list[Column] = [
-        bm25_term_score(
-            F.col(f"tf{i}"), F.col(f"df{i}"), F.col("n"), F.col("avgdl"),
-            F.col("dl"), k1, b,
-        )
-        for i in range(len(terms))
-    ]
-    total = None
-    for s in scores:
-        total = s if total is None else total + s
+    scores = bm25_term_scores(len(terms), k1, b)
+    total = reduce(operator.add, scores)
     best = F.greatest(*scores) if len(scores) > 1 else scores[0]
     score = best + F.lit(float(tie_breaker)) * (total - best)
-    gate = None
-    for i in range(len(terms)):
-        c = F.col(f"tf{i}") > 0
-        gate = c if gate is None else gate | c
+    gate = reduce(operator.or_, [F.col(f"tf{i}") > 0 for i in range(len(terms))])
     return (
         j.filter(gate)
         .select(F.col(id_col), score.alias("score"))
@@ -365,7 +331,7 @@ def dis_max_search(
     if not terms:
         raise ValueError("dis_max needs at least one term")
     _check_no_duplicate_terms(list(terms))
-    j = _term_frame_scan(df, list(terms), len(terms), id_col, text_col)
+    j = bm25_scan_frame(df, [id_col], bm25_scan_columns(F.col(text_col), list(terms)))
     return _dis_max_project(j, list(terms), tie_breaker, k, id_col, k1, b)
 
 
@@ -402,22 +368,13 @@ def _boosting_project(
     b: float,
 ) -> DataFrame:
     n_pos = len(positive)
-    score = None
-    for i in range(n_pos):
-        s = bm25_term_score(
-            F.col(f"tf{i}"), F.col(f"df{i}"), F.col("n"), F.col("avgdl"),
-            F.col("dl"), k1, b,
+    score = bm25_score_sum(n_pos, k1, b)
+    pos_gate = reduce(operator.or_, [F.col(f"tf{i}") > 0 for i in range(n_pos)])
+    if negative:
+        neg_match = reduce(
+            operator.or_,
+            [F.col(f"tf{i}") > 0 for i in range(n_pos, n_pos + len(negative))],
         )
-        score = s if score is None else score + s
-    pos_gate = None
-    for i in range(n_pos):
-        c = F.col(f"tf{i}") > 0
-        pos_gate = c if pos_gate is None else pos_gate | c
-    neg_match = None
-    for i in range(n_pos, n_pos + len(negative)):
-        c = F.col(f"tf{i}") > 0
-        neg_match = c if neg_match is None else neg_match | c
-    if neg_match is not None:
         score = score * F.when(
             neg_match, F.lit(float(negative_boost))
         ).otherwise(F.lit(1.0))
@@ -450,7 +407,9 @@ def boosting_search(
         raise ValueError("boosting needs at least one positive term")
     ref = list(positive) + list(negative or [])
     _check_no_duplicate_terms(ref)
-    j = _term_frame_scan(df, ref, len(positive), id_col, text_col)
+    j = bm25_scan_frame(
+        df, [id_col], bm25_scan_columns(F.col(text_col), ref, len(positive))
+    )
     return _boosting_project(
         j, list(positive), list(negative or []), negative_boost, k, id_col, k1, b
     )
@@ -498,15 +457,11 @@ def constant_score_search(
     key). Scan form is map-only — no stats row is even computed."""
     if not filter_terms:
         raise ValueError("constant_score needs at least one filter term")
-    toks = F.regexp_extract_all(F.col(text_col), F.lit(r"\S+"), F.lit(0))
-
-    def _eq(t: str):
-        return lambda x: x == F.lit(t)
-
-    gate = None
-    for t in filter_terms:
-        c = F.size(F.filter(toks, _eq(t))) > 0
-        gate = c if gate is None else gate & c
+    toks = F.regexp_extract_all(F.col(text_col), F.lit(WORD_RE), F.lit(0))
+    gate = reduce(
+        operator.and_,
+        [F.size(F.filter(toks, lambda x: x == F.lit(t))) > 0 for t in filter_terms],
+    )
     if dl_between is not None:
         lo, hi = dl_between
         gate = gate & F.size(toks).between(F.lit(int(lo)), F.lit(int(hi)))
@@ -573,17 +528,11 @@ def _terms_set_project(
     k1: float,
     b: float,
 ) -> DataFrame:
-    score = None
-    n_matched = None
-    for i in range(len(terms)):
-        s = bm25_term_score(
-            F.col(f"tf{i}"), F.col(f"df{i}"), F.col("n"), F.col("avgdl"),
-            F.col("dl"), k1, b,
-        )
-        score = s if score is None else score + s
-        c = F.when(F.col(f"tf{i}") > 0, 1).otherwise(0)
-        n_matched = c if n_matched is None else n_matched + c
-    n_matched = n_matched.cast("long")
+    score = bm25_score_sum(len(terms), k1, b)
+    n_matched = reduce(
+        operator.add,
+        [F.when(F.col(f"tf{i}") > 0, 1).otherwise(0) for i in range(len(terms))],
+    ).cast("long")
     # the engine-wide >= 1-scoring-hit floor (the at-rest pivot only
     # materializes hit docs): a per-doc msm of 0 or less clamps to 1
     # — the module-docstring deviation, same reasoning as bool msm
@@ -626,29 +575,9 @@ def terms_set_search(
     if not terms:
         raise ValueError("terms_set needs at least one term")
     _check_no_duplicate_terms(list(terms))
-    toks = F.regexp_extract_all(F.col(text_col), F.lit(r"\S+"), F.lit(0))
-
-    def _eq(t: str):
-        return lambda x: x == F.lit(t)
-
-    base = df.select(
-        F.col(id_col),
-        F.col(msm_col),
-        F.size(toks).alias("dl"),
-        *[
-            F.size(F.filter(toks, _eq(t))).alias(f"tf{i}")
-            for i, t in enumerate(terms)
-        ],
+    j = bm25_scan_frame(
+        df, [id_col, msm_col], bm25_scan_columns(F.col(text_col), list(terms))
     )
-    stats = base.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(F.when(F.col(f"tf{i}") > 0, 1).otherwise(0)).alias(f"df{i}")
-            for i in range(len(terms))
-        ],
-    )
-    j = base.join(F.broadcast(stats))
     return _terms_set_project(j, list(terms), msm_col, k, id_col, k1, b)
 
 
@@ -739,13 +668,7 @@ def _function_score_project(
         raise ValueError(f"unknown score_mode {score_mode!r}")
     if boost_mode not in ("multiply", "sum"):
         raise ValueError(f"unknown boost_mode {boost_mode!r}")
-    qscore = None
-    for i in range(len(terms)):
-        s = bm25_term_score(
-            F.col(f"tf{i}"), F.col(f"df{i}"), F.col("n"), F.col("avgdl"),
-            F.col("dl"), k1, b,
-        )
-        qscore = s if qscore is None else qscore + s
+    qscore = bm25_score_sum(len(terms), k1, b)
     combined = None
     for spec in functions:
         f = _function_factor(spec, field_cols)
@@ -761,10 +684,7 @@ def _function_score_project(
         score = qscore * combined
     else:  # "sum"
         score = qscore + combined
-    gate = None
-    for i in range(len(terms)):
-        c = F.col(f"tf{i}") > 0
-        gate = c if gate is None else gate | c
+    gate = reduce(operator.or_, [F.col(f"tf{i}") > 0 for i in range(len(terms))])
     return (
         j.filter(gate)
         .select(F.col(id_col), score.alias("score"))
@@ -797,29 +717,9 @@ def function_score_search(
         raise ValueError("function_score needs at least one term")
     _check_no_duplicate_terms(list(terms))
     fields = sorted({s["field"] for s in functions if "field" in s})
-    toks = F.regexp_extract_all(F.col(text_col), F.lit(r"\S+"), F.lit(0))
-
-    def _eq(t: str):
-        return lambda x: x == F.lit(t)
-
-    base = df.select(
-        F.col(id_col),
-        *[F.col(f) for f in fields],
-        F.size(toks).alias("dl"),
-        *[
-            F.size(F.filter(toks, _eq(t))).alias(f"tf{i}")
-            for i, t in enumerate(terms)
-        ],
+    j = bm25_scan_frame(
+        df, [id_col, *fields], bm25_scan_columns(F.col(text_col), list(terms))
     )
-    stats = base.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(F.when(F.col(f"tf{i}") > 0, 1).otherwise(0)).alias(f"df{i}")
-            for i in range(len(terms))
-        ],
-    )
-    j = base.join(F.broadcast(stats))
     return _function_score_project(
         j, list(terms), functions, {f: F.col(f) for f in fields},
         score_mode, boost_mode, k, id_col, k1, b,
@@ -904,8 +804,6 @@ def bool_fuzzy_search(
     must_not = list(must_not or [])
     stems = list(fuzzy or [])
     if stems:
-        from irclogbot_spark.functions.text import WORD_RE
-
         toks = F.regexp_extract_all(F.col(text_col), F.lit(WORD_RE), F.lit(0))
         vocab = (
             df.select(

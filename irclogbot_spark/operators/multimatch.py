@@ -53,13 +53,20 @@ the phrase_count_col convention).
 
 Scale shape:
 
-- multi_match scan form: one in-row projection computes per-field dl
-  + per-field-per-term tf (each field's token array materializes
-  once); ONE global aggregate produces the corpus-stats row
-  (n, per-field avgdl, per-field-per-term df) and broadcasts back;
-  the per-field scores, the dis_max combine, and the gate are
-  map-side expressions; top-k is a partial TakeOrdered. Zero corpus
-  shuffles — identical to the boolquery.py scan contract.
+- multi_match, both forms: the two forms differ only in how they
+  build the per-field frame; one projection (``_mm_project``) holds
+  the gates, the per-field or cross_fields scores, the combine and
+  the top-k. The BM25 pieces are functions/text.py's shared helpers
+  (``bm25_scan_columns`` per field, ``bm25_term_scores``), with
+  column-name templates for the ``tf_<field>_<i>`` columns.
+- multi_match scan form: one projection tokenizes every field once
+  (``_toks_<field>``), the next computes per-field dl +
+  per-field-per-term tf; ONE global aggregate produces the
+  corpus-stats row (n, per-field avgdl, per-field-per-term df) and
+  broadcasts back; the per-field scores, the dis_max combine, and
+  the gate are map-side expressions; top-k is a partial
+  TakeOrdered. Zero corpus shuffles — identical to the boolquery.py
+  scan contract.
 - multi_match at-rest form: one bucket-pruned postings probe PER
   FIELD INDEX (a field is its own index, as in ES), ONE hit-sized
   pivot over the union of the field probes (dl read from the posting
@@ -86,10 +93,21 @@ Scale shape:
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import add as _add
+from operator import and_ as _and
+from operator import or_ as _or
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from irclogbot_spark.functions.text import WORD_RE, bm25_term_score
+from irclogbot_spark.functions.text import (
+    WORD_RE,
+    bm25_scan_columns,
+    bm25_scan_frame,
+    bm25_score_sum,
+    bm25_term_scores,
+)
 from irclogbot_spark.operators.boolquery import _check_no_duplicate_terms
 
 
@@ -117,19 +135,20 @@ def _field_score(
     own statistics — the per-field match subquery's score. ``n_col``
     names the corpus-size column (the at-rest joined frame carries
     one per field as ``n_<field>``; the scan form one shared ``n``)."""
-    s = None
-    for i in range(n_terms):
-        t = bm25_term_score(
-            F.col(f"tf_{fname}_{i}"),
-            F.col(f"df_{fname}_{i}"),
-            F.col(n_col),
-            F.col(f"avgdl_{fname}"),
-            F.col(f"dl_{fname}"),
-            k1,
-            b,
-        )
-        s = t if s is None else s + t
-    return F.lit(boost) * s
+    return F.lit(boost) * bm25_score_sum(
+        n_terms, k1, b, **_field_names(fname), n=n_col
+    )
+
+
+def _field_names(fname: str) -> dict:
+    """Field ``fname``'s column names in the per-field frame, as the
+    templates functions/text.py's BM25 helpers take."""
+    return {
+        "dl": f"dl_{fname}",
+        "tf": f"tf_{fname}_{{i}}",
+        "avgdl": f"avgdl_{fname}",
+        "df": f"df_{fname}_{{i}}",
+    }
 
 
 #: the supported multi_match types (ES's analyzer-compatible group)
@@ -150,30 +169,25 @@ def _cross_fields_score(
     term as max + tie_breaker * (sum - max), and terms sum in
     declaration order. Pure map-side arithmetic — no extra dataflow
     over the best_fields frame."""
-    total = None
+    blended = []
     for i in range(n_terms):
         dfs = [F.col(f"df_{fname}_{i}") for fname, _ in pairs]
-        df_blend = F.greatest(*dfs) if len(dfs) > 1 else dfs[0]
-        per_field = [
-            F.lit(boost)
-            * bm25_term_score(
-                F.col(f"tf_{fname}_{i}"),
-                df_blend,
-                F.col("n"),
-                F.col(f"avgdl_{fname}"),
-                F.col(f"dl_{fname}"),
-                k1,
-                b,
+        blended.append(F.greatest(*dfs) if len(dfs) > 1 else dfs[0])
+    by_field = [
+        [
+            F.lit(boost) * s
+            for s in bm25_term_scores(
+                n_terms, k1, b, **{**_field_names(fname), "df": blended}
             )
-            for fname, boost in pairs
         ]
-        s = None
-        for c in per_field:
-            s = c if s is None else s + c
+        for fname, boost in pairs
+    ]
+    term_scores = []
+    for per_field in zip(*by_field):
+        s = reduce(_add, per_field)
         best = F.greatest(*per_field) if len(per_field) > 1 else per_field[0]
-        term_score = best + F.lit(float(tie_breaker)) * (s - best)
-        total = term_score if total is None else total + term_score
-    return total
+        term_scores.append(best + F.lit(float(tie_breaker)) * (s - best))
+    return reduce(_add, term_scores)
 
 
 def _combine_fields(
@@ -187,15 +201,87 @@ def _combine_fields(
     goes through :func:`_cross_fields_score`."""
     if mm_type not in ("best_fields", "most_fields"):
         raise ValueError(f"unknown multi_match type {mm_type!r}")
-    total = None
-    for s in per_field:
-        total = s if total is None else total + s
+    total = reduce(_add, per_field)
     if mm_type == "most_fields":
         if tie_breaker != 0.0:
             raise ValueError("tie_breaker only applies to best_fields")
         return total
     best = F.greatest(*per_field) if len(per_field) > 1 else per_field[0]
     return best + F.lit(float(tie_breaker)) * (total - best)
+
+
+def _check_mm(mm_type: str, operator: str, terms: list[str]) -> None:
+    if mm_type not in MM_TYPES:
+        raise ValueError(f"unknown multi_match type {mm_type!r}")
+    if operator not in ("or", "and"):
+        raise ValueError(f"unknown multi_match operator {operator!r}")
+    if not terms:
+        raise ValueError("multi_match needs at least one term")
+    _check_no_duplicate_terms(list(terms))
+
+
+def _mm_project(
+    j: DataFrame,
+    pairs: list[tuple[str, float]],
+    n_terms: int,
+    tie_breaker: float,
+    k: int,
+    id_col: str,
+    k1: float,
+    b: float,
+    mm_type: str,
+    operator: str,
+    n_col: str,
+) -> DataFrame:
+    """Top-k (id, score) of multi_match over a per-field frame — the
+    scan frame or the at-rest pivot, both carrying ``dl_<field>``,
+    ``tf_<field>_<i>``, ``avgdl_<field>`` and ``df_<field>_<i>``.
+    ``n_col`` names a field's corpus-size column for the
+    field-centric types (a template over the field ``f``);
+    cross_fields reads the shared ``n``. operator="and" adds its gate
+    here; the >= 1-hit gate of operator="or" is the caller's."""
+
+    def hit(fname: str, i: int) -> Column:
+        return F.col(f"tf_{fname}_{i}") > 0
+
+    def full_match(fname: str) -> Column:
+        return reduce(_and, [hit(fname, i) for i in range(n_terms)])
+
+    if operator == "and":
+        if mm_type == "cross_fields":
+            # term-centric AND: every term in >= 1 field
+            gate = reduce(
+                _and,
+                [
+                    reduce(_or, [hit(fname, i) for fname, _ in pairs])
+                    for i in range(n_terms)
+                ],
+            )
+        else:
+            # field-centric AND: some field contains ALL terms (a doc
+            # absent from a field's at-rest hit set has tf=0 there)
+            gate = reduce(_or, [full_match(fname) for fname, _ in pairs])
+        j = j.filter(gate)
+    if mm_type == "cross_fields":
+        score = _cross_fields_score(pairs, n_terms, k1, b, tie_breaker)
+    else:
+        scores = [
+            _field_score(fname, boost, n_terms, k1, b, n_col.format(f=fname))
+            for fname, boost in pairs
+        ]
+        if operator == "and":
+            # a field missing a term does not match: it contributes
+            # exactly 0.0 (the same literal both physical forms use)
+            scores = [
+                F.when(full_match(fname), s).otherwise(F.lit(0.0))
+                for (fname, _), s in zip(pairs, scores)
+            ]
+        score = _combine_fields(scores, mm_type, tie_breaker)
+    return (
+        j.select(F.col(id_col), score.alias("score"))
+        .orderBy(F.desc("score"), F.asc(id_col))
+        .limit(k)
+    )
 
 
 def multi_match_best_fields(
@@ -230,96 +316,42 @@ def multi_match_best_fields(
     score expression is unchanged, only the gate tightens). Pure
     gate/expression changes — the zero-shuffle scan shape is
     untouched."""
-    if mm_type not in MM_TYPES:
-        raise ValueError(f"unknown multi_match type {mm_type!r}")
-    if operator not in ("or", "and"):
-        raise ValueError(f"unknown multi_match operator {operator!r}")
-    if not terms:
-        raise ValueError("multi_match needs at least one term")
-    _check_no_duplicate_terms(list(terms))
+    _check_mm(mm_type, operator, terms)
     pairs = _norm_fields(fields)
-
-    def _eq(t: str):
-        return lambda x: x == F.lit(t)
-
-    cols = [F.col(id_col)]
-    for fname, _ in pairs:
-        # NULL field -> '' (round 13, per ADVICE r12): tokenizing a
-        # NULL column yields NULL, and F.size(NULL) = -1 would poison
-        # dl/tf (a negative tf feeds BM25), while the at-rest form
-        # coalesces a missing field to exactly 0.0 — the empty string
-        # gives dl=0/tf=0, so a NULL field scores 0.0 in BOTH
-        # physical forms (bit-identity preserved)
-        toks = F.regexp_extract_all(
-            F.coalesce(F.col(fname), F.lit("")), F.lit(WORD_RE), F.lit(0)
-        )
-        cols.append(F.size(toks).alias(f"dl_{fname}"))
-        cols.extend(
-            F.size(F.filter(toks, _eq(t))).alias(f"tf_{fname}_{i}")
-            for i, t in enumerate(terms)
-        )
-    base = df.select(*cols)
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for fname, _ in pairs:
-        aggs.append(
-            (F.sum(f"dl_{fname}").cast("double") / F.count(F.lit(1))).alias(
-                f"avgdl_{fname}"
+    # NULL field -> '' (round 13, per ADVICE r12): tokenizing a NULL
+    # column yields NULL, and F.size(NULL) = -1 would poison dl/tf (a
+    # negative tf feeds BM25), while the at-rest form coalesces a
+    # missing field to exactly 0.0 — the empty string gives dl=0/tf=0,
+    # so a NULL field scores 0.0 in BOTH physical forms (bit-identity
+    # preserved). One stats row carries the one shared n.
+    j = bm25_scan_frame(
+        df,
+        [id_col],
+        *[
+            bm25_scan_columns(
+                F.coalesce(F.col(fname), F.lit("")),
+                list(terms),
+                toks=f"_toks_{fname}",
+                n="n" if fi == 0 else None,
+                **_field_names(fname),
+            )
+            for fi, (fname, _) in enumerate(pairs)
+        ],
+    )
+    if operator == "or":
+        # the at-rest pivot's hit set is this set: >= 1 term in >= 1 field
+        j = j.filter(
+            reduce(
+                _or,
+                [
+                    F.col(f"tf_{fname}_{i}") > 0
+                    for fname, _ in pairs
+                    for i in range(len(terms))
+                ],
             )
         )
-        aggs.extend(
-            F.sum(
-                F.when(F.col(f"tf_{fname}_{i}") > 0, 1).otherwise(0)
-            ).alias(f"df_{fname}_{i}")
-            for i in range(len(terms))
-        )
-    j = base.join(F.broadcast(base.agg(*aggs)))
-
-    def _field_full_match(fname: str):
-        c = None
-        for i in range(len(terms)):
-            t = F.col(f"tf_{fname}_{i}") > 0
-            c = t if c is None else c & t
-        return c
-
-    if mm_type == "cross_fields":
-        score = _cross_fields_score(pairs, len(terms), k1, b, tie_breaker)
-    else:
-        scores = [
-            _field_score(fname, boost, len(terms), k1, b)
-            for fname, boost in pairs
-        ]
-        if operator == "and":
-            # a field missing a term does not match: it contributes
-            # exactly 0.0 (the same literal both physical forms use)
-            scores = [
-                F.when(_field_full_match(fname), s).otherwise(F.lit(0.0))
-                for (fname, _), s in zip(pairs, scores)
-            ]
-        score = _combine_fields(scores, mm_type, tie_breaker)
-    gate = None
-    if operator == "and" and mm_type == "cross_fields":
-        # term-centric AND: every term in >= 1 field
-        for i in range(len(terms)):
-            c = None
-            for fname, _ in pairs:
-                t = F.col(f"tf_{fname}_{i}") > 0
-                c = t if c is None else c | t
-            gate = c if gate is None else gate & c
-    elif operator == "and":
-        # field-centric AND: some field contains ALL terms
-        for fname, _ in pairs:
-            c = _field_full_match(fname)
-            gate = c if gate is None else gate | c
-    else:
-        for fname, _ in pairs:
-            for i in range(len(terms)):
-                c = F.col(f"tf_{fname}_{i}") > 0
-                gate = c if gate is None else gate | c
-    return (
-        j.filter(gate)
-        .select(F.col(id_col), score.alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
+    return _mm_project(
+        j, pairs, len(terms), tie_breaker, k, id_col, k1, b, mm_type, operator, "n"
     )
 
 
@@ -363,16 +395,10 @@ def multi_match_best_fields_atrest(
     index's stored meta and vocab sidecars, read for all fields in
     one vocab collect (textindex.py probe_indexes); cross_fields
     carries n once, from the first field (every field's index covers
-    the same corpus)."""
+    the same corpus). The scoring is the scan form's projection."""
     from irclogbot_spark.operators.textindex import probe_indexes
 
-    if mm_type not in MM_TYPES:
-        raise ValueError(f"unknown multi_match type {mm_type!r}")
-    if operator not in ("or", "and"):
-        raise ValueError(f"unknown multi_match operator {operator!r}")
-    if not terms:
-        raise ValueError("multi_match needs at least one term")
-    _check_no_duplicate_terms(list(terms))
+    _check_mm(mm_type, operator, terms)
     path_pairs = list(paths.items()) if isinstance(paths, dict) else list(paths)
     pairs = _norm_fields([(f, dict(boosts)[f]) for f, _ in path_pairs])
     probed = probe_indexes(
@@ -417,59 +443,9 @@ def multi_match_best_fields_atrest(
         stat_cols += stats.columns(
             list(terms), f"n_{fname}", f"avgdl_{fname}", f"df_{fname}_{{i}}"
         )
-    joined = joined.select("*", *stat_cols)
-    if mm_type == "cross_fields":
-        if operator == "and":
-            # term-centric AND over the joined raw frame: every term
-            # present in >= 1 field (the scan gate, verbatim)
-            gate = None
-            for i in range(len(terms)):
-                c = None
-                for fname, _ in pairs:
-                    t = F.col(f"tf_{fname}_{i}") > 0
-                    c = t if c is None else c | t
-                gate = c if gate is None else gate & c
-            joined = joined.filter(gate)
-        return (
-            joined.select(
-                F.col(id_col),
-                _cross_fields_score(pairs, len(terms), k1, b, tie_breaker).alias(
-                    "score"
-                ),
-            )
-            .orderBy(F.desc("score"), F.asc(id_col))
-            .limit(k)
-        )
-    # field-centric types: per-field scores as map-side expressions
-    # over the shared joined frame — a doc absent from a field has
-    # tf=0 everywhere there, so its per-term BM25 is exactly +0.0,
-    # the value the former coalesce(score_<field>, 0.0) supplied
-    scores = []
-    matches = []
-    for fname, boost in pairs:
-        s = _field_score(fname, boost, len(terms), k1, b, n_col=f"n_{fname}")
-        if operator == "and":
-            fm = None
-            for i in range(len(terms)):
-                t = F.col(f"tf_{fname}_{i}") > 0
-                fm = t if fm is None else fm & t
-            s = F.when(fm, s).otherwise(F.lit(0.0))
-            matches.append(fm)
-        scores.append(s)
-    if operator == "and":
-        # some field matched ALL terms (a doc absent from a field's
-        # hit set has tf=0 there and cannot match it)
-        gate = None
-        for fm in matches:
-            gate = fm if gate is None else gate | fm
-        joined = joined.filter(gate)
-    return (
-        joined.select(
-            F.col(id_col),
-            _combine_fields(scores, mm_type, tie_breaker).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
+    return _mm_project(
+        joined.select("*", *stat_cols),
+        pairs, len(terms), tie_breaker, k, id_col, k1, b, mm_type, operator, "n_{f}",
     )
 
 

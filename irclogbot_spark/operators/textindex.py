@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 from irclogbot_spark.artifacts import write_meta
 from irclogbot_spark.functions.lits import literal_frame
 from irclogbot_spark.functions.text import (
+    WORD_RE,
     Bm25Stats,
     bm25_scores,
     build_positional_index,
@@ -100,7 +101,7 @@ def write_text_index(
     # doclens must agree for scan/at-rest bit-identity. A NULL text
     # has no postings, so its dl never reaches a posting row.
     toks = F.regexp_extract_all(
-        F.coalesce(F.col(text_col), F.lit("")), F.lit(r"\S+"), F.lit(0)
+        F.coalesce(F.col(text_col), F.lit("")), F.lit(WORD_RE), F.lit(0)
     )
     df.select(F.col(id_col), F.size(toks).alias("dl")).write.mode(
         "overwrite"

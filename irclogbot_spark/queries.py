@@ -1619,23 +1619,15 @@ def docs_inverted_index(spark, sf_dir):
     a production deployment range-buckets each list, but the
     index-build dataflow is identical. Driver-window placement is
     governed by _DRIVER_WINDOW below."""
+    from irclogbot_spark.functions.text import WORD_RE, term_counts
     from irclogbot_spark.plans.partitioning import ensure_parallelism
 
     d = ensure_parallelism(_t(spark, sf_dir, "documents"))
     toks = d.select(
         "doc_id",
-        F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), F.lit(0)).alias("_toks"),
+        F.regexp_extract_all(F.col("text"), F.lit(WORD_RE), F.lit(0)).alias("_toks"),
     )
-    entries = F.transform(
-        F.array_distinct("_toks"),
-        lambda t: F.struct(
-            t.alias("term"),
-            F.size(F.filter(F.col("_toks"), lambda x: x == t))
-            .cast("long")
-            .alias("cnt"),
-        ),
-    )
-    ex = toks.select("doc_id", F.explode(entries).alias("e")).select(
+    ex = toks.select("doc_id", F.explode(term_counts(count="cnt")).alias("e")).select(
         "doc_id", F.col("e.term").alias("term"), F.col("e.cnt").alias("cnt")
     )
     inv = ex.groupBy("term").agg(
@@ -5445,40 +5437,18 @@ def docs_collapse_by_source(spark, sf_dir):
     scale); the result is group-count-bounded forever. Scores are
     the bit-exact BM25 doubles, so the collapse value-hashes. Tail
     registration; queued for the round-11 window."""
-    from irclogbot_spark.functions.text import WORD_RE
-
-    docs = _t(spark, sf_dir, "documents")
-    toks = F.regexp_extract_all(F.col("text"), F.lit(WORD_RE), F.lit(0))
-
-    def _eq(t):
-        return lambda x: x == F.lit(t)
-
-    base = docs.select(
-        "doc_id",
-        "source",
-        F.size(toks).alias("dl"),
-        *[
-            F.size(F.filter(toks, _eq(t))).alias(f"tf{i}")
-            for i, t in enumerate(["the", "data"])
-        ],
+    from irclogbot_spark.functions.text import (
+        bm25_scan_columns,
+        bm25_scan_frame,
+        bm25_score_sum,
     )
-    stats = base.agg(
-        (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(F.when(F.col(f"tf{i}") > 0, 1).otherwise(0)).alias(f"df{i}")
-            for i in range(2)
-        ],
+
+    joined = bm25_scan_frame(
+        _t(spark, sf_dir, "documents"),
+        ["doc_id", "source"],
+        bm25_scan_columns(F.col("text"), ["the", "data"]),
     )
-    joined = base.join(F.broadcast(stats))
-    denom = F.lit(1.0) - F.lit(0.75) + F.lit(0.75) * F.col("dl") / F.col("avgdl")
-    score = None
-    for i in range(2):
-        tf, dfc = F.col(f"tf{i}"), F.col(f"df{i}")
-        idf = (F.col("n") - dfc + F.lit(0.5)) / (dfc + F.lit(0.5))
-        tfc = (tf * (F.lit(1.2) + F.lit(1.0))) / (tf + F.lit(1.2) * denom)
-        term = idf * tfc
-        score = term if score is None else score + term
+    score = bm25_score_sum(2, 1.2, 0.75)
     w = Window.partitionBy("source").orderBy(F.desc("_s"), "doc_id")
     return (
         joined.select("doc_id", "source", score.alias("_s"))

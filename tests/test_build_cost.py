@@ -28,13 +28,17 @@ _DETACH = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
 #: stored index statistics; docs_multi_match_atrest 927, 815 since the
 #: stored statistics; log_top_nicks 52
 #: and log_msgs_per_channel_day 58 on the stored log,
-#: docs_backoff_surprisal 4502)
+#: docs_backoff_surprisal 4502; log_recency_search 270 and
+#: docs_bool_search_atrest 584 before the BM25 assembly moved into
+#: functions/text.py, 264 and 490 after it)
 BUDGETS = {
     "docs_bm25_atrest": 416,
     "docs_multi_match_atrest": 1019,
     "log_top_nicks": 65,
     "log_msgs_per_channel_day": 72,
     "docs_backoff_surprisal": 5627,
+    "log_recency_search": 337,
+    "docs_bool_search_atrest": 730,
 }
 
 #: Spark jobs of one warm build+collect (at sf0.001, local[4]); the

@@ -194,10 +194,10 @@ def test_log_term_time_partitioned_prunes_and_value_equal(spark, sf_dir):
 
 
 def test_table_cache_invalidate_table(spark, tmp_path):
-    """ADVICE r13: the corpus-table memo needs a writer hook like the
-    artifact memo's invalidate_scan — invalidate_table must drop the
-    memoized frame so the next load resolves the regenerated files."""
-    from irclogbot_spark.sources.tables import invalidate_table, load_table
+    """The corpus tables share the artifact memo and its writer hook:
+    invalidate_scan must drop the memoized frame so the next load
+    resolves the regenerated files."""
+    from irclogbot_spark.sources.tables import invalidate_scan, load_table
 
     sf = str(tmp_path / "sfX")
     spark.createDataFrame([(1, "a")], ["doc_id", "text"]).coalesce(1).write.parquet(
@@ -211,10 +211,10 @@ def test_table_cache_invalidate_table(spark, tmp_path):
     spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], ["doc_id", "text"]
     ).coalesce(1).write.mode("overwrite").parquet(f"{sf}/documents.parquet")
-    invalidate_table(sf, "documents")
+    invalidate_scan(f"{sf}/documents.parquet")
     d2 = load_table(spark, sf, "documents")
     assert d2 is not d1
     assert d2.count() == 3
-    # name=None drops every table under the dir
-    invalidate_table(sf)
+    # the directory drops every table under it
+    invalidate_scan(sf)
     assert load_table(spark, sf, "documents") is not d2
