@@ -7,12 +7,20 @@ each has an exact ANSI-SQL twin for the DuckDB oracle.
 
 from __future__ import annotations
 
-import operator
 from dataclasses import dataclass
 from functools import reduce
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from irclogbot_spark.functions.lits import (
+    sql_fold,
+    sql_ident,
+    sql_in,
+    sql_name,
+    sql_string,
+    sql_value,
+)
 
 WORD_RE = r"\S+"
 #: BPE-ish subword split: word chars run | single non-word-non-space.
@@ -36,48 +44,47 @@ def bm25_term_scores(
     b: float,
     *,
     tf: str = "tf{i}",
-    df: str | list[Column] = "df{i}",
+    df: str | list[str] = "df{i}",
     n: str = "n",
     avgdl: str = "avgdl",
     dl: str = "dl",
-) -> list[Column]:
+) -> list[str]:
     """The repo-wide BM25 per-term expression (rational idf — see
     bm25_rank's determinism note) of each term ``i`` over a scored
-    frame's columns, in term order. ``tf`` and ``df`` are templates
-    over ``i`` (multi_match asks for ``tf_<field>_{i}``); ``df`` may
-    instead be one Column per term (cross_fields' blended df).
+    frame's columns, in term order, as SQL text (functions/lits.py).
+    ``tf`` and ``df`` are column-name templates over ``i``
+    (multi_match asks for ``tf_<field>_{i}``); ``df`` may instead be
+    one SQL expression per term (cross_fields' blended df).
 
     A term the doc does not contain scores +0.0 without evaluating
     the length norm: at b=1.0 or k1=0 an empty field makes the
     denominator ``tf + k1 * norm`` zero, which the engine's pinned
     ANSI mode raises on. For any other parameters the formula itself
-    gives +0.0 at tf=0, so the guard changes no score. The constants
-    and the length norm are built once and shared by every term's
-    expression (the same tree, fewer JVM calls to build it)."""
-    one, lb, half, lk1, zero = (F.lit(v) for v in (1.0, b, 0.5, k1, 0.0))
-    norm = one - lb + lb * F.col(dl) / F.col(avgdl)
-    k1_plus_1, n_col = lk1 + one, F.col(n)
-    dfs = df if isinstance(df, list) else [F.col(df.format(i=i)) for i in range(n_terms)]
+    gives +0.0 at tf=0, so the guard changes no score."""
+    one, lb, half, lk1, zero = (sql_value(v) for v in (1.0, b, 0.5, k1, 0.0))
+    norm = f"(({one} - {lb}) + (({lb} * {sql_ident(dl)}) / {sql_ident(avgdl)}))"
+    k1_plus_1, n_col = f"({lk1} + {one})", sql_ident(n)
+    dfs = df if isinstance(df, list) else [sql_ident(df.format(i=i)) for i in range(n_terms)]
     out = []
     for i in range(n_terms):
-        tf_col, dfreq = F.col(tf.format(i=i)), dfs[i]
-        idf = (n_col - dfreq + half) / (dfreq + half)
-        tfc = (tf_col * k1_plus_1) / (tf_col + lk1 * norm)
-        out.append(F.when(tf_col > 0, idf * tfc).otherwise(zero))
+        tf_col, dfreq = sql_ident(tf.format(i=i)), dfs[i]
+        idf = f"((({n_col} - {dfreq}) + {half}) / ({dfreq} + {half}))"
+        tfc = f"(({tf_col} * {k1_plus_1}) / ({tf_col} + ({lk1} * {norm})))"
+        out.append(f"CASE WHEN ({tf_col} > 0) THEN ({idf} * {tfc}) ELSE {zero} END")
     return out
 
 
-def bm25_score_sum(n_terms: int, k1: float, b: float, **names) -> Column:
+def bm25_score_sum(n_terms: int, k1: float, b: float, **names) -> str:
     """The per-term scores of :func:`bm25_term_scores` added IN TERM
     ORDER: one fixed left-to-right tree of double additions, which
     the scan form, the at-rest form and the SQL twins all evaluate,
     so their scores agree bit for bit (a SUM() over matched terms
     would re-associate and drift in the last ulp)."""
-    return reduce(operator.add, bm25_term_scores(n_terms, k1, b, **names))
+    return sql_fold("+", bm25_term_scores(n_terms, k1, b, **names))
 
 
 def bm25_scan_columns(
-    text: Column,
+    text: str,
     terms: list[str],
     n_df: int | None = None,
     *,
@@ -87,8 +94,8 @@ def bm25_scan_columns(
     n: str | None = "n",
     avgdl: str = "avgdl",
     df: str = "df{i}",
-) -> tuple[Column, list[Column], list[Column]]:
-    """The corpus-scan BM25 inputs of one text column, for
+) -> tuple[str, list[str], list[str]]:
+    """The corpus-scan BM25 inputs of one text column, as SQL text for
     :func:`bm25_scan_frame`: the token array aliased ``toks`` (each
     row is tokenized once), the in-row ``dl`` and one ``tf`` per term
     over that array, and the stats-row aggregates over those columns
@@ -96,25 +103,25 @@ def bm25_scan_columns(
     when None: one stats row carries one ``n``) and ``df`` for the
     first ``n_df`` terms (all by default; a must_not or negative term
     is gated on, never scored). ``tf`` and ``df`` are templates over
-    the term's index ``i``. ``text`` is a Column, so a caller may
-    coalesce a NULL field to '' first."""
-    arr = F.col(toks)
+    the term's index ``i``. ``text`` is a SQL expression, so a caller
+    may coalesce a NULL field to '' first."""
+    arr = sql_ident(toks)
     in_row = [
-        F.size(arr).alias(dl),
+        f"size({arr}) AS {sql_name(dl)}",
         *[
-            F.size(F.filter(arr, lambda x: x == F.lit(t))).alias(tf.format(i=i))
+            f"size(filter({arr}, x -> (x = {sql_string(t)}))) AS {sql_name(tf.format(i=i))}"
             for i, t in enumerate(terms)
         ],
     ]
-    count = F.count(F.lit(1))
-    aggs = [(F.sum(dl).cast("double") / count).alias(avgdl)]
+    aggs = [f"(CAST(sum({sql_ident(dl)}) AS DOUBLE) / count(1)) AS {sql_name(avgdl)}"]
     if n is not None:
-        aggs.append(count.alias(n))
+        aggs.append(f"count(1) AS {sql_name(n)}")
     aggs += [
-        F.sum(F.when(F.col(tf.format(i=i)) > 0, 1).otherwise(0)).alias(df.format(i=i))
+        f"sum(CASE WHEN ({sql_ident(tf.format(i=i))} > 0) THEN 1 ELSE 0 END) "
+        f"AS {sql_name(df.format(i=i))}"
         for i in range(len(terms) if n_df is None else n_df)
     ]
-    tokens = F.regexp_extract_all(text, F.lit(WORD_RE), F.lit(0)).alias(toks)
+    tokens = f"regexp_extract_all({text}, {sql_string(WORD_RE)}, 0) AS {sql_name(toks)}"
     return tokens, in_row, aggs
 
 
@@ -123,11 +130,12 @@ def bm25_scan_frame(df, keep: list[str], *scans):
     :func:`bm25_scan_columns` scan's in-row columns, joined with the
     ONE broadcast stats row aggregated over them. The token arrays
     come from one projection, dl/tf from the next; zero shuffles."""
-    kept = [F.col(c) for c in keep]
-    base = df.select(*kept, *[s[0] for s in scans]).select(
+    kept = [sql_ident(c) for c in keep]
+    base = df.selectExpr(*kept, *[s[0] for s in scans]).selectExpr(
         *kept, *[c for s in scans for c in s[1]]
     )
-    return base.join(F.broadcast(base.agg(*[c for s in scans for c in s[2]])))
+    aggs = [F.expr(c) for s in scans for c in s[2]]
+    return base.join(F.broadcast(base.agg(*aggs)))
 
 
 def term_counts(count: str = "tf") -> Column:
@@ -238,9 +246,11 @@ def bm25_rank(
     """
     if not terms:
         raise ValueError("terms must be non-empty")
-    joined = bm25_scan_frame(df, [id_col], bm25_scan_columns(F.col(text_col), terms))
+    joined = bm25_scan_frame(df, [id_col], bm25_scan_columns(sql_ident(text_col), terms))
     return (
-        joined.select(F.col(id_col), bm25_score_sum(len(terms), k1, b).alias("score"))
+        joined.selectExpr(
+            sql_ident(id_col), f"{bm25_score_sum(len(terms), k1, b)} AS `score`"
+        )
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
     )
@@ -333,15 +343,15 @@ class Bm25Stats:
 
     def columns(
         self, terms: list[str], n: str = "n", avgdl: str = "avgdl", df: str = "df{i}"
-    ) -> list[Column]:
+    ) -> list[str]:
         """The statistics as literal columns named for the score
-        expressions: ``n``, ``avgdl`` and one ``df`` per term (``df``
-        is a template over the term's index ``i``)."""
+        expressions, in SQL text: ``n``, ``avgdl`` and one ``df`` per
+        term (``df`` is a template over the term's index ``i``)."""
         return [
-            F.lit(self.n_docs).alias(n),
-            F.lit(self.avgdl).alias(avgdl),
+            f"{sql_value(self.n_docs)} AS {sql_name(n)}",
+            f"{sql_value(self.avgdl)} AS {sql_name(avgdl)}",
             *[
-                F.lit(self.df.get(t, 0)).alias(df.format(i=i))
+                f"{sql_value(self.df.get(t, 0))} AS {sql_name(df.format(i=i))}"
                 for i, t in enumerate(terms)
             ],
         ]
@@ -367,14 +377,15 @@ def bm25_term_frame(hits, terms: list[str], stats: Bm25Stats, id_col: str = "doc
     (id, term, tf, dl); one doc-keyed aggregation, no joins."""
     pivot = hits.groupBy(id_col).agg(
         *[
-            F.coalesce(
-                F.max(F.when(F.col("term") == t, F.col("tf"))), F.lit(0)
-            ).alias(f"tf{i}")
+            F.expr(
+                f"coalesce(max(CASE WHEN (`term` = {sql_string(t)}) THEN `tf` END), 0)"
+                f" AS `tf{i}`"
+            )
             for i, t in enumerate(terms)
         ],
-        F.max("dl").alias("dl"),
+        F.expr("max(`dl`) AS `dl`"),
     )
-    return pivot.select("*", *stats.columns(terms))
+    return pivot.selectExpr("*", *stats.columns(terms))
 
 
 def bm25_scores(
@@ -393,7 +404,9 @@ def bm25_scores(
     if not terms:
         raise ValueError("terms must be non-empty")
     j = bm25_term_frame(hits, terms, stats, id_col)
-    return j.select(F.col(id_col), bm25_score_sum(len(terms), k1, b).alias("score"))
+    return j.selectExpr(
+        sql_ident(id_col), f"{bm25_score_sum(len(terms), k1, b)} AS `score`"
+    )
 
 
 def bm25_scores_indexed(
@@ -412,7 +425,7 @@ def bm25_scores_indexed(
     statistics instead (operators/textindex.py bm25_scores_atrest)."""
     if not terms:
         raise ValueError("terms must be non-empty")
-    hits = postings.filter(F.col("term").isin(list(terms)))
+    hits = postings.filter(sql_in("term", terms))
     stats = frame_stats(hits, doclens)
     if "dl" not in hits.columns:
         hits = hits.join(doclens.select(id_col, "dl"), id_col)
@@ -921,33 +934,29 @@ def phrase_search_indexed(
     """
     if not terms:
         raise ValueError("phrase must be non-empty")
-    p = pindex.filter(F.col("term").isin(list(terms)))
+    p = pindex.filter(sql_in("term", terms))
     agg = p.groupBy(id_col).agg(
         *[
-            F.max(F.when(F.col("term") == t, F.col("positions"))).alias(f"_p{j}")
+            F.expr(
+                f"max(CASE WHEN (`term` = {sql_string(t)}) THEN `positions` END)"
+                f" AS `_p{j}`"
+            )
             for j, t in enumerate(terms)
         ]
     )
-    def _shift(col: Column, off: int) -> Column:
-        # NB: a default-arg lambda (lambda x, _j=off: ...) would be
-        # introspected by F.transform as the TWO-ARG (element, index)
-        # form and shift by array position — close over off instead
-        if off == 0:
-            return col
-        return F.transform(col, lambda x: x - off)
 
-    inter = None
-    for j in range(len(terms)):
-        shifted = _shift(F.col(f"_p{j}"), j)
-        inter = shifted if inter is None else F.array_intersect(inter, shifted)
-    present = None
-    for j in range(len(terms)):
-        nn = F.col(f"_p{j}").isNotNull()
-        present = nn if present is None else present & nn
+    def _shift(j: int) -> str:
+        # term j's positions moved back by its offset in the phrase
+        return f"transform(`_p{j}`, x -> (x - {j}))" if j else "`_p0`"
+
+    inter = reduce(
+        lambda a, c: f"array_intersect({a}, {c})", [_shift(j) for j in range(len(terms))]
+    )
+    present = sql_fold("AND", [f"(`_p{j}` IS NOT NULL)" for j in range(len(terms))])
     return (
         agg.filter(present)
-        .select(F.col(id_col), F.size(inter).cast("long").alias("phrase_count"))
-        .filter(F.col("phrase_count") > 0)
+        .selectExpr(sql_ident(id_col), f"CAST(size({inter}) AS BIGINT) AS `phrase_count`")
+        .filter("(`phrase_count` > 0)")
     )
 
 

@@ -74,6 +74,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from irclogbot_spark.functions.lits import sql_double, sql_fold, sql_ident, sql_value
 from irclogbot_spark.functions.text import (
     WORD_RE,
     bm25_scan_columns,
@@ -81,6 +82,33 @@ from irclogbot_spark.functions.text import (
     bm25_score_sum,
     bm25_term_scores,
 )
+
+
+def _hit(i: int) -> str:
+    """SQL text: the doc contains referenced term ``i``."""
+    return f"(`tf{i}` > 0)"
+
+
+def _hit_count(idx) -> str:
+    """SQL text: how many of the terms ``idx`` the doc contains, as a
+    left-to-right sum of 0/1 cases."""
+    return sql_fold("+", [f"CASE WHEN {_hit(i)} THEN 1 ELSE 0 END" for i in idx])
+
+
+def _dis_max(scores: list[str], tie_breaker: float) -> str:
+    """SQL text: max + tie_breaker * (sum - max) over ``scores``."""
+    best = f"greatest({', '.join(scores)})" if len(scores) > 1 else scores[0]
+    total = sql_fold("+", scores)
+    return f"({best} + ({sql_double(tie_breaker)} * ({total} - {best})))"
+
+
+def _top_k(j: DataFrame, id_col: str, score: str, k: int) -> DataFrame:
+    """Top-k (id, score) of the docs in ``j``, ``score`` SQL text."""
+    return (
+        j.selectExpr(sql_ident(id_col), f"{score} AS `score`")
+        .orderBy(F.desc("score"), F.asc(id_col))
+        .limit(k)
+    )
 
 
 def parse_minimum_should_match(spec, n_should: int) -> int | None:
@@ -207,27 +235,22 @@ def _bool_project(
     n_scoring = len(must) + len(should)
     n_ref = n_scoring + len(must_not)
     score = bm25_score_sum(n_scoring, k1, b)
-    n_should = None
-    for i in range(len(must), n_scoring):
-        c = F.when(F.col(f"tf{i}") > 0, 1).otherwise(0)
-        n_should = c if n_should is None else n_should + c
-    n_should = (n_should if n_should is not None else F.lit(0)).cast("long")
-    gate = F.lit(True)
-    for i in range(len(must)):
-        gate = gate & (F.col(f"tf{i}") > 0)
-    for i in range(n_scoring, n_ref):
-        gate = gate & (F.col(f"tf{i}") == 0)
+    n_should = _hit_count(range(len(must), n_scoring)) if should else "0"
+    gates = ["true"]
+    gates += [_hit(i) for i in range(len(must))]
+    gates += [f"(`tf{i}` = 0)" for i in range(n_scoring, n_ref)]
     if dl_between is not None:
-        lo, hi = dl_between
-        gate = gate & F.col("dl").between(F.lit(int(lo)), F.lit(int(hi)))
+        lo, hi = (int(v) for v in dl_between)
+        gates.append(f"((`dl` >= {lo}) AND (`dl` <= {hi}))")
+    gate = sql_fold("AND", gates)
     out = (
-        j.select(
-            F.col(id_col),
-            score.alias("score"),
-            n_should.alias("n_should"),
-            gate.alias("_g"),
+        j.selectExpr(
+            sql_ident(id_col),
+            f"{score} AS `score`",
+            f"CAST({n_should} AS BIGINT) AS `n_should`",
+            f"{gate} AS `_g`",
         )
-        .filter((F.col("_g")) & (F.col("n_should") >= F.lit(msm)))
+        .filter(f"(`_g` AND (`n_should` >= {int(msm)}))")
         .drop("_g")
     )
     return out.orderBy(F.desc("score"), F.asc(id_col)).limit(k)
@@ -255,7 +278,7 @@ def bool_search(
     ref = must + should + must_not
     _check_no_duplicate_terms(ref)
     j = bm25_scan_frame(
-        df, [id_col], bm25_scan_columns(F.col(text_col), ref, len(must) + len(should))
+        df, [id_col], bm25_scan_columns(sql_ident(text_col), ref, len(must) + len(should))
     )
     return _bool_project(
         j, must, should, must_not, msm, dl_between, k, id_col, k1, b
@@ -302,17 +325,9 @@ def _dis_max_project(
     k1: float,
     b: float,
 ) -> DataFrame:
-    scores = bm25_term_scores(len(terms), k1, b)
-    total = reduce(operator.add, scores)
-    best = F.greatest(*scores) if len(scores) > 1 else scores[0]
-    score = best + F.lit(float(tie_breaker)) * (total - best)
-    gate = reduce(operator.or_, [F.col(f"tf{i}") > 0 for i in range(len(terms))])
-    return (
-        j.filter(gate)
-        .select(F.col(id_col), score.alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    score = _dis_max(bm25_term_scores(len(terms), k1, b), tie_breaker)
+    gate = sql_fold("OR", [_hit(i) for i in range(len(terms))])
+    return _top_k(j.filter(gate), id_col, score, k)
 
 
 def dis_max_search(
@@ -331,7 +346,7 @@ def dis_max_search(
     if not terms:
         raise ValueError("dis_max needs at least one term")
     _check_no_duplicate_terms(list(terms))
-    j = bm25_scan_frame(df, [id_col], bm25_scan_columns(F.col(text_col), list(terms)))
+    j = bm25_scan_frame(df, [id_col], bm25_scan_columns(sql_ident(text_col), list(terms)))
     return _dis_max_project(j, list(terms), tie_breaker, k, id_col, k1, b)
 
 
@@ -369,21 +384,14 @@ def _boosting_project(
 ) -> DataFrame:
     n_pos = len(positive)
     score = bm25_score_sum(n_pos, k1, b)
-    pos_gate = reduce(operator.or_, [F.col(f"tf{i}") > 0 for i in range(n_pos)])
+    pos_gate = sql_fold("OR", [_hit(i) for i in range(n_pos)])
     if negative:
-        neg_match = reduce(
-            operator.or_,
-            [F.col(f"tf{i}") > 0 for i in range(n_pos, n_pos + len(negative))],
+        neg_match = sql_fold("OR", [_hit(i) for i in range(n_pos, n_pos + len(negative))])
+        score = (
+            f"({score} * CASE WHEN {neg_match} THEN {sql_double(negative_boost)} "
+            f"ELSE 1.0D END)"
         )
-        score = score * F.when(
-            neg_match, F.lit(float(negative_boost))
-        ).otherwise(F.lit(1.0))
-    return (
-        j.filter(pos_gate)
-        .select(F.col(id_col), score.alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return _top_k(j.filter(pos_gate), id_col, score, k)
 
 
 def boosting_search(
@@ -408,7 +416,7 @@ def boosting_search(
     ref = list(positive) + list(negative or [])
     _check_no_duplicate_terms(ref)
     j = bm25_scan_frame(
-        df, [id_col], bm25_scan_columns(F.col(text_col), ref, len(positive))
+        df, [id_col], bm25_scan_columns(sql_ident(text_col), ref, len(positive))
     )
     return _boosting_project(
         j, list(positive), list(negative or []), negative_boost, k, id_col, k1, b
@@ -529,22 +537,19 @@ def _terms_set_project(
     b: float,
 ) -> DataFrame:
     score = bm25_score_sum(len(terms), k1, b)
-    n_matched = reduce(
-        operator.add,
-        [F.when(F.col(f"tf{i}") > 0, 1).otherwise(0) for i in range(len(terms))],
-    ).cast("long")
+    n_matched = f"CAST({_hit_count(range(len(terms)))} AS BIGINT)"
     # the engine-wide >= 1-scoring-hit floor (the at-rest pivot only
     # materializes hit docs): a per-doc msm of 0 or less clamps to 1
     # — the module-docstring deviation, same reasoning as bool msm
-    req = F.greatest(F.col(msm_col).cast("long"), F.lit(1).cast("long"))
+    req = f"greatest(CAST({sql_ident(msm_col)} AS BIGINT), CAST(1 AS BIGINT))"
     return (
-        j.select(
-            F.col(id_col),
-            score.alias("score"),
-            n_matched.alias("n_matched"),
-            (n_matched >= req).alias("_g"),
+        j.selectExpr(
+            sql_ident(id_col),
+            f"{score} AS `score`",
+            f"{n_matched} AS `n_matched`",
+            f"({n_matched} >= {req}) AS `_g`",
         )
-        .filter(F.col("_g"))
+        .filter("`_g`")
         .drop("_g")
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
@@ -576,7 +581,7 @@ def terms_set_search(
         raise ValueError("terms_set needs at least one term")
     _check_no_duplicate_terms(list(terms))
     j = bm25_scan_frame(
-        df, [id_col, msm_col], bm25_scan_columns(F.col(text_col), list(terms))
+        df, [id_col, msm_col], bm25_scan_columns(sql_ident(text_col), list(terms))
     )
     return _terms_set_project(j, list(terms), msm_col, k, id_col, k1, b)
 
@@ -607,8 +612,9 @@ def terms_set_search_atrest(
     return _terms_set_project(j, list(terms), msm_col, k, id_col, k1, b)
 
 
-def _function_factor(spec: dict, fields: dict):
-    """One ES score function as a Column factor. Supported kinds —
+def _function_factor(spec: dict, fields: dict) -> str:
+    """One ES score function as a SQL-text factor (``fields`` maps a
+    field name to its SQL text). Supported kinds —
     all pure rational arithmetic, so the factors value-hash against
     the SQL twin (the gauss/exp decays need exp(), which differs
     across libms in the last ulp and could never hash — the linear
@@ -624,13 +630,13 @@ def _function_factor(spec: dict, fields: dict):
     """
     kind = spec["kind"]
     if kind == "field_value_factor":
-        v = F.coalesce(
-            fields[spec["field"]].cast("double"),
-            F.lit(float(spec.get("missing", 1.0))),
+        v = (
+            f"coalesce(CAST({fields[spec['field']]} AS DOUBLE), "
+            f"{sql_double(spec.get('missing', 1.0))})"
         )
-        return F.lit(float(spec.get("factor", 1.0))) * v
+        return f"({sql_double(spec.get('factor', 1.0))} * {v})"
     if kind == "weight":
-        return F.lit(float(spec["weight"]))
+        return sql_double(spec["weight"])
     if kind == "linear_decay":
         decay = float(spec.get("decay", 0.5))
         scale = float(spec["scale"])
@@ -640,12 +646,12 @@ def _function_factor(spec: dict, fields: dict):
             raise ValueError(f"linear_decay requires 0 < decay < 1, got {decay}")
         if scale <= 0.0:
             raise ValueError(f"linear_decay requires scale > 0, got {scale}")
-        s = scale / (1.0 - decay)
-        dist = F.abs(fields[spec["field"]] - F.lit(spec["origin"]))
+        s = sql_double(scale / (1.0 - decay))
+        dist = f"abs(({fields[spec['field']]} - {sql_value(spec['origin'])}))"
         offset = float(spec.get("offset", 0.0))
         if offset:
-            dist = F.greatest(F.lit(0.0), dist - F.lit(offset))
-        return F.greatest(F.lit(0.0), (F.lit(s) - dist) / F.lit(s))
+            dist = f"greatest(0.0D, ({dist} - {sql_double(offset)}))"
+        return f"greatest(0.0D, (({s} - {dist}) / {s}))"
     raise ValueError(f"unknown score function kind {kind!r}")
 
 
@@ -669,28 +675,14 @@ def _function_score_project(
     if boost_mode not in ("multiply", "sum"):
         raise ValueError(f"unknown boost_mode {boost_mode!r}")
     qscore = bm25_score_sum(len(terms), k1, b)
+    combine = {"multiply": "*", "sum": "+"}
     combined = None
     for spec in functions:
         f = _function_factor(spec, field_cols)
-        if combined is None:
-            combined = f
-        elif score_mode == "multiply":
-            combined = combined * f
-        else:  # "sum" — modes validated above
-            combined = combined + f
-    if combined is None:
-        score = qscore
-    elif boost_mode == "multiply":
-        score = qscore * combined
-    else:  # "sum"
-        score = qscore + combined
-    gate = reduce(operator.or_, [F.col(f"tf{i}") > 0 for i in range(len(terms))])
-    return (
-        j.filter(gate)
-        .select(F.col(id_col), score.alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+        combined = f if combined is None else f"({combined} {combine[score_mode]} {f})"
+    score = qscore if combined is None else f"({qscore} {combine[boost_mode]} {combined})"
+    gate = sql_fold("OR", [_hit(i) for i in range(len(terms))])
+    return _top_k(j.filter(gate), id_col, score, k)
 
 
 def function_score_search(
@@ -718,10 +710,10 @@ def function_score_search(
     _check_no_duplicate_terms(list(terms))
     fields = sorted({s["field"] for s in functions if "field" in s})
     j = bm25_scan_frame(
-        df, [id_col, *fields], bm25_scan_columns(F.col(text_col), list(terms))
+        df, [id_col, *fields], bm25_scan_columns(sql_ident(text_col), list(terms))
     )
     return _function_score_project(
-        j, list(terms), functions, {f: F.col(f) for f in fields},
+        j, list(terms), functions, {f: sql_ident(f) for f in fields},
         score_mode, boost_mode, k, id_col, k1, b,
     )
 
@@ -924,6 +916,6 @@ def function_score_search_atrest(
     if fields:
         j = j.join(corpus.select(id_col, *fields), id_col)
     return _function_score_project(
-        j, list(terms), functions, {f: F.col(f) for f in fields},
+        j, list(terms), functions, {f: sql_ident(f) for f in fields},
         score_mode, boost_mode, k, id_col, k1, b,
     )

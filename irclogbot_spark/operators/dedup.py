@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from irclogbot_spark.functions.lits import sql_ident
 from irclogbot_spark.plans.partitioning import ensure_parallelism
 
 
@@ -202,9 +203,9 @@ def minhash_signature(
         # round trips per call — ~0.6 s of pure DRIVER time per
         # query build (measured; the incremental/minhash queries pay
         # it 2-3x per pass). One parser call builds the identical
-        # expression tree.
-        quoted = "`" + text.replace("`", "``") + "`"
-        hs_sql = f"transform({_shingles_sql(quoted, n)}, s -> {sql_hash('s')})"
+        # expression tree. The name resolves as F.col(text) does (a
+        # dotted struct path stays a path).
+        hs_sql = f"transform({_shingles_sql(sql_ident(text), n)}, s -> {sql_hash('s')})"
         lanes = ", ".join(
             f"pmod(h * CAST({a} AS BIGINT) + {b}, CAST({_MH_PRIME} AS BIGINT))"
             for a, b in perms

@@ -93,14 +93,17 @@ Scale shape:
 
 from __future__ import annotations
 
-from functools import reduce
-from operator import add as _add
-from operator import and_ as _and
-from operator import or_ as _or
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from irclogbot_spark.functions.lits import (
+    sql_double,
+    sql_fold,
+    sql_ident,
+    sql_in,
+    sql_name,
+    sql_string,
+)
 from irclogbot_spark.functions.text import (
     WORD_RE,
     bm25_scan_columns,
@@ -108,7 +111,11 @@ from irclogbot_spark.functions.text import (
     bm25_score_sum,
     bm25_term_scores,
 )
-from irclogbot_spark.operators.boolquery import _check_no_duplicate_terms
+from irclogbot_spark.operators.boolquery import (
+    _check_no_duplicate_terms,
+    _dis_max,
+    _top_k,
+)
 
 
 def _norm_fields(fields) -> list[tuple[str, float]]:
@@ -130,14 +137,13 @@ def _norm_fields(fields) -> list[tuple[str, float]]:
 
 def _field_score(
     fname: str, boost: float, n_terms: int, k1: float, b: float, n_col: str = "n"
-) -> Column:
+) -> str:
     """boost * fixed-order sum of per-term BM25 under field ``fname``'s
     own statistics — the per-field match subquery's score. ``n_col``
     names the corpus-size column (the at-rest joined frame carries
     one per field as ``n_<field>``; the scan form one shared ``n``)."""
-    return F.lit(boost) * bm25_score_sum(
-        n_terms, k1, b, **_field_names(fname), n=n_col
-    )
+    score = bm25_score_sum(n_terms, k1, b, **_field_names(fname), n=n_col)
+    return f"({sql_double(boost)} * {score})"
 
 
 def _field_names(fname: str) -> dict:
@@ -161,7 +167,7 @@ def _cross_fields_score(
     k1: float,
     b: float,
     tie_breaker: float,
-) -> Column:
+) -> str:
     """The term-centric cross_fields score over the shared per-field
     frame: per term, df blends to the max across the field group
     (BlendedTermQuery), the term scores in each field with that
@@ -171,28 +177,21 @@ def _cross_fields_score(
     over the best_fields frame."""
     blended = []
     for i in range(n_terms):
-        dfs = [F.col(f"df_{fname}_{i}") for fname, _ in pairs]
-        blended.append(F.greatest(*dfs) if len(dfs) > 1 else dfs[0])
+        dfs = [sql_ident(f"df_{fname}_{i}") for fname, _ in pairs]
+        blended.append(f"greatest({', '.join(dfs)})" if len(dfs) > 1 else dfs[0])
     by_field = [
         [
-            F.lit(boost) * s
+            f"({sql_double(boost)} * {s})"
             for s in bm25_term_scores(
                 n_terms, k1, b, **{**_field_names(fname), "df": blended}
             )
         ]
         for fname, boost in pairs
     ]
-    term_scores = []
-    for per_field in zip(*by_field):
-        s = reduce(_add, per_field)
-        best = F.greatest(*per_field) if len(per_field) > 1 else per_field[0]
-        term_scores.append(best + F.lit(float(tie_breaker)) * (s - best))
-    return reduce(_add, term_scores)
+    return sql_fold("+", [_dis_max(list(scores), tie_breaker) for scores in zip(*by_field)])
 
 
-def _combine_fields(
-    per_field: list[Column], mm_type: str, tie_breaker: float
-) -> Column:
+def _combine_fields(per_field: list[str], mm_type: str, tie_breaker: float) -> str:
     """The field-centric combines: ``best_fields`` is the dis_max
     max + tie_breaker * (sum - max); ``most_fields`` is ES's bool
     should over the per-field matches — the plain fixed-order sum
@@ -201,13 +200,11 @@ def _combine_fields(
     goes through :func:`_cross_fields_score`."""
     if mm_type not in ("best_fields", "most_fields"):
         raise ValueError(f"unknown multi_match type {mm_type!r}")
-    total = reduce(_add, per_field)
     if mm_type == "most_fields":
         if tie_breaker != 0.0:
             raise ValueError("tie_breaker only applies to best_fields")
-        return total
-    best = F.greatest(*per_field) if len(per_field) > 1 else per_field[0]
-    return best + F.lit(float(tie_breaker)) * (total - best)
+        return sql_fold("+", per_field)
+    return _dis_max(per_field, tie_breaker)
 
 
 def _check_mm(mm_type: str, operator: str, terms: list[str]) -> None:
@@ -241,26 +238,20 @@ def _mm_project(
     cross_fields reads the shared ``n``. operator="and" adds its gate
     here; the >= 1-hit gate of operator="or" is the caller's."""
 
-    def hit(fname: str, i: int) -> Column:
-        return F.col(f"tf_{fname}_{i}") > 0
-
-    def full_match(fname: str) -> Column:
-        return reduce(_and, [hit(fname, i) for i in range(n_terms)])
+    def full_match(fname: str) -> str:
+        return sql_fold("AND", [_hit(fname, i) for i in range(n_terms)])
 
     if operator == "and":
         if mm_type == "cross_fields":
             # term-centric AND: every term in >= 1 field
-            gate = reduce(
-                _and,
-                [
-                    reduce(_or, [hit(fname, i) for fname, _ in pairs])
-                    for i in range(n_terms)
-                ],
+            gate = sql_fold(
+                "AND",
+                [sql_fold("OR", [_hit(fname, i) for fname, _ in pairs]) for i in range(n_terms)],
             )
         else:
             # field-centric AND: some field contains ALL terms (a doc
             # absent from a field's at-rest hit set has tf=0 there)
-            gate = reduce(_or, [full_match(fname) for fname, _ in pairs])
+            gate = sql_fold("OR", [full_match(fname) for fname, _ in pairs])
         j = j.filter(gate)
     if mm_type == "cross_fields":
         score = _cross_fields_score(pairs, n_terms, k1, b, tie_breaker)
@@ -273,15 +264,16 @@ def _mm_project(
             # a field missing a term does not match: it contributes
             # exactly 0.0 (the same literal both physical forms use)
             scores = [
-                F.when(full_match(fname), s).otherwise(F.lit(0.0))
+                f"CASE WHEN {full_match(fname)} THEN {s} ELSE 0.0D END"
                 for (fname, _), s in zip(pairs, scores)
             ]
         score = _combine_fields(scores, mm_type, tie_breaker)
-    return (
-        j.select(F.col(id_col), score.alias("score"))
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(k)
-    )
+    return _top_k(j, id_col, score, k)
+
+
+def _hit(fname: str, i: int) -> str:
+    """SQL text: the doc's field ``fname`` contains term ``i``."""
+    return f"({sql_ident(f'tf_{fname}_{i}')} > 0)"
 
 
 def multi_match_best_fields(
@@ -329,7 +321,7 @@ def multi_match_best_fields(
         [id_col],
         *[
             bm25_scan_columns(
-                F.coalesce(F.col(fname), F.lit("")),
+                f"coalesce({sql_ident(fname)}, '')",
                 list(terms),
                 toks=f"_toks_{fname}",
                 n="n" if fi == 0 else None,
@@ -341,14 +333,7 @@ def multi_match_best_fields(
     if operator == "or":
         # the at-rest pivot's hit set is this set: >= 1 term in >= 1 field
         j = j.filter(
-            reduce(
-                _or,
-                [
-                    F.col(f"tf_{fname}_{i}") > 0
-                    for fname, _ in pairs
-                    for i in range(len(terms))
-                ],
-            )
+            sql_fold("OR", [_hit(fname, i) for fname, _ in pairs for i in range(len(terms))])
         )
     return _mm_project(
         j, pairs, len(terms), tie_breaker, k, id_col, k1, b, mm_type, operator, "n"
@@ -412,7 +397,7 @@ def multi_match_best_fields_atrest(
     )
     hits = None
     for fi, (h, _stats) in enumerate(probed):
-        h = h.select(F.col(id_col), F.lit(fi).alias("_f"), "term", "tf", "dl")
+        h = h.selectExpr(sql_ident(id_col), f"{fi} AS `_f`", "`term`", "`tf`", "`dl`")
         hits = h if hits is None else hits.unionByName(h)
     # ONE doc-keyed pivot for all fields: the union hit set IS the
     # union of the per-field hit sets, and a (field, term) the doc
@@ -420,31 +405,28 @@ def multi_match_best_fields_atrest(
     # produced
     joined = hits.groupBy(id_col).agg(
         *[
-            F.coalesce(
-                F.max(
-                    F.when(
-                        (F.col("_f") == fi) & (F.col("term") == t), F.col("tf")
-                    )
-                ),
-                F.lit(0),
-            ).alias(f"tf_{fname}_{i}")
+            F.expr(
+                f"coalesce(max(CASE WHEN ((`_f` = {fi}) AND (`term` = {sql_string(t)}))"
+                f" THEN `tf` END), 0) AS {sql_name(f'tf_{fname}_{i}')}"
+            )
             for fi, (fname, _) in enumerate(path_pairs)
             for i, t in enumerate(terms)
         ],
         *[
-            F.coalesce(F.max(F.when(F.col("_f") == fi, F.col("dl"))), F.lit(0)).alias(
-                f"dl_{fname}"
+            F.expr(
+                f"coalesce(max(CASE WHEN (`_f` = {fi}) THEN `dl` END), 0)"
+                f" AS {sql_name(f'dl_{fname}')}"
             )
             for fi, (fname, _) in enumerate(path_pairs)
         ],
     )
-    stat_cols = [F.lit(probed[0][1].n_docs).alias("n")]
+    stat_cols = [f"{probed[0][1].n_docs} AS `n`"]
     for (fname, _), (_h, stats) in zip(path_pairs, probed):
         stat_cols += stats.columns(
             list(terms), f"n_{fname}", f"avgdl_{fname}", f"df_{fname}_{{i}}"
         )
     return _mm_project(
-        joined.select("*", *stat_cols),
+        joined.selectExpr("*", *stat_cols),
         pairs, len(terms), tie_breaker, k, id_col, k1, b, mm_type, operator, "n_{f}",
     )
 
@@ -552,47 +534,44 @@ def match_phrase_prefix_atrest(
     else:
         pidx, _doclens, n_buckets = read_text_index(spark, path)
         vocab = read_vocab(spark, path)
-    exp = vocab.select("term").filter(F.col("term").startswith(prefix)).distinct()
+    exp = (
+        vocab.selectExpr("`term`")
+        .filter(f"startswith(`term`, {sql_string(prefix)})")
+        .distinct()
+    )
     if max_expansions is not None:
         exp = exp.orderBy("term").limit(int(max_expansions))
     expanded = [r[0] for r in exp.collect()]  # bounded: <= max_expansions
     probe = list(dict.fromkeys(terms + expanded))
     if not probe:  # empty prefix expansion with no fixed terms
-        return pidx.select(
-            F.col(id_col), F.lit(0).cast("long").alias("phrase_count")
+        return pidx.selectExpr(
+            sql_ident(id_col), "CAST(0 AS BIGINT) AS `phrase_count`"
         ).limit(0)
     p = probe_postings(pidx, probe, n_buckets)
     aggs = [
-        F.max(F.when(F.col("term") == t, F.col("positions"))).alias(f"ps{j}")
+        f"max(CASE WHEN (`term` = {sql_string(t)}) THEN `positions` END) AS `ps{j}`"
         for j, t in enumerate(terms)
     ]
     aggs.append(
-        F.flatten(
-            F.collect_list(
-                F.when(F.col("term").isin(expanded), F.col("positions"))
-            )
-        ).alias("exp_pos")
+        f"flatten(collect_list(CASE WHEN {sql_in('term', expanded)} THEN `positions` END))"
+        " AS `exp_pos`"
     )
-    per_doc = p.groupBy(id_col).agg(*aggs)
+    per_doc = p.groupBy(id_col).agg(*[F.expr(a) for a in aggs])
     for j in range(len(terms)):
-        per_doc = per_doc.filter(F.col(f"ps{j}").isNotNull())
-    per_doc = per_doc.filter(F.size("exp_pos") > 0)
+        per_doc = per_doc.filter(f"(`ps{j}` IS NOT NULL)")
+    per_doc = per_doc.filter("(size(`exp_pos`) > 0)")
     if terms:
-
-        def _start_ok(pos):
-            cond = F.array_contains(F.col("exp_pos"), pos + m - 1)
-            for j in range(1, len(terms)):
-                cond = F.array_contains(F.col(f"ps{j}"), pos + j) & cond
-            return cond
-
-        count = F.size(F.filter(F.col("ps0"), _start_ok))
+        # a start position x of the fixed terms whose later terms and
+        # expansion sit at x + j
+        cond = f"array_contains(`exp_pos`, ((x + {m}) - 1))"
+        for j in range(1, len(terms)):
+            cond = f"(array_contains(`ps{j}`, (x + {j})) AND {cond})"
+        count = f"size(filter(`ps0`, x -> {cond}))"
     else:
-        count = F.size("exp_pos")
+        count = "size(`exp_pos`)"
     return (
-        per_doc.select(
-            F.col(id_col), count.cast("long").alias("phrase_count")
-        )
-        .filter(F.col("phrase_count") > 0)
+        per_doc.selectExpr(sql_ident(id_col), f"CAST({count} AS BIGINT) AS `phrase_count`")
+        .filter("(`phrase_count` > 0)")
         .orderBy(F.desc("phrase_count"), F.asc(id_col))
         .limit(k)
     )

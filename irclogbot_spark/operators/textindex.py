@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from irclogbot_spark.artifacts import write_meta
-from irclogbot_spark.functions.lits import literal_frame
+from irclogbot_spark.functions.lits import literal_frame, sql_ident, sql_in
 from irclogbot_spark.functions.text import (
     WORD_RE,
     Bm25Stats,
@@ -202,8 +202,8 @@ def _stored_stats(
         DataFrame.unionByName,
         [
             read_vocab(spark, p)
-            .filter(F.col("term").isin(want))
-            .select(F.lit(i).alias("_i"), "term", "df")
+            .filter(sql_in("term", want))
+            .selectExpr(f"{i} AS `_i`", "`term`", "`df`")
             for i, p in enumerate(paths)
         ],
     )
@@ -239,8 +239,8 @@ def probe_indexes(
         else:
             pidx, meta = opened[src]
             n_buckets = int(meta["n_buckets"])
-        hits = probe_postings(pidx, terms, n_buckets).select(
-            id_col, "term", F.size("positions").cast("long").alias("tf"), "dl"
+        hits = probe_postings(pidx, terms, n_buckets).selectExpr(
+            sql_ident(id_col), "`term`", "CAST(size(`positions`) AS BIGINT) AS `tf`", "`dl`"
         )
         if isinstance(src, tuple):
             out.append((hits, frame_stats(hits, doclens)))
@@ -270,17 +270,17 @@ def bm25_scores_atrest(
 def probe_postings(
     pidx: DataFrame, terms: list[str], n_buckets: int | None = None
 ) -> DataFrame:
-    """Bucket-pruned positional postings for LITERAL probe terms:
-    the `term_bkt IN (...)` literals land as PartitionFilters (only
-    the probed directories are read), then the exact term filter
-    cuts within-bucket hash collisions. With n_buckets=None (an
-    in-session frame with no bucket column) only the term filter
-    applies — same rows either way."""
-    out = pidx
+    """Bucket-pruned positional postings for LITERAL probe terms, in
+    one predicate: the `term_bkt IN (...)` literals land as
+    PartitionFilters (only the probed directories are read), and the
+    exact term filter cuts within-bucket hash collisions. With
+    n_buckets=None (an in-session frame with no bucket column) only
+    the term filter applies — same rows either way."""
+    pred = sql_in("term", terms)
     if n_buckets is not None:
         want = sorted({py_term_bucket(t, n_buckets) for t in terms})
-        out = out.filter(F.col("term_bkt").isin(want))
-    return out.filter(F.col("term").isin(list(terms)))
+        pred = f"({sql_in('term_bkt', want)} AND {pred})"
+    return pidx.filter(pred)
 
 
 def postings_tf(pidx: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -335,16 +335,18 @@ def fuzzy_term_search_atrest(
     pidx, _lens, n_buckets = read_text_index(spark, path)
     vocab = read_vocab(spark, path)
     tdf = literal_frame(spark, [(t,) for t in terms], "term string")
-    dist = F.levenshtein(F.col("tok"), F.col("term"), max_dist)
+    d = int(max_dist)
+    dist = f"levenshtein(`tok`, `term`, {d})"
     matches = (
-        vocab.select(F.col("term").alias("tok"), "df")
+        vocab.selectExpr("`term` AS `tok`", "`df`")
         .join(
             F.broadcast(tdf),
-            (F.abs(F.length("tok") - F.length("term")) <= F.lit(max_dist))
-            & (dist >= 0)
-            & (dist <= max_dist),
+            F.expr(
+                f"(((abs((length(`tok`) - length(`term`))) <= {d}) AND ({dist} >= 0))"
+                f" AND ({dist} <= {d}))"
+            ),
         )
-        .select("term", "tok", "df")
+        .selectExpr("`term`", "`tok`", "`df`")
     )
     if max_expansions is not None:
         from pyspark.sql import Window
@@ -355,14 +357,14 @@ def fuzzy_term_search_atrest(
             .filter(F.col("_r") <= max_expansions)
             .drop("_r")
         )
-    rows = matches.select("term", "tok").collect()
+    rows = matches.selectExpr("`term`", "`tok`").collect()
     mdf = literal_frame(spark, rows, "term string, tok string")
     probed = probe_postings(
         pidx, sorted({r.tok for r in rows}), n_buckets
-    ).select(F.col("term").alias("tok"), id_col)
+    ).selectExpr("`term` AS `tok`", sql_ident(id_col))
     return (
         probed.join(F.broadcast(mdf), "tok")
-        .select("term", F.col(id_col))
+        .selectExpr("`term`", sql_ident(id_col))
         .distinct()
     )
 

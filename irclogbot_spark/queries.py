@@ -285,17 +285,18 @@ def log_term_time_filter(spark, sf_dir):
     once per variant — the union-of-arms multiset."""
     log = _irclog(spark, sf_dir)
     tt = (
-        (F.col("channel") == "#purchase")
-        & (F.col("posted") >= _ntz("2024-01-08 00:00:00"))
-        & (F.col("posted") < _ntz("2024-01-14 00:00:00"))
+        "(((`channel` = '#purchase')"
+        " AND (`posted` >= CAST('2024-01-08 00:00:00' AS TIMESTAMP_NTZ)))"
+        " AND (`posted` < CAST('2024-01-14 00:00:00' AS TIMESTAMP_NTZ)))"
     )
-    ft = F.col("remark").like('%"k": 4%')
-    variants = F.array_compact(
-        F.array(F.when(tt, "term_time"), F.when(ft, "fulltext"))
+    ft = """(`remark` LIKE '%"k": 4%')"""
+    variants = (
+        f"array_compact(array(CASE WHEN {tt} THEN 'term_time' END, "
+        f"CASE WHEN {ft} THEN 'fulltext' END))"
     )
-    return log.filter(tt | ft).select(
-        F.explode(variants).alias("variant"),
-        "channel", "nick", "posted", "remark", "id",
+    return log.filter(f"({tt} OR {ft})").selectExpr(
+        f"explode({variants}) AS `variant`",
+        "`channel`", "`nick`", "`posted`", "`remark`", "`id`",
     )
 
 
@@ -310,11 +311,11 @@ def log_point_lookup(spark, sf_dir):
     where nothing pushed below the computed id; it is untried on the
     stored log.)"""
     log = _irclog(spark, sf_dir)
-    key = log.agg(F.min("id").alias("id"))
+    key = log.selectExpr("min(`id`) AS `id`")
     return (
         log.join(F.broadcast(key), "id")
         .groupBy("id", "channel", "nick", "remark")
-        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.expr("count(1) AS `n`"))
     )
 
 
@@ -1435,29 +1436,29 @@ def log_significant_terms(spark, sf_dir):
     the one step that does not spread over executors. Tail
     registration; value-checked by the local parity suite."""
     log = _irclog(spark, sf_dir)
-    terms = log.select(
-        "channel", F.explode(F.split("remark", r"\s+")).alias("term")
-    ).filter(F.col("term") != "")
-    ct = terms.groupBy("channel", "term").agg(F.count(F.lit(1)).alias("f_cnt"))
-    scored = (
-        ct.withColumn("bg_cnt", F.sum("f_cnt").over(Window.partitionBy("term")))
-        .withColumn("corpus_total", F.sum("f_cnt").over(Window.partitionBy()))
-        .withColumn(
-            "chan_total", F.sum("f_cnt").over(Window.partitionBy("channel"))
-        )
-        .filter(F.col("f_cnt") >= 3)
-        .withColumn(
-            "lift_milli",
-            F.expr("(f_cnt * corpus_total * 1000) DIV (chan_total * bg_cnt)"),
-        )
-    )
-    w = Window.partitionBy("channel").orderBy(
-        F.desc("lift_milli"), F.desc("f_cnt"), "term"
-    )
+    terms = log.selectExpr(
+        "`channel`", "explode(split(`remark`, '\\\\s+', -1)) AS `term`"
+    ).filter("(`term` != '')")
+    ct = terms.groupBy("channel", "term").agg(F.expr("count(1) AS `f_cnt`"))
     return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= 5)
-        .select("channel", "term", "f_cnt", "lift_milli", "rnk")
+        ct.selectExpr(
+            "*",
+            "sum(`f_cnt`) OVER (PARTITION BY `term`) AS `bg_cnt`",
+            "sum(`f_cnt`) OVER () AS `corpus_total`",
+            "sum(`f_cnt`) OVER (PARTITION BY `channel`) AS `chan_total`",
+        )
+        .filter("(`f_cnt` >= 3)")
+        .selectExpr(
+            "*",
+            "(f_cnt * corpus_total * 1000) DIV (chan_total * bg_cnt) AS `lift_milli`",
+        )
+        .selectExpr(
+            "*",
+            "CAST(row_number() OVER (PARTITION BY `channel` ORDER BY `lift_milli` DESC,"
+            " `f_cnt` DESC, `term` ASC) AS BIGINT) AS `rnk`",
+        )
+        .filter("(`rnk` <= 5)")
+        .selectExpr("`channel`", "`term`", "`f_cnt`", "`lift_milli`", "`rnk`")
     )
 
 
@@ -5402,12 +5403,11 @@ def log_recency_search(spark, sf_dir):
     from irclogbot_spark.operators.boolquery import function_score_search
 
     log = _irclog(spark, sf_dir)
-    df = log.select(
-        "id",
-        "remark",
-        F.unix_timestamp(F.col("posted").cast("timestamp")).alias(
-            "posted_epoch"
-        ),
+    df = log.selectExpr(
+        "`id`",
+        "`remark`",
+        "unix_timestamp(CAST(`posted` AS TIMESTAMP), 'yyyy-MM-dd HH:mm:ss')"
+        " AS `posted_epoch`",
     )
     return function_score_search(
         df,
@@ -5446,12 +5446,12 @@ def docs_collapse_by_source(spark, sf_dir):
     joined = bm25_scan_frame(
         _t(spark, sf_dir, "documents"),
         ["doc_id", "source"],
-        bm25_scan_columns(F.col("text"), ["the", "data"]),
+        bm25_scan_columns("`text`", ["the", "data"]),
     )
     score = bm25_score_sum(2, 1.2, 0.75)
     w = Window.partitionBy("source").orderBy(F.desc("_s"), "doc_id")
     return (
-        joined.select("doc_id", "source", score.alias("_s"))
+        joined.selectExpr("`doc_id`", "`source`", f"{score} AS `_s`")
         .withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= 2)
         .select("source", "doc_id", F.col("_s").alias("score"), "rnk")

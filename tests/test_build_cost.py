@@ -24,21 +24,33 @@ SF = "/root/testdata/sf0.001"
 _DETACH = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
 
 #: warm-build py4j messages per query: the measured count plus 25%
-#: (at sf0.001, local[4]: docs_bm25_atrest 333, 368 since it reads the
-#: stored index statistics; docs_multi_match_atrest 927, 815 since the
-#: stored statistics; log_top_nicks 52
-#: and log_msgs_per_channel_day 58 on the stored log,
-#: docs_backoff_surprisal 4502; log_recency_search 270 and
-#: docs_bool_search_atrest 584 before the BM25 assembly moved into
-#: functions/text.py, 264 and 490 after it)
+#: (at sf0.001, local[4]). History: docs_bm25_atrest 333, 368 since it
+#: reads the stored index statistics; docs_multi_match_atrest 927, 815
+#: since the stored statistics; log_top_nicks 52 and
+#: log_msgs_per_channel_day 58 on the stored log; docs_backoff_surprisal
+#: 4502; log_recency_search 270 and docs_bool_search_atrest 584 before
+#: the BM25 assembly moved into functions/text.py, 264 and 490 after it.
+#: Before -> after the query_mix builders moved to SQL text
+#: (functions/lits.py): docs_bm25_atrest 315 -> 96,
+#: docs_multi_match_atrest 709 -> 160, log_recency_search 264 -> 89,
+#: docs_bool_search_atrest 490 -> 115, docs_phrase_search_atrest
+#: 227 -> 50, docs_fuzzy_term_search_atrest 193 -> 87,
+#: log_match_phrase_prefix_atrest 334 -> 87, log_significant_terms
+#: 199 -> 81, log_term_time_filter 93 -> 29, log_point_lookup 76 -> 61
 BUDGETS = {
-    "docs_bm25_atrest": 416,
-    "docs_multi_match_atrest": 1019,
+    "docs_bm25_atrest": 120,
+    "docs_multi_match_atrest": 200,
     "log_top_nicks": 65,
     "log_msgs_per_channel_day": 72,
     "docs_backoff_surprisal": 5627,
-    "log_recency_search": 337,
-    "docs_bool_search_atrest": 730,
+    "log_recency_search": 111,
+    "docs_bool_search_atrest": 143,
+    "docs_phrase_search_atrest": 62,
+    "docs_fuzzy_term_search_atrest": 108,
+    "log_match_phrase_prefix_atrest": 108,
+    "log_significant_terms": 101,
+    "log_term_time_filter": 36,
+    "log_point_lookup": 76,
 }
 
 #: Spark jobs of one warm build+collect (at sf0.001, local[4]); the

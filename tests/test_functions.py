@@ -182,3 +182,53 @@ def test_canonicalize_url_idempotent_over_combinatorial_battery(spark):
     for r in out:
         assert r.c1 == r.c2, (urls[r.i], r.c1, r.c2)
         assert "#" not in r.c1 and "utm_" not in r.c1, (urls[r.i], r.c1)
+
+
+#: doubles whose SQL text must parse to the exact bits F.lit makes:
+#: inexact decimals, the smallest subnormal, the largest finite value,
+#: negative zero and the non-finite values, which have no literal
+SQL_DOUBLES = [0.1, 1 / 3, 5e-324, 1.7976931348623157e308, -0.0,
+               float("nan"), float("inf"), float("-inf")]
+SQL_STRINGS = ["it's", "back\\slash", "new\nline", "ünï¢ødé ✓"]
+
+
+def test_sql_literals_match_f_lit(spark):
+    """F.expr(sql_double(x)) and F.expr(sql_string(s)) collect to the
+    same type and the same value (bits, for doubles) as F.lit."""
+    import struct
+
+    from irclogbot_spark.functions.lits import lit_double_array, sql_double, sql_string
+
+    cols = []
+    for i, v in enumerate(SQL_DOUBLES + SQL_STRINGS):
+        text = sql_double(v) if isinstance(v, float) else sql_string(v)
+        cols += [F.expr(text).alias(f"e{i}"), F.lit(v).alias(f"l{i}")]
+    df = spark.range(1).select(*cols, lit_double_array(SQL_DOUBLES).alias("arr"))
+    types = dict(df.dtypes)
+    row = df.first()
+    bits = lambda x: struct.pack(">d", x)  # noqa: E731
+    for i, v in enumerate(SQL_DOUBLES + SQL_STRINGS):
+        got, want = row[f"e{i}"], row[f"l{i}"]
+        assert types[f"e{i}"] == types[f"l{i}"], (v, types[f"e{i}"])
+        if isinstance(v, float):
+            assert bits(got) == bits(want) == bits(v), (v, got)
+        else:
+            assert got == want == v
+    assert [bits(x) for x in row.arr] == [bits(x) for x in SQL_DOUBLES]
+
+
+@pytest.mark.parametrize("name", ["id", "`te``xt`", "s.text", "`s.text`.`a``b`"])
+def test_sql_ident_resolves_as_f_col(spark, name):
+    """sql_ident(name) names the column F.col(name) resolves: a dotted
+    path stays nested, a backquoted part keeps its dots, and a
+    backquote inside a part is doubled."""
+    from irclogbot_spark.functions.lits import sql_ident
+
+    df = spark.createDataFrame(
+        [(1, "t", ("x",), ("y",))],
+        "id long, `te``xt` string, s struct<text: string>, "
+        "`s.text` struct<`a``b`: string>",
+    )
+    assert df.select(F.expr(sql_ident(name))).first() == df.select(F.col(name)).first()
+    with pytest.raises(ValueError):
+        sql_ident("te`xt")  # F.col rejects it too: an unpaired backquote

@@ -250,18 +250,26 @@ def test_minhash_portable_hash_is_equivalent_machinery(spark, docs):
 
 @pytest.mark.parametrize("hash_fn", [dedup.xxhash31, dedup.md5_hash31])
 def test_minhash_sql_path_quotes_backticked_column(spark, hash_fn):
-    """A column name holding a backtick goes through the SQL-text fast
-    path (name given as a string) with its backtick doubled, and
-    signs exactly as the Column path does."""
+    """The SQL-text fast path (name given as a string) resolves the name
+    as F.col does: a column named te`xt (F.col's quoting doubles the
+    backtick) and the struct path s.text sign exactly as the Column
+    path does."""
     df = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over"), (2, "lazy dogs sleep all day long")],
-        "id long, `te``xt` string",
+        [
+            (1, "the quick brown fox jumps over", ("the quick brown fox jumps over",)),
+            (2, "lazy dogs sleep all day long", ("lazy dogs sleep all day long",)),
+        ],
+        "id long, `te``xt` string, s struct<text: string>",
     )
-    fast = dedup.minhash_signature("te`xt", num_perm=8, hash_fn=hash_fn)
-    slow = dedup.minhash_signature(F.col("`te``xt`"), num_perm=8, hash_fn=hash_fn)
-    rows = df.select("id", fast.alias("a"), slow.alias("b")).collect()
+    cols = []
+    for name in ("`te``xt`", "s.text"):
+        fast = dedup.minhash_signature(name, num_perm=8, hash_fn=hash_fn)
+        slow = dedup.minhash_signature(F.col(name), num_perm=8, hash_fn=hash_fn)
+        cols += [fast, slow]
+    rows = df.select("id", *[c.alias(f"c{i}") for i, c in enumerate(cols)]).collect()
     assert len(rows) == 2
-    assert all(r.a == r.b and r.a is not None for r in rows)
+    for r in rows:
+        assert r.c0 is not None and r.c0 == r.c1 == r.c2 == r.c3
 
 
 def test_ivf_trainer_matches_driver_replica_exactly(spark, emb):
