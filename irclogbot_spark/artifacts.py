@@ -6,7 +6,9 @@ driver's local disk, not HDFS/S3).
 Every streamed index keeps the same exactly-once contract (a
 replayable source plus an idempotent sink): each micro-batch
 OVERWRITES its own ``batch_id=N`` partition, so a foreachBatch replay
-rewrites identical rows. Compaction folds batch partitions into a
+rewrites identical rows. :func:`drain` is the one place a stream is
+started: a checkpointed foreachBatch query that drains what has
+arrived and stops. Compaction folds batch partitions into a
 generation under one of two naming policies:
 
     in place      <root>/batch_id=N/        live batches
@@ -43,6 +45,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 #: Hadoop's switch for the ``_SUCCESS`` marker (on by default); every
 #: write here forces it, because the marker is the commit record
@@ -54,7 +57,24 @@ def _fs(spark: SparkSession, path: str):
     return p, p.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
-def _names(spark: SparkSession, path: str) -> list[str]:
+def drain(stream: DataFrame, checkpoint_dir: str, body) -> StreamingQuery:
+    """Start ``stream`` into the foreachBatch ``body(batch, batch_id)``,
+    checkpointed at ``checkpoint_dir``, draining everything that has
+    arrived (availableNow) and then stopping. A restart against the
+    same checkpoint replays an uncommitted batch under its old
+    batch_id, so an idempotent ``body`` makes the run exactly-once.
+    Returns the started query (the caller awaits or stops it)."""
+    return (
+        stream.writeStream.foreachBatch(body)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def list_names(spark: SparkSession, path: str) -> list[str]:
+    """Entry names directly under ``path`` ([] when it does not
+    exist)."""
     p, fs = _fs(spark, path)
     if not fs.exists(p):
         return []
@@ -66,7 +86,7 @@ def part_ids(spark: SparkSession, path: str, prefix: str) -> list[int]:
     ([] when ``path`` does not exist)."""
     return sorted(
         int(n.split("=", 1)[1])
-        for n in _names(spark, path)
+        for n in list_names(spark, path)
         if n.startswith(prefix + "=")
     )
 

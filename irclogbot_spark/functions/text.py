@@ -157,11 +157,6 @@ def token_count(text: Column | str, pattern: str = WORD_RE) -> Column:
     return F.size(F.regexp_extract_all(c, F.lit(pattern), F.lit(0)))
 
 
-def char_count(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.length(c)
-
-
 def stopword_hits(text: Column | str, lang: str = "en") -> Column:
     c = F.col(text) if isinstance(text, str) else text
     words = "|".join(LANG_STOPWORDS[lang])

@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from irclogbot_spark.functions.lits import sql_ident
+
 
 def histogram_counts(
     df: DataFrame,
@@ -51,7 +53,7 @@ def histogram_counts(
     partial-agg shuffle. Values must be non-negative integers (the
     floor-quantize-first rule covers floats upstream)."""
     group_cols = group_cols or []
-    b = F.expr(f"CAST({value_col} AS BIGINT) div {int(width)}").alias("bin")
+    b = F.expr(f"CAST({sql_ident(value_col)} AS BIGINT) div {int(width)}").alias("bin")
     return (
         df.select(*group_cols, b)
         .groupBy(*group_cols, "bin")

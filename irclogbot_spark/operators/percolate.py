@@ -20,8 +20,8 @@ searches, not corpus data):
 * the per-query min_match threshold rides the broadcast row — no
   second join.
 
-Streaming twin: :func:`percolate_stream` runs the same transform per
-micro-batch through foreachBatch — each batch's alerts append to the
+Streaming twin: :func:`percolate_batch` runs the same transform per
+micro-batch as a foreachBatch body — each batch's alerts append to the
 sink; the transform is stateless (saved queries are the state and
 they live in the broadcast table), so replay idempotence reduces to
 the sink's (the engine-wide batch_id partition-overwrite recipe).
@@ -84,30 +84,24 @@ def percolate(
     )
 
 
-def percolate_stream(
-    stream_docs: DataFrame,
+def percolate_batch(
+    batch: DataFrame,
+    batch_id: int,
     qtable: DataFrame,
     out_dir: str,
-    checkpoint_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-):
-    """Continuous percolation — the alerting loop: each micro-batch
-    of arriving docs is matched against the saved-search table and
-    the alerts land in a batch_id-partitioned parquet sink (replay
-    of an uncommitted batch OVERWRITES its own partition — the
-    engine-wide idempotence recipe; see streaming/corpus.py)."""
-
-    def _each(batch: DataFrame, batch_id: int) -> None:
-        alerts = percolate(batch, qtable, id_col, text_col).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
-        alerts.write.mode("overwrite").partitionBy("batch_id").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(out_dir)
-
-    return (
-        stream_docs.writeStream.foreachBatch(_each)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
+) -> None:
+    """foreachBatch body of the alerting loop: the batch's docs are
+    matched against the saved-search table and the alerts land in
+    the ``batch_id=N`` partition of a parquet sink (replay of an
+    uncommitted batch OVERWRITES its own partition — the engine-wide
+    idempotence recipe; see streaming/corpus.py). Run it with
+    ``artifacts.drain(stream, checkpoint_dir, partial(percolate_batch,
+    qtable=..., out_dir=...))``."""
+    alerts = percolate(batch, qtable, id_col, text_col).withColumn(
+        "batch_id", F.lit(int(batch_id))
     )
+    alerts.write.mode("overwrite").partitionBy("batch_id").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(out_dir)

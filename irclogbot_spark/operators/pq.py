@@ -53,10 +53,6 @@ def _fold_sq(vals: list[float]) -> float:
     return acc
 
 
-def _lit_vec(vals: list[float]):
-    return F.array(*[F.lit(float(x)) for x in vals])
-
-
 def _book_lit(book: list[list[float]]):
     """One plan-constant literal array of (cvec, bias, c2) structs per
     subspace, shipped as a SINGLE parsed SQL expression. Two measured

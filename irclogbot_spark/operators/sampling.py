@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from irclogbot_spark.functions.lits import sql_ident
 from irclogbot_spark.plans.partitioning import ensure_parallelism
 
 #: resolution of the uniform draw (1e-6 rate granularity)
@@ -460,7 +461,7 @@ def priority_sample(
         .withColumn("_u1", u1.cast("long"))
         .withColumn(
             "priority_nano",
-            F.expr(f"CAST({weight_col} AS BIGINT) * 1000000000 DIV _u1"),
+            F.expr(f"CAST({sql_ident(weight_col)} AS BIGINT) * 1000000000 DIV _u1"),
         )
         .orderBy(F.desc("priority_nano"), F.asc(id_col))
         .limit(k + 1)
@@ -478,7 +479,7 @@ def priority_sample(
         .withColumn(
             "w_hat_nano",
             F.greatest(
-                F.expr(f"CAST({weight_col} AS BIGINT) * 1000000000"),
+                F.expr(f"CAST({sql_ident(weight_col)} AS BIGINT) * 1000000000"),
                 F.col("tau_nano"),
             ),
         )

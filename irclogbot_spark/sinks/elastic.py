@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from irclogbot_spark.artifacts import drain
 from irclogbot_spark.functions.scalar import iso_posted
 
 ES_INDEX = "irclog"  # irclogbot.py:50
@@ -170,7 +171,6 @@ def start_es_stream(
     checkpoint_dir: str,
     index: str = ES_INDEX,
     watermark: str = "10 minutes",
-    trigger_once: bool = True,
 ):
     """The production ES topology end-to-end: streaming raw lines ->
     parse chain -> foreachBatch bulk writer — the reference's live
@@ -189,11 +189,6 @@ def start_es_stream(
     log = streaming_irclog(
         read_raw_lines_stream(spark, path=source_path), watermark
     )
-    writer = (
-        log.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(lambda b, _i: write_to_elasticsearch(b, host, index))
+    return drain(
+        log, checkpoint_dir, lambda b, _i: write_to_elasticsearch(b, host, index)
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -3,10 +3,10 @@
 The reference carries a pymysql connection helper that no bot ever
 calls (utils.py:55-81: connect/get_cursor/commit exist, zero call
 sites in irclogbot.py or logbot_roundrobin.py — SURVEY.md marks K5
-vestigial). The engine twin is correspondingly thin: option builders
-for Spark's native JDBC source/sink, which already does everything
-the reference's helper could (executor-side parallel writes,
-partitioned reads, credential pass-through).
+vestigial). The engine twin is correspondingly thin: one option
+builder for Spark's native JDBC source/sink, which already does
+everything the reference's helper could (executor-side parallel
+writes, partitioned reads, credential pass-through).
 
 No MySQL driver ships in this environment, but Spark's own Derby
 (the metastore engine, always on the classpath) exercises the WHOLE
@@ -20,10 +20,6 @@ parquet sink (streaming.pipeline) in front.
 """
 
 from __future__ import annotations
-
-
-def jdbc_url(host: str, db: str, port: int = 3306, dialect: str = "mysql") -> str:
-    return f"jdbc:{dialect}://{host}:{port}/{db}"
 
 
 def derby_embedded_kwargs(
@@ -45,60 +41,3 @@ def derby_embedded_kwargs(
             "batchsize": str(batchsize),
         },
     }
-
-
-def jdbc_write_kwargs(
-    host: str,
-    db: str,
-    table: str,
-    user: str,
-    password: str,
-    port: int = 3306,
-    mode: str = "append",
-    batchsize: int = 1000,
-) -> dict:
-    """kwargs for ``df.write.jdbc`` — executor-parallel batched INSERTs
-    (one connection per partition; rewrite batched statements where the
-    driver supports it)."""
-    return {
-        "url": jdbc_url(host, db, port),
-        "table": table,
-        "mode": mode,
-        "properties": {
-            "user": user,
-            "password": password,
-            "batchsize": str(batchsize),
-            "rewriteBatchedStatements": "true",
-            "characterEncoding": "utf8",  # reference charset, utils.py:59
-        },
-    }
-
-
-def jdbc_read_kwargs(
-    host: str,
-    db: str,
-    table: str,
-    user: str,
-    password: str,
-    port: int = 3306,
-    partition_column: str | None = None,
-    num_partitions: int = 8,
-    lower_bound: int | None = None,
-    upper_bound: int | None = None,
-) -> dict:
-    """kwargs for ``spark.read.jdbc``. With a numeric
-    ``partition_column`` + bounds, the read fans out across executors
-    instead of a single-connection scan."""
-    out: dict = {
-        "url": jdbc_url(host, db, port),
-        "table": table,
-        "properties": {"user": user, "password": password},
-    }
-    if partition_column is not None:
-        out.update(
-            column=partition_column,
-            numPartitions=num_partitions,
-            lowerBound=lower_bound,
-            upperBound=upper_bound,
-        )
-    return out

@@ -141,12 +141,6 @@ def read_documents_jsonl(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_raw_lines(spark: SparkSession, path: str) -> DataFrame:
-    """S1 batch form: raw IRC protocol lines, one per row
-    (irclogbot.py:111-119's socket loop, replayed from files)."""
-    return spark.read.text(path)
-
-
 def read_channels(spark: SparkSession, path: str) -> DataFrame:
     """S4: channel catalog scan — one '#channel' per line, trimmed,
     with the reference's 40-per-bot static slice (irclogbot.py:215-224,

@@ -80,32 +80,6 @@ def ingest_batch(
     )
 
 
-def continuous_index(
-    spark: SparkSession,
-    stream: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    centroids: list[list[float]],
-    books: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Wire a streaming frame of (id, vector) rows into the index.
-    Returns the StreamingQuery (caller manages lifecycle)."""
-
-    def _body(batch: DataFrame, batch_id: int) -> None:
-        ingest_batch(
-            batch, batch_id, index_dir, centroids, books, id_col=id_col, vec_col=vec_col
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_body)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 #: fold batch partitions 0..upto_batch_id (plus the previous
 #: generation) into ``cells/gen = upto_batch_id + 1``, laid out
 #: partitionBy("cell") so probes prune partitions at rest

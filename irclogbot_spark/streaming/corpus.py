@@ -35,10 +35,12 @@ Listing, writes and compaction go through irclogbot_spark/artifacts.py
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from irclogbot_spark.artifacts import fold_batches
+from irclogbot_spark.artifacts import drain, fold_batches
 from irclogbot_spark.artifacts import overwrite as _overwrite
 from irclogbot_spark.artifacts import read_parts
 from irclogbot_spark.operators.incremental import (
@@ -183,28 +185,6 @@ def compact(spark: SparkSession, corpus_dir: str, upto_batch_id: int) -> None:
     write and only finishes the deletes."""
     for sub in ("history", "fp_index", "band_index", "url_index"):
         fold_batches(spark, f"{corpus_dir}/{sub}", upto_batch_id)
-
-
-def continuous_ingest(
-    stream: DataFrame,
-    corpus_dir: str,
-    checkpoint_dir: str,
-    threshold: float = 0.8,
-    hash_fn=None,
-    within_batch: bool = True,
-    trigger_available_now: bool = True,
-):
-    """Wire a document stream into the per-batch probe-and-admit
-    loop. Returns the started StreamingQuery."""
-    writer = stream.writeStream.foreachBatch(
-        lambda b, i: ingest_batch(
-            b, i, corpus_dir, threshold=threshold, hash_fn=hash_fn,
-            within_batch=within_batch,
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # ----------------------------------------------------- crawl-shaped admission
@@ -421,39 +401,6 @@ def crawl_ingest_batch(
         )
 
 
-def crawl_continuous_ingest(
-    stream: DataFrame,
-    corpus_dir: str,
-    checkpoint_dir: str,
-    threshold: float = 0.8,
-    hash_fn=None,
-    within_batch: bool = True,
-    trigger_available_now: bool = True,
-    index_dir: str | None = None,
-    index_buckets: int = 64,
-    substring_dir: str | None = None,
-    substring_length: int = 50,
-):
-    """Wire a (doc_id, url, text) crawl stream into the canonicalize →
-    URL-dedup → content-dedup → admit loop; with ``index_dir``,
-    admitted docs become phrase/BM25-searchable in the same batch
-    (crawl in, searchable immediately); with ``substring_dir`` too,
-    repeated spans are excised first and the CLEAN text is what
-    becomes searchable — the complete crawl loop. Returns the
-    started StreamingQuery."""
-    writer = stream.writeStream.foreachBatch(
-        lambda b, i: crawl_ingest_batch(
-            b, i, corpus_dir, threshold=threshold, hash_fn=hash_fn,
-            within_batch=within_batch, index_dir=index_dir,
-            index_buckets=index_buckets, substring_dir=substring_dir,
-            substring_length=substring_length,
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def warc_crawl_ingest(
     spark: SparkSession,
     warc_dir: str,
@@ -462,26 +409,26 @@ def warc_crawl_ingest(
     threshold: float = 0.8,
     hash_fn=None,
     within_batch: bool = True,
-    trigger_available_now: bool = True,
 ):
     """The full Common-Crawl-shaped pipeline as ONE streaming query:
     `.warc.gz` shards arriving in ``warc_dir`` stream through the
     record walk + HTTP envelope split (sources/warc.stream_warc),
     then canonicalize → URL-dedup → content-dedup → admit
-    (:func:`crawl_continuous_ingest`). Shard arrival is the trigger;
+    (:func:`crawl_ingest_batch`). Shard arrival is the trigger;
     the file-source checkpoint remembers which shards each batch
     consumed, so a crash replay re-reads the same shards into the
     same batch_id and the partition-overwrite recipe keeps every
     table exactly-once. Returns the started StreamingQuery."""
     from irclogbot_spark.sources.warc import stream_warc, warc_documents
 
-    stream = warc_documents(stream_warc(spark, warc_dir))
-    return crawl_continuous_ingest(
-        stream,
-        corpus_dir,
+    return drain(
+        warc_documents(stream_warc(spark, warc_dir)),
         checkpoint_dir,
-        threshold=threshold,
-        hash_fn=hash_fn,
-        within_batch=within_batch,
-        trigger_available_now=trigger_available_now,
+        partial(
+            crawl_ingest_batch,
+            corpus_dir=corpus_dir,
+            threshold=threshold,
+            hash_fn=hash_fn,
+            within_batch=within_batch,
+        ),
     )

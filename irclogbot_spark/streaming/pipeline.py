@@ -7,7 +7,12 @@ chain -> idempotent keyed ES write, supervised by heartbeat watchdogs
   readStream (socket for live, file/text for tests and replay)
     -> ingest.parse_pipeline          (identical code to batch)
     -> withWatermark + dropDuplicates (H2 under bounded state)
-    -> foreachBatch idempotent keyed upsert (H3)
+    -> foreachBatch idempotent keyed upsert (H3), started by
+       artifacts.drain like every other stream in the package
+
+The keyed table has one layout: id_bucket= partition directories,
+which is all the sink writes. A target holding parquet files outside
+them is refused, never merged into or converted.
 
 Effectively-once = replayable source + checkpoint + content-keyed
 idempotent sink — the Spark recipe for the reference's restart-must-
@@ -22,9 +27,12 @@ and whole-history convergence happens at the keyed sink.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from irclogbot_spark.artifacts import drain, list_names
 from irclogbot_spark.ingest import DEDUP_KEY, parse_pipeline
 
 
@@ -90,60 +98,22 @@ def table_layout(spark: SparkSession, target_dir: str) -> str:
     local-FS probe would silently report "no table" and the first
     merge would overwrite from scratch).
 
-    Returns 'absent' | 'bucketed' (id_bucket= partition dirs) |
-    'flat' (bare .parquet files from a pre-bucketing layout) |
-    'mixed' (both — a corrupted half-migrated state).
+    Returns 'absent' | 'bucketed' (id_bucket= partition dirs). A
+    parquet file outside the id_bucket= dirs is a table this sink
+    did not write: merging would leave a conflicting layout that no
+    read resolves, so it raises RuntimeError instead.
     """
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(target_dir)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return "absent"
-    names = [st.getPath().getName() for st in fs.listStatus(path)]
-    bucketed = any(n.startswith("id_bucket=") for n in names)
-    flat = any(
-        n.endswith(".parquet") and not n.startswith(("_", ".")) for n in names
-    )
-    if bucketed and flat:
-        return "mixed"
-    if bucketed:
-        return "bucketed"
-    if flat:
-        return "flat"
-    return "absent"
-
-
-def migrate_flat_to_bucketed(
-    spark: SparkSession, target_dir: str, n_buckets: int = N_ID_BUCKETS
-) -> None:
-    """One-time migration of a legacy flat parquet table into the
-    id-bucket-partitioned layout keyed_upsert_batch merges into.
-
-    Reads the whole flat table once (O(table) — a migration, not a
-    merge), rewrites it under id_bucket= partitions, then removes the
-    flat files. Crash between write and delete leaves a 'mixed'
-    layout that keyed_upsert_batch refuses loudly — re-running this
-    migration is NOT safe on 'mixed' (the bucketed rows would double);
-    recover by deleting the id_bucket= dirs and re-running.
-    """
-    layout = table_layout(spark, target_dir)
-    if layout != "flat":
+    names = list_names(spark, target_dir)
+    stray = [
+        n for n in names if n.endswith(".parquet") and not n.startswith(("_", "."))
+    ]
+    if stray:
         raise RuntimeError(
-            f"migrate_flat_to_bucketed expects a flat layout, found '{layout}' "
-            f"at {target_dir}"
+            f"upsert target {target_dir} holds parquet files outside its "
+            f"id_bucket= dirs ({', '.join(sorted(stray)[:3])}): not a table "
+            "this sink wrote; refusing to merge into it"
         )
-    flat = spark.read.parquet(target_dir).withColumn(
-        "id_bucket", F.pmod(F.xxhash64("id"), F.lit(n_buckets)).cast("int")
-    )
-    flat = flat.localCheckpoint(eager=True)  # sever lineage from the files we replace
-    flat.write.mode("append").partitionBy("id_bucket").parquet(target_dir)
-    path_cls = spark._jvm.org.apache.hadoop.fs.Path
-    root = path_cls(target_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.endswith(".parquet") and not name.startswith(("_", ".")):
-            fs.delete(st.getPath(), False)
+    return "bucketed" if any(n.startswith("id_bucket=") for n in names) else "absent"
 
 
 def keyed_upsert_batch(
@@ -179,6 +149,10 @@ def keyed_upsert_batch(
       removed only at job commit, after every task has read them, so
       the merge reads the buckets it replaces in the same job.
 
+    A target holding parquet files outside its id_bucket= dirs is
+    refused with RuntimeError before anything is read or written
+    (:func:`table_layout`).
+
     Cost: O(rows in touched buckets). A batch with many more
     distinct ids than ``n_buckets`` touches every bucket, so it
     rewrites the whole table — see N_ID_BUCKETS.
@@ -193,15 +167,6 @@ def keyed_upsert_batch(
     """
     spark = batch.sparkSession
     layout = table_layout(spark, target_dir)
-    if layout in ("flat", "mixed"):
-        # a legacy flat table (or a half-migrated one): merging would
-        # write id_bucket= dirs beside the flat files — subsequent
-        # reads would see a conflicting mixed layout. Fail loudly;
-        # migrate_flat_to_bucketed is the explicit one-time fix.
-        raise RuntimeError(
-            f"keyed_upsert_batch: target {target_dir} has a '{layout}' layout; "
-            "run migrate_flat_to_bucketed(spark, target_dir) first"
-        )
     rows = batch.withColumn(
         "id_bucket", F.pmod(F.xxhash64("id"), F.lit(n_buckets)).cast("int")
     )
@@ -235,19 +200,8 @@ def start_irclog_stream(
     target_dir: str,
     checkpoint_dir: str,
     watermark: str = "10 minutes",
-    trigger_once: bool = True,
 ):
-    """Wire source -> transforms -> idempotent keyed sink, checkpointed.
-
-    trigger_once=True gives deterministic drain-everything semantics
-    for tests; production uses a processingTime trigger.
-    """
+    """Wire source -> transforms -> idempotent keyed sink, checkpointed
+    (artifacts.drain)."""
     log = streaming_irclog(read_raw_lines_stream(spark, path=source_path), watermark)
-    writer = (
-        log.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(lambda b, i: keyed_upsert_batch(b, i, target_dir))
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain(log, checkpoint_dir, partial(keyed_upsert_batch, target_dir=target_dir))

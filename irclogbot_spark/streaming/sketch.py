@@ -64,33 +64,6 @@ def sketch_batch(
     )
 
 
-def continuous_sketch(
-    stream: DataFrame,
-    sketch_dir: str,
-    checkpoint_dir: str,
-    depth: int = 4,
-    width: int = 256,
-    text_col: str = "text",
-    trigger: dict | None = None,
-):
-    """Wire a document stream into per-batch sketch writes and start
-    the query. ``trigger`` passes through to ``writeStream.trigger``
-    — default ``{"availableNow": True}`` (drain-and-stop, the test
-    and backfill mode); pass e.g. ``{"processingTime": "30 seconds"}``
-    for live continuous maintenance (a trigger cannot be changed
-    after .start(), so it must be chosen here)."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: sketch_batch(
-                b, i, sketch_dir, depth=depth, width=width, text_col=text_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
-
-
 def load_cms(spark: SparkSession, sketch_dir: str) -> DataFrame:
     """Merged (row, bucket, cell) sketch over every ingested batch —
     one aggregation of at most d*w rows per batch. Before the first
@@ -131,28 +104,6 @@ def hll_batch(
         .partitionBy("batch_id")
         .option("partitionOverwriteMode", "dynamic")
         .parquet(f"{sketch_dir}/registers")
-    )
-
-
-def continuous_hll(
-    stream: DataFrame,
-    sketch_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    group_col: str = "source",
-    trigger: dict | None = None,
-):
-    """Continuous cardinality maintenance: per-batch register writes,
-    same trigger contract as ``continuous_sketch``."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: hll_batch(
-                b, i, sketch_dir, text_col=text_col, group_col=group_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
     )
 
 
@@ -200,30 +151,6 @@ def histogram_batch(
         .partitionBy("batch_id")
         .option("partitionOverwriteMode", "dynamic")
         .parquet(f"{sketch_dir}/bins")
-    )
-
-
-def continuous_histogram(
-    stream: DataFrame,
-    sketch_dir: str,
-    checkpoint_dir: str,
-    value_col: str = "n_chars",
-    width: int = 100,
-    group_col: str = "source",
-    trigger: dict | None = None,
-):
-    """Continuous quantile-sketch maintenance: per-batch bin writes,
-    same trigger contract as ``continuous_sketch``."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: histogram_batch(
-                b, i, sketch_dir, value_col=value_col, width=width,
-                group_col=group_col,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
     )
 
 

@@ -59,27 +59,6 @@ def substring_ingest_batch(
     overwrite(fresh, f"{work_dir}/gram_index/batch_id={batch_id}")
 
 
-def continuous_substring_dedup(
-    stream: DataFrame,
-    work_dir: str,
-    checkpoint_dir: str,
-    length: int = 50,
-    hash_fn=None,
-):
-    """Wire a (doc_id, text) stream into the excise-against-history
-    loop. Returns the started StreamingQuery."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: substring_ingest_batch(
-                b, i, work_dir, length=length, hash_fn=hash_fn
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def compact(spark, work_dir: str, upto_batch_id: int) -> None:
     """Fold the gram index's per-batch partitions (ids
     0..upto_batch_id plus any previous generation) into ONE distinct

@@ -99,28 +99,6 @@ def text_ingest_batch(
     )
 
 
-def continuous_text_index(
-    stream: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    n_buckets: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """Wire a (id, text-field) stream into the text index. Returns
-    the started StreamingQuery (caller manages lifecycle)."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: text_ingest_batch(
-                b, i, index_dir, n_buckets, id_col, text_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def compact(spark: SparkSession, index_dir: str, upto_batch_id: int) -> None:
     """Fold batch posting partitions into ``buckets/gen = upto + 1``
     laid out partitionBy("term_bkt") — literal probe-term bucket

@@ -57,24 +57,6 @@ def trgm_ingest_batch(
     _STORE.ingest(postings, batch_id, index_dir, {"n_buckets": n_buckets})
 
 
-def continuous_trgm(
-    stream: DataFrame,
-    index_dir: str,
-    checkpoint_dir: str,
-    n_buckets: int = 64,
-):
-    """Wire a (doc_id, text) stream into the posting index. Returns
-    the started StreamingQuery (caller manages lifecycle)."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: trgm_ingest_batch(b, i, index_dir, n_buckets)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 #: fold batch partitions into ``buckets/gen = upto + 1`` laid out
 #: partitionBy("tri_bkt"); see artifacts.PostingStore.compact
 compact = _STORE.compact

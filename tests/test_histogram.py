@@ -55,6 +55,17 @@ def test_matches_python_replica_on_skewed_values(spark):
     assert got == _replica(values, [0, 250, 500, 750, 1000], 10)
 
 
+def test_value_column_name_is_quoted_into_sql(spark):
+    """The value column goes into SQL text quoted: ``n-chars`` (which
+    unquoted parses as the subtraction ``n - chars``) bins the same
+    values as a bare name."""
+    values = [1, 1, 2, 3, 5, 8, 13, 21, 34, 55, 89, 144, 144, 144, 233]
+    df = _vals(spark, values)
+    key = lambda h: sorted((r.bin, r.cnt) for r in h.collect())  # noqa: E731
+    want = key(histogram_counts(df, "v", 10))
+    assert key(histogram_counts(df.withColumnRenamed("v", "n-chars"), "n-chars", 10)) == want
+
+
 def test_shard_histograms_sum_merge_bit_exactly(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     whole = histogram_counts(docs, "n_chars", 16, ["source"])

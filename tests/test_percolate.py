@@ -3,11 +3,14 @@ per-query minimum_should_match, plus the streaming alerting twin."""
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import functions as F
 
+from irclogbot_spark.artifacts import drain
 from irclogbot_spark.operators.percolate import (
     percolate,
-    percolate_stream,
+    percolate_batch,
     query_table,
 )
 
@@ -86,7 +89,7 @@ def test_percolate_stream_two_batches_and_replay(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(src))
     )
-    percolate_stream(stream, qt, out, ckpt).start().awaitTermination()
+    drain(stream, ckpt, partial(percolate_batch, qtable=qt, out_dir=out)).awaitTermination()
 
     got0 = {
         (r.query_id, r.doc_id)
@@ -95,7 +98,7 @@ def test_percolate_stream_two_batches_and_replay(spark, tmp_path):
     assert got0 == {(1, 1)}
 
     write_batch("b1.json", [(3, "table scan here"), (5, "data vector")])
-    percolate_stream(stream, qt, out, ckpt).start().awaitTermination()
+    drain(stream, ckpt, partial(percolate_batch, qtable=qt, out_dir=out)).awaitTermination()
     got1 = {
         (r.query_id, r.doc_id, r.n_matched)
         for r in spark.read.parquet(out).collect()
@@ -107,7 +110,7 @@ def test_percolate_stream_two_batches_and_replay(spark, tmp_path):
     import shutil
 
     shutil.rmtree(ckpt)
-    percolate_stream(stream, qt, out, ckpt).start().awaitTermination()
+    drain(stream, ckpt, partial(percolate_batch, qtable=qt, out_dir=out)).awaitTermination()
     again = [
         (r.query_id, r.doc_id, r.n_matched)
         for r in spark.read.parquet(out).collect()

@@ -8,6 +8,8 @@ SQL twins; these pin the contracts a twin could share a bug with.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pytest
 from pyspark.sql import Row
@@ -504,11 +506,8 @@ def test_streaming_cms_equals_batch_and_replays_idempotently(spark, tmp_path):
     the one-shot sketch of the union corpus; replaying a batch
     (crash recovery) changes nothing."""
     from irclogbot_spark.operators.cms import build_cms
-    from irclogbot_spark.streaming.sketch import (
-        continuous_sketch,
-        load_cms,
-        sketch_batch,
-    )
+    from irclogbot_spark.artifacts import drain
+    from irclogbot_spark.streaming.sketch import load_cms, sketch_batch
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     src = str(tmp_path / "src")
@@ -519,7 +518,7 @@ def test_streaming_cms_equals_batch_and_replays_idempotently(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = continuous_sketch(stream, sk, str(tmp_path / "ck"))
+    q = drain(stream, str(tmp_path / "ck"), partial(sketch_batch, sketch_dir=sk))
     q.awaitTermination(120)
     merged = load_cms(spark, sk).toPandas().set_index(["row", "bucket"])
     terms = docs.select(
@@ -568,11 +567,8 @@ def test_streaming_hll_equals_batch_and_absorbs_duplicate_delivery(
     absorbs repeats."""
     from irclogbot_spark.operators.hll import hll_estimate, hll_registers
     from irclogbot_spark.operators.repetition import ngrams
-    from irclogbot_spark.streaming.sketch import (
-        continuous_hll,
-        hll_batch,
-        load_hll,
-    )
+    from irclogbot_spark.artifacts import drain
+    from irclogbot_spark.streaming.sketch import hll_batch, load_hll
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     src = str(tmp_path / "hsrc")
@@ -583,7 +579,7 @@ def test_streaming_hll_equals_batch_and_absorbs_duplicate_delivery(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = continuous_hll(stream, sk, str(tmp_path / "hck"))
+    q = drain(stream, str(tmp_path / "hck"), partial(hll_batch, sketch_dir=sk))
     q.awaitTermination(120)
 
     def regset(df):
@@ -698,11 +694,8 @@ def test_streaming_histogram_equals_batch_and_serves_quantiles(spark, tmp_path):
         histogram_counts,
         histogram_quantiles,
     )
-    from irclogbot_spark.streaming.sketch import (
-        continuous_histogram,
-        histogram_batch,
-        load_histogram,
-    )
+    from irclogbot_spark.artifacts import drain
+    from irclogbot_spark.streaming.sketch import histogram_batch, load_histogram
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     src = str(tmp_path / "hsrc")
@@ -713,7 +706,11 @@ def test_streaming_histogram_equals_batch_and_serves_quantiles(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = continuous_histogram(stream, sk, str(tmp_path / "hck"), width=100)
+    q = drain(
+        stream,
+        str(tmp_path / "hck"),
+        partial(histogram_batch, sketch_dir=sk, width=100),
+    )
     q.awaitTermination(120)
 
     merged = load_histogram(spark, sk)

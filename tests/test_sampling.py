@@ -366,17 +366,22 @@ def test_priority_sample_partitioning_invariant_and_sized(spark, docs):
     assert (a["w_hat_nano"] >= a["n_chars"] * 1_000_000_000).all()
 
 
-def test_priority_sample_estimator_matches_python_reference(spark):
+@pytest.mark.parametrize("weight_col", ["n_chars", "n-chars"])
+def test_priority_sample_estimator_matches_python_reference(spark, weight_col):
     """The integer-quantized engine against a pure-Python replica of
     Duffield/Lund/Thorup on a toy table — including the exact tau and
-    the per-row max(w, tau) estimate."""
+    the per-row max(w, tau) estimate. The weight column goes into SQL
+    text quoted, so a name that is not a bare identifier (``n-chars``,
+    which unquoted parses as a subtraction) reads the same column."""
     rows = [(i, 10 + (i * 37) % 500) for i in range(60)]
-    df = spark.createDataFrame(rows, "doc_id long, n_chars long")
+    df = spark.createDataFrame(rows, "doc_id long, n_chars long").withColumnRenamed(
+        "n_chars", weight_col
+    )
     k = 7
     got = {
         r.doc_id: (r.priority_nano, r.tau_nano, r.w_hat_nano)
         for r in sampling.priority_sample(
-            df, k, "n_chars", draw_fn=sampling.portable_draw
+            df, k, weight_col, draw_fn=sampling.portable_draw
         ).collect()
     }
 

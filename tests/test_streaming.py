@@ -241,45 +241,91 @@ def test_table_layout_probe_is_hadoop_fs_not_os_path(spark, tmp_path):
     assert "id_bucket" in out.columns and out.select(F.col("id_bucket")).distinct().count() > 1
 
 
-def test_legacy_flat_layout_fails_loudly_and_migrates(spark, tmp_path):
-    """A target written by the pre-bucketing flat layout must not be
-    silently shadowed (ADVICE r2 #2: the old probe saw 'no table' and
-    dropped id_bucket= dirs beside the flat files — a mixed,
-    conflicting table). The merge refuses; the explicit migration
-    converts, after which merges resume."""
-    import pytest as _pytest
+def _log(spark, lines):
+    from irclogbot_spark.ingest import parse_pipeline
+
+    return parse_pipeline(spark.createDataFrame([(x,) for x in lines], "value string"))
+
+
+def _files(target):
     from pathlib import Path
 
-    from irclogbot_spark.ingest import parse_pipeline
+    return {
+        str(f.relative_to(target)): f.read_bytes()
+        for f in Path(target).rglob("*")
+        if f.is_file()
+    }
+
+
+def test_legacy_flat_layout_fails_loudly_and_migrates(spark, tmp_path):
+    """A flat table (a plain ``df.write``, the pre-bucketing layout)
+    must not be silently shadowed (ADVICE r2 #2: the old probe saw 'no
+    table' and dropped id_bucket= dirs beside the flat files — a mixed,
+    conflicting table). The merge refuses before it writes anything and
+    leaves every file byte-identical; the table migrates by feeding
+    its rows through the sink into a fresh target, after which merges
+    resume there."""
+    from irclogbot_spark.streaming.pipeline import keyed_upsert_batch, table_layout
+
+    flat = str(tmp_path / "flat")
+    _log(spark, [f":u{i}!~u{i}@h PRIVMSG #c :m {i}" for i in range(30)]).write.parquet(flat)
+    log2 = _log(spark, [":new!~n@h PRIVMSG #c :brand new"])
+
+    before = _files(flat)
+    with pytest.raises(RuntimeError, match="id_bucket"):
+        keyed_upsert_batch(log2, 0, flat)
+    assert _files(flat) == before
+
+    migrated = str(tmp_path / "migrated")
+    keyed_upsert_batch(spark.read.parquet(flat), 0, migrated)
+    assert table_layout(spark, migrated) == "bucketed"
+    assert spark.read.parquet(migrated).count() == 30
+
+    keyed_upsert_batch(log2, 1, migrated)
+    out = spark.read.parquet(migrated)
+    assert out.count() == 31
+    assert out.count() == out.select("id").distinct().count()
+
+
+def test_mixed_layout_crash_artifact_refused_and_recoverable(spark, tmp_path):
+    """VERDICT r3 #8: id_bucket= dirs BESIDE flat parquet files — a
+    bucketed table with a stray flat copy of its rows — is refused
+    loudly (merging would double-count the stray rows) and every file
+    is left byte-identical. Removing the stray flat files recovers a
+    working bucketed table that merges resume on."""
+    from pathlib import Path
+
+    from pyspark.sql import functions as F
+
     from irclogbot_spark.streaming.pipeline import (
+        N_ID_BUCKETS,
         keyed_upsert_batch,
-        migrate_flat_to_bucketed,
         table_layout,
     )
 
-    target = str(tmp_path / "keyed")
-    log1 = parse_pipeline(
-        spark.createDataFrame(
-            [(f":u{i}!~u{i}@h PRIVMSG #c :m {i}",) for i in range(30)], "value string"
-        )
-    )
-    log1.write.parquet(target)  # the legacy flat table
-    assert table_layout(spark, target) == "flat"
+    mixed = str(tmp_path / "mixed")
+    log1 = _log(spark, [f":u{i}!~u{i}@h PRIVMSG #c :m {i}" for i in range(30)])
+    log1.write.parquet(mixed)
+    log1.withColumn(
+        "id_bucket", F.pmod(F.xxhash64("id"), F.lit(N_ID_BUCKETS)).cast("int")
+    ).write.mode("append").partitionBy("id_bucket").parquet(mixed)
+    assert list(Path(mixed).glob("id_bucket=*"))
+    log2 = _log(spark, [":new!~n@h PRIVMSG #c :brand new"])
 
-    log2 = parse_pipeline(
-        spark.createDataFrame([(":new!~n@h PRIVMSG #c :brand new",)], "value string")
-    )
-    with _pytest.raises(RuntimeError, match="flat"):
-        keyed_upsert_batch(log2, 0, target)
+    before = _files(mixed)
+    with pytest.raises(RuntimeError, match="id_bucket"):
+        table_layout(spark, mixed)
+    with pytest.raises(RuntimeError, match="id_bucket"):
+        keyed_upsert_batch(log2, 0, mixed)
+    assert _files(mixed) == before
 
-    migrate_flat_to_bucketed(spark, target)
-    assert table_layout(spark, target) == "bucketed"
-    assert not list(Path(target).glob("*.parquet"))  # flat files gone
-    migrated = spark.read.parquet(target)
-    assert migrated.count() == 30
+    for stray in Path(mixed).glob("*.parquet"):
+        stray.unlink()
+    assert table_layout(spark, mixed) == "bucketed"
+    assert spark.read.parquet(mixed).count() == 30
 
-    keyed_upsert_batch(log2, 0, target)
-    out = spark.read.parquet(target)
+    keyed_upsert_batch(log2, 0, mixed)
+    out = spark.read.parquet(mixed)
     assert out.count() == 31
     assert out.count() == out.select("id").distinct().count()
 
@@ -306,55 +352,18 @@ def test_restart_from_checkpoint_is_duplicate_safe(spark, tmp_path):
     assert "new message" in remarks
 
 
-def test_mixed_layout_crash_artifact_refused_and_recoverable(spark, tmp_path):
-    """VERDICT r3 #8: the exact state a crash between the migration's
-    write and delete leaves behind — id_bucket= dirs BESIDE the flat
-    files — is classified 'mixed'; both the merge and a migration
-    re-run refuse loudly (re-running would double the bucketed rows),
-    and the documented recovery (delete the id_bucket= dirs, re-run
-    the migration) restores a working bucketed table."""
-    import shutil
+def test_streams_start_only_through_the_runner():
+    """Every stream in the package starts through artifacts.drain:
+    the checkpoint, the foreachBatch sink and the trigger are chosen
+    in one place, so no module wires its own writeStream."""
     from pathlib import Path
 
-    import pytest as _pytest
-    from pyspark.sql import functions as F
+    import irclogbot_spark
 
-    from irclogbot_spark.ingest import parse_pipeline
-    from irclogbot_spark.streaming.pipeline import (
-        keyed_upsert_batch,
-        migrate_flat_to_bucketed,
-        table_layout,
+    root = Path(irclogbot_spark.__file__).parent
+    wiring = sorted(
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if "writeStream" in p.read_text(encoding="utf-8")
     )
-
-    target = str(tmp_path / "keyed")
-    log1 = parse_pipeline(
-        spark.createDataFrame(
-            [(f":u{i}!~u{i}@h PRIVMSG #c :m {i}",) for i in range(30)], "value string"
-        )
-    )
-    log1.write.parquet(target)  # the legacy flat table
-    # replay migrate_flat_to_bucketed's WRITE step only (crash before
-    # the flat-file delete): bucketed dirs land beside the flat files
-    spark.read.parquet(target).withColumn(
-        "id_bucket", F.pmod(F.xxhash64("id"), F.lit(8)).cast("int")
-    ).write.mode("append").partitionBy("id_bucket").parquet(target)
-    assert table_layout(spark, target) == "mixed"
-
-    log2 = parse_pipeline(
-        spark.createDataFrame([(":new!~n@h PRIVMSG #c :brand new",)], "value string")
-    )
-    with _pytest.raises(RuntimeError, match="mixed"):
-        keyed_upsert_batch(log2, 0, target)
-    with _pytest.raises(RuntimeError, match="mixed"):
-        migrate_flat_to_bucketed(spark, target, n_buckets=8)
-
-    # documented recovery: drop the id_bucket= dirs, re-run migration
-    for d in Path(target).glob("id_bucket=*"):
-        shutil.rmtree(d)
-    assert table_layout(spark, target) == "flat"
-    migrate_flat_to_bucketed(spark, target, n_buckets=8)
-    assert table_layout(spark, target) == "bucketed"
-    keyed_upsert_batch(log2, 0, target, n_buckets=8)
-    out = spark.read.parquet(target)
-    assert out.count() == 31
-    assert out.count() == out.select("id").distinct().count()
+    assert wiring == ["artifacts.py"]

@@ -5,10 +5,12 @@ custom stateful operator (applyInPandasWithState), heartbeat listener
 from __future__ import annotations
 
 import time
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
 
+from irclogbot_spark.artifacts import drain
 from irclogbot_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -301,8 +303,8 @@ BASE_DOC = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
 
 def _corpus_writer(spark, tmp_path):
     """(run_batch, corpus_dir): feed one micro-batch of docs through
-    continuous_ingest against a shared checkpoint."""
-    from irclogbot_spark.streaming.corpus import continuous_ingest
+    corpus.ingest_batch against a shared checkpoint."""
+    from irclogbot_spark.streaming.corpus import ingest_batch
 
     src = tmp_path / "src"
     src.mkdir()
@@ -315,10 +317,10 @@ def _corpus_writer(spark, tmp_path):
         fname.write_text(
             "\n".join(json.dumps({"doc_id": i, "text": t}) for i, t in rows)
         )
-        q = continuous_ingest(
+        q = drain(
             spark.readStream.schema("doc_id long, text string").json(str(src)),
-            corpus_dir,
             str(tmp_path / "ckpt"),
+            partial(ingest_batch, corpus_dir=corpus_dir),
         )
         q.awaitTermination(120)
 
@@ -580,13 +582,15 @@ def test_continuous_ann_index_matches_one_shot(spark, tmp_path):
                 for r in batch_rows
             )
         )
-        q = annindex.continuous_index(
-            spark,
+        q = drain(
             spark.readStream.schema(annindex.EMB_SCHEMA).json(str(src)),
-            index_dir,
             str(tmp_path / "vckpt"),
-            cents,
-            books,
+            partial(
+                annindex.ingest_batch,
+                index_dir=index_dir,
+                centroids=cents,
+                books=books,
+            ),
         )
         q.awaitTermination(120)
 
@@ -892,11 +896,11 @@ def test_streaming_last_touch_attribution_matches_batch(spark, tmp_path):
 
 def _crawl_writer(spark, tmp_path):
     """(run_batch, corpus_dir): feed one micro-batch of (doc_id, url,
-    text) crawl records through crawl_continuous_ingest against a
+    text) crawl records through crawl_ingest_batch against a
     shared checkpoint."""
     from irclogbot_spark.streaming.corpus import (
         CRAWL_DOC_SCHEMA,
-        crawl_continuous_ingest,
+        crawl_ingest_batch,
     )
 
     src = tmp_path / "crawl_src"
@@ -913,10 +917,10 @@ def _crawl_writer(spark, tmp_path):
                 for i, u, t in rows
             )
         )
-        q = crawl_continuous_ingest(
+        q = drain(
             spark.readStream.schema(CRAWL_DOC_SCHEMA).json(str(src)),
-            corpus_dir,
             str(tmp_path / "crawl_ckpt"),
+            partial(crawl_ingest_batch, corpus_dir=corpus_dir),
         )
         q.awaitTermination(120)
 
@@ -1120,11 +1124,10 @@ def test_continuous_trgm_index_matches_one_shot(spark, tmp_path):
         fname.write_text(
             "\n".join(_json.dumps({"doc_id": i, "text": t}) for i, t in rows)
         )
-        q = TI.continuous_trgm(
+        q = drain(
             spark.readStream.schema(TI.DOC_SCHEMA).json(str(src)),
-            index_dir,
             str(tmp_path / "trgm_ckpt"),
-            n_buckets=8,
+            partial(TI.trgm_ingest_batch, index_dir=index_dir, n_buckets=8),
         )
         q.awaitTermination(120)
 
@@ -1210,11 +1213,10 @@ def test_continuous_text_index_matches_one_shot(spark, tmp_path):
         fname.write_text(
             "\n".join(_json.dumps({"doc_id": i, "text": t}) for i, t in rows)
         )
-        q = TX.continuous_text_index(
+        q = drain(
             spark.readStream.schema("doc_id long, text string").json(str(src)),
-            index_dir,
             str(tmp_path / "tx_ckpt"),
-            n_buckets=8,
+            partial(TX.text_ingest_batch, index_dir=index_dir, n_buckets=8),
         )
         q.awaitTermination(120)
 
@@ -1329,12 +1331,15 @@ def test_crawl_admit_to_text_index_one_batch(spark, tmp_path):
                 for i, u, t in rows
             )
         )
-        q = C.crawl_continuous_ingest(
+        q = drain(
             spark.readStream.schema(C.CRAWL_DOC_SCHEMA).json(str(src)),
-            corpus_dir,
             str(tmp_path / "cckpt"),
-            index_dir=index_dir,
-            index_buckets=8,
+            partial(
+                C.crawl_ingest_batch,
+                corpus_dir=corpus_dir,
+                index_dir=index_dir,
+                index_buckets=8,
+            ),
         )
         q.awaitTermination(120)
 
@@ -1416,11 +1421,10 @@ def test_continuous_substring_dedup_matches_one_shot(spark, tmp_path):
         fname.write_text(
             "\n".join(_json.dumps({"doc_id": i, "text": t}) for i, t in rows)
         )
-        q = SS.continuous_substring_dedup(
+        q = drain(
             spark.readStream.schema("doc_id long, text string").json(str(src)),
-            work,
             str(tmp_path / "ss_ckpt"),
-            length=8,
+            partial(SS.substring_ingest_batch, work_dir=work, length=8),
         )
         q.awaitTermination(120)
 
@@ -1492,11 +1496,10 @@ def test_streamed_vocab_matches_one_shot_dictionary(spark, tmp_path):
         fname.write_text(
             "\n".join(_json.dumps({"doc_id": i, "text": t}) for i, t in rows)
         )
-        q = TX.continuous_text_index(
+        q = drain(
             spark.readStream.schema("doc_id long, text string").json(str(src)),
-            index_dir,
             str(tmp_path / "v_ckpt"),
-            n_buckets=8,
+            partial(TX.text_ingest_batch, index_dir=index_dir, n_buckets=8),
         )
         q.awaitTermination(120)
 
@@ -1604,14 +1607,17 @@ def test_crawl_full_loop_excise_then_index(spark, tmp_path):
                 for i, u, t in rows
             )
         )
-        q = C.crawl_continuous_ingest(
+        q = drain(
             spark.readStream.schema(C.CRAWL_DOC_SCHEMA).json(str(src)),
-            corpus_dir,
             str(tmp_path / "fl_ckpt"),
-            index_dir=index_dir,
-            index_buckets=8,
-            substring_dir=sub_dir,
-            substring_length=8,
+            partial(
+                C.crawl_ingest_batch,
+                corpus_dir=corpus_dir,
+                index_dir=index_dir,
+                index_buckets=8,
+                substring_dir=sub_dir,
+                substring_length=8,
+            ),
         )
         q.awaitTermination(120)
 
@@ -1677,11 +1683,10 @@ def test_compound_queries_serve_from_streamed_index(spark, tmp_path):
         fname.write_text(
             "\n".join(_json.dumps({"doc_id": i, "text": t}) for i, t in rows)
         )
-        q = TX.continuous_text_index(
+        q = drain(
             spark.readStream.schema("doc_id long, text string").json(str(src)),
-            index_dir,
             str(tmp_path / "cq_ckpt"),
-            n_buckets=8,
+            partial(TX.text_ingest_batch, index_dir=index_dir, n_buckets=8),
         )
         q.awaitTermination(120)
 
@@ -1751,11 +1756,10 @@ def test_compound_query_against_streamed_index_across_batches(spark, tmp_path):
         fname.write_text(
             "\n".join(_json.dumps({"doc_id": i, "text": t}) for i, t in rows)
         )
-        q = TX.continuous_text_index(
+        q = drain(
             spark.readStream.schema("doc_id long, text string").json(str(src)),
-            index_dir,
             str(tmp_path / "cq_ckpt"),
-            n_buckets=8,
+            partial(TX.text_ingest_batch, index_dir=index_dir, n_buckets=8),
         )
         q.awaitTermination(120)
 
@@ -1848,14 +1852,14 @@ def test_multi_match_against_streamed_per_field_indexes(spark, tmp_path):
             )
         )
         for field, d in dirs.items():
-            q = TX.continuous_text_index(
+            q = drain(
                 spark.readStream.schema(
                     "doc_id long, title string, body string"
                 ).json(str(src)),
-                d,
                 str(tmp_path / f"mm_ckpt_{field}"),
-                n_buckets=8,
-                text_col=field,
+                partial(
+                    TX.text_ingest_batch, index_dir=d, n_buckets=8, text_col=field
+                ),
             )
             q.awaitTermination(120)
 
@@ -1930,11 +1934,10 @@ def test_match_phrase_prefix_against_streamed_index_across_batches(
         fname.write_text(
             "\n".join(_json.dumps({"doc_id": i, "text": t}) for i, t in rows)
         )
-        q = TX.continuous_text_index(
+        q = drain(
             spark.readStream.schema("doc_id long, text string").json(str(src)),
-            index_dir,
             str(tmp_path / "mpp_ckpt"),
-            n_buckets=8,
+            partial(TX.text_ingest_batch, index_dir=index_dir, n_buckets=8),
         )
         q.awaitTermination(120)
 
